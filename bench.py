@@ -45,7 +45,8 @@ HEADLINE = [
     "tpch_large_orders",
     # round-3 additions (dedup_keep_best/dedup_clusters excluded: their
     # iterative connected-components materializes during plan BUILD via
-    # localCheckpoint, so a write-bracketed timer would underreport them)
+    # its per-iteration convergence counts, so a write-bracketed timer
+    # would underreport them)
     "ts_calendar_features",
     "ts_backtest_folds",
     "text_entropy_stats",
@@ -374,10 +375,11 @@ STREAMING_EXCLUDED = [
 ITERATIVE = [
     "dedup_clusters",
     "dedup_keep_best",
-    # two-phase: eager d^2 Gram materialization at build, then fixed-point
-    # iterations — wall-clock is the honest number (see querydefs/textops.py)
+    # two-phase: d^2 Gram cut whose shuffle stages run at build, then
+    # fixed-point iterations — wall-clock is the honest number (see
+    # querydefs/textops.py)
     "emb_top_pc_power_iteration",
-    # same shape: one eager corpus pass + k argmax rounds
+    # same shape: one cut corpus pass + k argmax rounds
     "emb_kcenter_seeds",
     # checkpoint-per-hop traversal (edge build dominates the wall-clock)
     "graph_bfs_reachability",
@@ -418,9 +420,9 @@ ITERATIVE = [
     # round-8b: edge-binned layout boundary jobs at build time (same
     # policy as layout_zonemap_pruning)
     "layout_bloom_pruning",
-    # round-9: stage manifests + per-source counts localCheckpoint at
-    # build time (the write-manifest-between-stages discipline), so
-    # wall-clock is the honest number
+    # round-9: stage manifests + per-source counts are reuse() cuts whose
+    # shuffle stages run at build time (the write-manifest-between-stages
+    # discipline), so wall-clock is the honest number
     "corpus_prep_e2e",
     # connected-components fixpoint checkpoints at build (same policy
     # as dedup_clusters)
@@ -617,10 +619,9 @@ BUDGETS: dict[str, float] = {
     "rel_order_value_gini": 1.16,
     "dedup_lsh_bucket_histogram": 1.55,
     "dedup_lsh_recall_eval": 1.51,
-    # graph lanes time the fully-lazy plan (scoped cache off in bench):
-    # pagerank's 3 unrolled iterations and the triangle wedge join
-    # recompute their event pass per reference -- production runs persist
-    # the node^2-bounded edge lists instead (see querydefs/graph.py)
+    # graph lanes: budgets date from when bench timed the plan without
+    # the node^2-bounded edge-list reuse; bench now times the same reused
+    # plan every caller runs (see querydefs/graph.py)
     "graph_pagerank": 4.40,
     "graph_triangle_count": 7.90,
     # round-10: DOULION sampled-triangle estimator, 1.5x its quiet
@@ -735,8 +736,8 @@ BUDGETS: dict[str, float] = {
     "dedup_winnow_shared_spans": 1.50,
     "sess_window_funnel": 0.84,
     "val_mutual_information": 0.54,
-    # r7 re-baseline: under the lazy-bracket convention the persisted
-    # edge frame is plan-cache-reused across iterations, so the recorded
+    # r7 re-baseline: the reused edge frame is shared across
+    # iterations, so the recorded
     # best is 0.14 s -- the old 3.20 came from a cold first-measurement
     "graph_sssp_weighted": 0.22,
     "ts_psi_weekly_trend": 0.81,
@@ -954,8 +955,6 @@ def compact_stdout_line(payload: dict, max_len: int = 1900) -> str:
 
 
 def main() -> None:
-    # lazy plans for benchmarking: see the timing note below
-    os.environ["SPARK_GRAFT_SCOPED_CACHE"] = "0"
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     spark = get_spark(app_name="efp-bench")
@@ -976,10 +975,11 @@ def main() -> None:
     # and machine-load noise dominates single runs at this data size --
     # BENCH_r03's uniform ~1.2x drift vs r01 was exactly that, see
     # SCALING.md "Bench methodology"). Timing brackets the noop
-    # materialization of a LAZY plan: SPARK_GRAFT_SCOPED_CACHE=0 (set in
-    # main) turns off the session-hygiene eager checkpoints so no query
-    # computes at build time -- otherwise the checkpointing operators would
-    # run OUTSIDE the timer and report near-zero.
+    # materialization of the plan every caller gets; the build runs outside
+    # the timer. operators.partitioning.reuse cuts lineage lazily, but under
+    # AQE building a cut runs the shuffle stages below it, so that share of
+    # a reuse lane's work falls outside this bracket -- the ITERATIVE lanes
+    # below time build + materialization instead.
     n_iter = int(os.environ.get("SPARK_GRAFT_BENCH_ITER", "3"))
     timings: dict[str, float] = {}
     for _ in range(n_iter):

@@ -14,33 +14,12 @@ parity holds; swap in xxhash64 for raw speed where parity isn't needed.
 
 from __future__ import annotations
 
-import os
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from electricity_forecast_pipeline_airflow_k8s_spark.operators.partitioning import reuse
 from electricity_forecast_pipeline_airflow_k8s_spark.operators.text import tokens
-
-
-def _cut_lineage(df: DataFrame, eager: bool = True) -> DataFrame:
-    """Lineage cap for the iterative operators, cluster-durable by default.
-
-    ``localCheckpoint`` stores blocks on executors: fast, but on a real
-    cluster a single executor loss mid-iteration kills the job (the blocks
-    are gone and the truncated lineage cannot recompute them). So whenever
-    a reliable checkpoint directory is configured -- via
-    ``sparkContext.setCheckpointDir`` or the SPARK_GRAFT_CHECKPOINT_DIR env
-    var (pointed at HDFS/the object store on a cluster) -- use reliable
-    ``checkpoint()``; ``localCheckpoint`` remains the local-mode fast path.
-    """
-    sc = df.sparkSession.sparkContext
-    if sc.getCheckpointDir() is None:
-        ckdir = os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")
-        if ckdir:
-            sc.setCheckpointDir(ckdir)
-    if sc.getCheckpointDir() is not None:
-        return df.checkpoint(eager=eager)
-    return df.localCheckpoint(eager=eager)
 
 
 # Round-12 measurement note (guide §1): a size-conditional shuffle_hash
@@ -145,15 +124,10 @@ def lsh_candidate_pairs(
     id_col: str = "doc_id",
     k: int = 12,
     bands: int = 4,
-    cache_registry: list | None = None,
 ) -> DataFrame:
     """Band the signature (k/bands rows per band), hash each band, and
     equi-join docs sharing any band hash. Returns distinct (id_a < id_b)
-    candidate pairs.
-
-    ``cache_registry``: when provided, the internally persisted banded
-    table's handle is appended so the caller can unpersist it after the
-    terminal action (scoped-cache hygiene for long-lived sessions)."""
+    candidate pairs."""
     rows = k // bands
     band_cols = []
     for b in range(bands):
@@ -163,15 +137,12 @@ def lsh_candidate_pairs(
                 f"b{b}"
             )
         )
-    # persist: the self-join below consumes this subtree twice, and without
-    # a materialization Spark recomputes the full signature pipeline per side
-    exploded = (
+    # the self-join below consumes this subtree twice, and without a
+    # materialization Spark recomputes the full signature pipeline per side
+    exploded = reuse(
         sigs.select(F.col(id_col), F.explode(F.array(*band_cols)).alias("bh"))
         .select(id_col, F.col("bh.band").alias("band"), F.col("bh.h").alias("h"))
-        .persist()
     )
-    if cache_registry is not None:
-        cache_registry.append(exploded)
     a = exploded.alias("a")
     b = exploded.alias("b")
     pairs = (
@@ -246,44 +217,28 @@ def minhash_lsh_dedup_pairs(
     bands: int = 4,
     shingle_n: int = 3,
     threshold: float = 0.5,
-    scoped_cache: bool | None = None,
 ) -> DataFrame:
     """Full near-dup pipeline: signature -> banded candidates -> exact
     Jaccard verify. No stage is quadratic in corpus size.
 
-    The shingle array per doc is computed ONCE and persisted: it feeds both
+    The shingle array per doc is computed ONCE and reused: it feeds both
     the signature explode and the verify join; the banded table is likewise
-    persisted because the candidate self-join consumes it twice. Without
+    reused because the candidate self-join consumes it twice. Without
     these, Spark recomputes the md5 pipeline once per join side (measured
-    ~2x on the bench).
-
-    Cache hygiene (``scoped_cache=True``, the default): the verified-pairs
-    result -- tiny relative to the corpus (near-dup pairs only) -- is
-    eagerly materialized via ``localCheckpoint`` and every intermediate
-    persist is released before returning, so repeated invocations in a
-    long-lived session leave no cached blocks behind. Pass
-    ``scoped_cache=False`` for a fully lazy plan (caller owns eviction);
-    the default resolves from ``SPARK_GRAFT_SCOPED_CACHE`` (on unless
-    "0" -- bench.py turns it off so timing brackets the lazy plan)."""
-    if scoped_cache is None:
-        import os
-
-        scoped_cache = os.environ.get("SPARK_GRAFT_SCOPED_CACHE", "1") != "0"
+    ~2x on the bench)."""
     par = df.sparkSession.sparkContext.defaultParallelism
-    handles: list = []
-    sh = (
-        df.repartition(par, id_col)
-        .select(F.col(id_col), shingles(text_col, shingle_n).alias("sh"))
-        .persist()
+    sh = reuse(
+        df.repartition(par, id_col).select(
+            F.col(id_col), shingles(text_col, shingle_n).alias("sh")
+        )
     )
-    handles.append(sh)
     exploded = sh.select(F.col(id_col), F.explode("sh").alias("s"))
     aggs = [
         F.min(F.md5(F.concat(F.lit(f"{i}|"), F.col("s")))).alias(f"sig_{i}")
         for i in range(k)
     ]
     sigs = exploded.groupBy(id_col).agg(*aggs)
-    cands = lsh_candidate_pairs(sigs, id_col, k, bands, cache_registry=handles)
+    cands = lsh_candidate_pairs(sigs, id_col, k, bands)
     # shuffle_hash hint on the pairs side: the shingle table is
     # corpus-sized and must never be a broadcast build side (the 50x run
     # OOM'd the driver broadcasting it -- see jaccard_verify's docstring);
@@ -310,16 +265,11 @@ def minhash_lsh_dedup_pairs(
     # Threshold on the RAW ratio (the oracle filters raw too); round only
     # for output. Filtering the rounded value would admit raw jaccards in
     # [threshold - 5e-5, threshold) that the oracle rejects.
-    result = j.filter(F.col("jaccard_raw") >= threshold).select(
+    return j.filter(F.col("jaccard_raw") >= threshold).select(
         "doc_a",
         "doc_b",
         (F.floor(F.col("jaccard_raw") * 10000 + 0.5) / 10000).alias("jaccard"),
     )
-    if scoped_cache:
-        result = result.localCheckpoint(eager=True)
-        for h in handles:
-            h.unpersist()
-    return result
 
 
 def connected_components(
@@ -338,7 +288,7 @@ def connected_components(
     iteration is one shuffle join, no driver-side graph.
     """
     # materialize the (possibly expensive) pair source once, and cut the
-    # growing iteration lineage with localCheckpoint -- otherwise every
+    # growing iteration lineage with ``reuse`` -- otherwise every
     # per-iteration count() action replays ALL prior joins plus the full
     # upstream pipeline (e.g. the whole minhash/LSH subtree). Round-12:
     # both init cuts are LAZY -- still lineage caps with block reuse
@@ -346,17 +296,15 @@ def connected_components(
     # convergence job instead of two extra sequential build-time jobs
     # per fixpoint (guide §2.6 -- the corpus pipelines run two fixpoints
     # each, so this removes four serial job latencies per lane).
-    edges = _cut_lineage(
+    edges = reuse(
         pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
         .union(pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst")))
-        .distinct(),
-        eager=False,
+        .distinct()
     )
-    labels = _cut_lineage(
+    labels = reuse(
         edges.select(F.col("src").alias("node"))
         .distinct()
-        .withColumn("component", F.col("node")),
-        eager=False,
+        .withColumn("component", F.col("node"))
     )
     for _ in range(max_iter):
         # neighbor labels: for each node, the min component among neighbors
@@ -372,15 +320,14 @@ def connected_components(
         # below still cost ONE job per iteration, but that job no longer
         # contains a label-table self-join -- it reads the aggregate's own
         # checkpointed blocks.
-        merged = _cut_lineage(
+        merged = reuse(
             labels.withColumn("_old", F.lit(True))
             .unionByName(neighbor.withColumn("_old", F.lit(False)))
             .groupBy("node")
             .agg(
                 F.min("component").alias("component"),
                 F.min(F.when(F.col("_old"), F.col("component"))).alias("_prev"),
-            ),
-            eager=False,
+            )
         )
         changed = (
             merged.filter(F.col("component") != F.col("_prev")).limit(1).count()

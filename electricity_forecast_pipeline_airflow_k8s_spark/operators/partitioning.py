@@ -1,4 +1,5 @@
-"""Input-parallelism repair for compute-bound operators.
+"""Input-parallelism repair (``fanout``) and the one lineage-cut primitive
+(``reuse``) for compute-bound operators.
 
 A parquet file is split at ROW-GROUP granularity: a table written as one
 row group arrives as ONE scan partition no matter how small
@@ -19,25 +20,35 @@ project before the exchange).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 
 
-def reuse(df: DataFrame, scoped: bool | None = None) -> DataFrame:
-    """Mark a multiply-referenced frame for reuse (guide §2.4/§5).
+def reuse(df: DataFrame) -> DataFrame:
+    """Mark a multiply-referenced frame for reuse and cut its lineage
+    (guide §2.4/§5) -- the one primitive every builder and operator uses.
 
-    Scoped sessions (the default) ``persist()`` -- the builder releases
-    the cache before returning where it can. Bench's lazy-bracket mode
-    (``SPARK_GRAFT_SCOPED_CACHE=0``) used to leave such frames bare, so
-    every downstream leg re-derived the whole subtree. A LAZY
-    ``localCheckpoint`` keeps the bracket honest -- nothing runs at
-    build time; the first timed action materializes the blocks once and
-    every other leg reads them -- and the lineage truncation also
-    collapses the physical plan (round-11 finding F4)."""
-    if scoped is None:
-        scoped = os.environ.get("SPARK_GRAFT_SCOPED_CACHE", "1") != "0"
-    return df.persist() if scoped else df.localCheckpoint(eager=False)
+    The cut is a lazy checkpoint: a reliable ``checkpoint`` when the
+    SparkContext has a checkpoint dir (``session.get_spark`` sets one from
+    ``SPARK_GRAFT_CHECKPOINT_DIR``; the blocks survive executor loss),
+    else a ``localCheckpoint``. Building it plans the frame and builds
+    the checkpoint RDD, which under AQE (the session default) runs every
+    shuffle stage below the cut at build time; the result stage runs at
+    the first action, which stores the blocks that every later reference
+    reads. Truncating the lineage also collapses the physical plan of
+    each consumer (round-11 finding F4).
+
+    A reliable checkpoint writes its files in a second job over the same
+    RDD; that RDD is persisted so the job reads the first action's blocks
+    instead of computing the frame again. Nothing unpersists it: the
+    context cleaner drops the blocks once the returned frame is
+    garbage-collected."""
+    sc = df.sparkSession.sparkContext
+    if sc.getCheckpointDir() is None:
+        return df.localCheckpoint(eager=False)
+    out = df.checkpoint(eager=False)
+    jvm_level = sc._jvm.org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK()
+    out._jdf.queryExecution().logical().rdd().persist(jvm_level)
+    return out
 
 
 def fanout(df: DataFrame, num_partitions: int | None = None) -> DataFrame:

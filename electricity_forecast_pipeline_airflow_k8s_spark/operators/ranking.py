@@ -66,6 +66,8 @@ def _range_sorted_with_offsets(
         .withColumn(_PID, F.spark_partition_id())
     )
     if persist:
+        # a persist, not reuse(): the caller opts in, and an evicted block
+        # recomputes to the same range partitioning (module docstring)
         sorted_df = sorted_df.persist(StorageLevel.MEMORY_AND_DISK)
 
     counts = {
@@ -413,7 +415,7 @@ def global_prefix_sum(
         df.repartitionByRange(max(n_parts, 1), *cols)
         .sortWithinPartitions(*cols)
         .withColumn(_PID, F.spark_partition_id())
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ).persist(StorageLevel.MEMORY_AND_DISK)  # released below, before returning
 
     sums = {
         r[_PID]: r["s"]

@@ -132,23 +132,14 @@ def _prefix_join(sets: DataFrame, num: int, den: int) -> DataFrame:
     if not (0 < num <= den):
         raise ValueError(f"threshold must be in (0, 1]: got {num}/{den}")
     sets = sets.filter(F.col("s") > 0)
-    # three consumers (prefix index + both verify sides) would each
-    # re-tokenize and re-aggregate the corpus; persist the ordered sets so
-    # the corpus-sized pass runs ONCE (the standard multi-pass-algorithm
-    # cache — Spark's own MinHashLSH does the same). MEMORY_AND_DISK:
-    # token arrays can exceed executor memory at corpus scale. Bench mode
-    # (SPARK_GRAFT_SCOPED_CACHE=0) keeps the plan lazy for honest timing.
-    # (Round-12 measured a lazy localCheckpoint here -- the F4 primitive --
-    # and it LOST: serializing the fat ordered-token arrays to block
-    # storage and reading them back three times cost MORE than the three
-    # codegen recomputes, 6.53 -> 8.63 s noop at sf0.1. Reverted; same
-    # verdict as r11's PQ serving passes.)
-    import os
-
-    if os.environ.get("SPARK_GRAFT_SCOPED_CACHE", "1") != "0":
-        from pyspark import StorageLevel
-
-        sets = sets.persist(StorageLevel.MEMORY_AND_DISK)
+    # No cut on the ordered sets, although three consumers (prefix index +
+    # both verify sides) re-derive them: a reuse() cut was measured a loss
+    # at sf0.1 on 4 cores, best of 5 build + execute --
+    # dedup_ngram_jaccard_pairs 7.0 s uncut vs 13.4 s cut,
+    # text_setsim_prefix_join 18.5 vs 19.4 s. Storing the fat ordered-token
+    # arrays as checkpoint blocks and reading them back three times costs
+    # more than three codegen recomputes (round 12 saw the same, 6.53 ->
+    # 8.63 s noop).
 
     # prefix length p = s - ceil(t*s) + 1, exact integer ceil-division
     p = F.col("s") - F.floor((F.col("s") * num + den - 1) / den) + 1

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from electricity_forecast_pipeline_airflow_k8s_spark.operators.partitioning import reuse
 from electricity_forecast_pipeline_airflow_k8s_spark.functions.stats import (
     portable_round,
 )
@@ -556,7 +557,7 @@ def fuzzy_prefix_pairs(
         )
         .filter(F.col("edit_distance") <= max_distance)
     )
-    # round-11 (guide §1.2): a LAZY lineage barrier on the survivor set.
+    # round-11 (guide §1.2): a lineage cut on the survivor set.
     # Catalyst pushes the edit-distance filter into the join condition, so
     # the whole O(prefix_len^2)-per-pair DP sits below the caller's final
     # orderBy -- and the range partitioner's boundary-sampling job then
@@ -564,9 +565,8 @@ def fuzzy_prefix_pairs(
     # the lane, 3.0 s -> 6.1 s at sf0.1). Survivors are the DEDUP-PAIR
     # output, orders of magnitude smaller than the candidate space (4.5 k
     # rows vs 318 k candidates at sf0.1), so materializing them once is
-    # cheap at any scale; eager=False keeps the compute inside the first
-    # action (nothing runs at plan-build time -- honest bench timing).
-    return out.localCheckpoint(eager=False)
+    # cheap at any scale.
+    return reuse(out)
 
 
 def bigram_lm_score(

@@ -14,6 +14,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from electricity_forecast_pipeline_airflow_k8s_spark.operators.partitioning import reuse
+
 
 def chronological_split(
     df: DataFrame,
@@ -382,7 +384,6 @@ def gap_fill_locf(
     group_col: str = "respondent",
     ts_col: str = "period",
     value_col: str = "value",
-    scoped_cache: bool | None = None,
 ) -> DataFrame:
     """Hourly densify + last-observation-carried-forward, scale-safe.
 
@@ -406,19 +407,15 @@ def gap_fill_locf(
         exact_mean,
     )
 
-    if scoped_cache is None:
-        import os
-
-        scoped_cache = os.environ.get("SPARK_GRAFT_SCOPED_CACHE", "1") != "0"
     obs = (
         df.filter(F.col(ts_col).isNotNull())
         .groupBy(F.col(group_col), F.date_trunc("hour", F.col(ts_col)).alias("hour"))
         .agg((F.floor(exact_mean(value_col) * 10000 + 0.5) / 10000).alias("v_obs"))
     )
     # groups x hours rows -- tiny vs the fact; referenced by the span
-    # calc, the grid join, and the per-day carry, so persist it or every
+    # calc, the grid join, and the per-day carry, so reuse it or every
     # consumer re-scans the fact (same convention as profile.py's bounds)
-    obs = obs.persist()
+    obs = reuse(obs)
     spans = obs.groupBy(group_col).agg(
         F.min("hour").alias("_t0"), F.max("hour").alias("_t1")
     )
@@ -464,16 +461,12 @@ def gap_fill_locf(
         .withColumn("carry_in", F.last("day_last", ignorenulls=True).over(w_carry))
         .select(group_col, "day", "carry_in")
     )
-    result = g.join(F.broadcast(carry), [group_col, "day"]).select(
+    return g.join(F.broadcast(carry), [group_col, "day"]).select(
         F.col(group_col),
         F.col("hour"),
         F.coalesce("v_intra", "carry_in").alias("value_filled"),
         F.col("v_obs").isNull().alias("is_gap"),
     )
-    if scoped_cache:
-        result = result.localCheckpoint(eager=True)
-        obs.unpersist()
-    return result
 
 
 def cusum_changepoint(

@@ -36,6 +36,10 @@ from pyspark.sql import functions as F
 
 from electricity_forecast_pipeline_airflow_k8s_spark.operators import dedup as DD
 from electricity_forecast_pipeline_airflow_k8s_spark.operators import text as TX
+from electricity_forecast_pipeline_airflow_k8s_spark.operators.partitioning import (
+    fanout,
+    reuse,
+)
 from electricity_forecast_pipeline_airflow_k8s_spark.queries import register, table
 from electricity_forecast_pipeline_airflow_k8s_spark.querydefs.textops import (
     MINHASH_BANDS,
@@ -202,16 +206,12 @@ def corpus_prep_stages(
 ) -> dict[str, DataFrame]:
     """The five survivor frames, each a (doc_id, source, text) DataFrame.
 
-    Stage manifests (doc_id, source) are eagerly materialized via
-    localCheckpoint between stages: each downstream stage re-joins its
+    Stage manifests (doc_id, source) are cut with ``reuse`` between
+    stages: each downstream stage re-joins its
     manifest onto the columnar base scan instead of replaying every prior
     stage's text work per consumer -- the multi-stage corpus pipeline's
     write-manifest-between-stages discipline, with only id-sized state
     carried forward."""
-    from electricity_forecast_pipeline_airflow_k8s_spark.operators.partitioning import (
-        fanout,
-    )
-
     # round-11 (guide §2.5 input skew): the fixture arrives as ONE parquet
     # row group -> one scan task, serializing every stage's per-doc text
     # work (gopher flags, fingerprints, minhash signatures) onto a single
@@ -222,12 +222,11 @@ def corpus_prep_stages(
     )
 
     def manifest(df: DataFrame) -> DataFrame:
-        # round-11: LAZY checkpoint (guide §2.6/§5) -- still a lineage cut
-        # with block reuse across consumers, but materialized inside the
-        # consuming job instead of one sequential build-time job per
-        # stage, so independent stage branches share a DAG and the
-        # scheduler overlaps them.
-        return df.select("doc_id", "source").localCheckpoint(eager=False)
+        # round-11 (guide §2.6/§5): a lineage cut with block reuse across
+        # consumers, materialized inside the consuming job instead of one
+        # sequential build-time job per stage, so independent stage
+        # branches share a DAG and the scheduler overlaps them.
+        return reuse(df.select("doc_id", "source"))
 
     # stage 1: Gopher quality gate (the six content-shape rules;
     # _E2E_GATE_FLAGS explains the stop-word exclusion)
@@ -302,13 +301,15 @@ def q_corpus_prep_e2e(spark: SparkSession, sf_dir: str):
     # #sources-row frame, materialized once: the mix total below consumes
     # it a second time, and without the cut the crossJoin would replay
     # every per-source count scan per consumer
-    counts = out.select(
-        "source",
-        *[
-            F.coalesce(F.col(c), F.lit(0)).cast("long").alias(c)
-            for c in ("n_raw", "n_quality", "n_exact", "n_neardup", "n_decontam")
-        ],
-    ).localCheckpoint(eager=True)
+    counts = reuse(
+        out.select(
+            "source",
+            *[
+                F.coalesce(F.col(c), F.lit(0)).cast("long").alias(c)
+                for c in ("n_raw", "n_quality", "n_exact", "n_neardup", "n_decontam")
+            ],
+        )
+    )
     # temperature mix over the final survivors; the #sources-sized
     # normalizer sums in deterministic source order (the
     # sample_temperature_mix window pattern), mirrored by the oracle's
@@ -542,10 +543,6 @@ def _bands_of(docs) -> DataFrame:
 def q_corpus_prep_inc_batch(spark: SparkSession, sf_dir: str):
     from pyspark.sql import Window as W
 
-    from electricity_forecast_pipeline_airflow_k8s_spark.operators.partitioning import (
-        fanout,
-    )
-
     # round-11 (guide §2.5): same single-row-group fanout as
     # corpus_prep_stages -- state build AND merge both do per-doc text
     # work (signatures, shingles, gopher flags) that otherwise runs on
@@ -561,18 +558,16 @@ def q_corpus_prep_inc_batch(spark: SparkSession, sf_dir: str):
     old = docs.filter(F.col("doc_id") < b_cut)
     batch = docs.filter(F.col("doc_id") >= b_cut)
 
-    def ck(df: DataFrame) -> DataFrame:
-        # round-11: lazy for the same §2.6 reason as corpus_prep_stages'
-        # manifest() -- the CC fixpoints' convergence counts force the
-        # upstream segments anyway; everything else materializes inside
-        # the consuming job with inter-branch parallelism.
-        return df.localCheckpoint(eager=False)
-
+    # round-11: every segment below is a lazy reuse() cut for the same
+    # §2.6 reason as corpus_prep_stages' manifest() -- the CC fixpoints'
+    # convergence counts force the upstream segments anyway; everything
+    # else materializes inside the consuming job with inter-branch
+    # parallelism.
     # ---- state: yesterday's pipeline run over the old corpus -------------
-    st_gated = ck(_gate_ids(old))
+    st_gated = reuse(_gate_ids(old))
     st_s1 = old.join(st_gated.select("doc_id"), "doc_id", "left_semi")
-    st_fps = ck(_fingerprints(st_s1))
-    st_s2_ids = ck(
+    st_fps = reuse(_fingerprints(st_s1))
+    st_s2_ids = reuse(
         st_fps.join(
             st_fps.groupBy("fp").agg(F.min("doc_id").alias("doc_id")),
             ["fp", "doc_id"],
@@ -580,14 +575,14 @@ def q_corpus_prep_inc_batch(spark: SparkSession, sf_dir: str):
         ).select("doc_id", "source")
     )
     st_s2 = old.join(st_s2_ids.select("doc_id"), "doc_id", "left_semi")
-    st_index = ck(_bands_of(st_s2))
-    st_edges = ck(
+    st_index = reuse(_bands_of(st_s2))
+    st_edges = reuse(
         DD.minhash_lsh_dedup_pairs(
             st_s2, k=MINHASH_K, bands=MINHASH_BANDS, threshold=_E2E_NEARDUP_T
         ).select("doc_a", "doc_b")
     )
-    st_labels = ck(DD.connected_components(st_edges))
-    st_s3_ids = ck(
+    st_labels = reuse(DD.connected_components(st_edges))
+    st_s3_ids = reuse(
         st_s2_ids.join(
             st_labels.filter(F.col("node") != F.col("component")).select(
                 F.col("node").alias("doc_id")
@@ -597,7 +592,7 @@ def q_corpus_prep_inc_batch(spark: SparkSession, sf_dir: str):
         )
     )
     bench = old.filter(F.col("doc_id") % 25 == 0)
-    bench_grams = ck(
+    bench_grams = reuse(
         bench.select(F.explode(DD.shingles("text")).alias("g")).distinct()
     )
     st_s3c = old.join(
@@ -606,7 +601,7 @@ def q_corpus_prep_inc_batch(spark: SparkSession, sf_dir: str):
         "left_semi",
     )
     st_contam = DD.ngram_contamination(st_s3c, bench, n=_E2E_CONTAM_N)
-    st_s4_ids = ck(
+    st_s4_ids = reuse(
         st_s3_ids.filter(F.col("doc_id") % 25 != 0).join(
             st_contam.filter(
                 F.col("contaminated_ngrams") * _E2E_CONTAM_DEN
@@ -618,12 +613,12 @@ def q_corpus_prep_inc_batch(spark: SparkSession, sf_dir: str):
     )
 
     # ---- merge: today's batch against the state artifacts ----------------
-    b_gated = ck(_gate_ids(batch))
+    b_gated = reuse(_gate_ids(batch))
     b_s1 = batch.join(b_gated.select("doc_id"), "doc_id", "left_semi")
     b_fps = _fingerprints(b_s1)
     # anti-join the state fingerprint set, keep-min within the batch
     b_new_fps = b_fps.join(st_fps.select("fp"), "fp", "left_anti")
-    b_s2_ids = ck(
+    b_s2_ids = reuse(
         b_new_fps.join(
             b_new_fps.groupBy("fp").agg(F.min("doc_id").alias("doc_id")),
             ["fp", "doc_id"],
@@ -633,7 +628,7 @@ def q_corpus_prep_inc_batch(spark: SparkSession, sf_dir: str):
     b_s2 = batch.join(b_s2_ids.select("doc_id"), "doc_id", "left_semi")
     # postings probe: batch bands join the union index; every candidate
     # carries >= 1 batch doc because the probe side is batch-only
-    b_bands = ck(_bands_of(b_s2))
+    b_bands = reuse(_bands_of(b_s2))
     union_index = st_index.unionByName(b_bands)
     cand = (
         b_bands.alias("a")
@@ -678,7 +673,7 @@ def q_corpus_prep_inc_batch(spark: SparkSession, sf_dir: str):
         F.col("node").alias("doc_a"), F.col("component").alias("doc_b")
     ).filter(F.col("doc_a") != F.col("doc_b"))
     merged_labels = DD.connected_components(star.unionByName(new_edges))
-    s3_ids = ck(
+    s3_ids = reuse(
         st_s2_ids.unionByName(b_s2_ids).join(
             merged_labels.filter(F.col("node") != F.col("component")).select(
                 F.col("node").alias("doc_id")
@@ -709,7 +704,7 @@ def q_corpus_prep_inc_batch(spark: SparkSession, sf_dir: str):
             "left_semi",
         )
     )
-    s4_ids = ck(
+    s4_ids = reuse(
         st_s4_ids.join(s3_ids.select("doc_id"), "doc_id", "left_semi")
         .unionByName(b_s4_ids)
     )
@@ -728,13 +723,15 @@ def q_corpus_prep_inc_batch(spark: SparkSession, sf_dir: str):
         ("n_decontam", s4_ids),
     ):
         out = out.join(cnt(df, name), "source", "left")
-    counts = out.select(
-        "source",
-        *[
-            F.coalesce(F.col(c), F.lit(0)).cast("long").alias(c)
-            for c in ("n_raw", "n_quality", "n_exact", "n_neardup", "n_decontam")
-        ],
-    ).localCheckpoint(eager=True)
+    counts = reuse(
+        out.select(
+            "source",
+            *[
+                F.coalesce(F.col(c), F.lit(0)).cast("long").alias(c)
+                for c in ("n_raw", "n_quality", "n_exact", "n_neardup", "n_decontam")
+            ],
+        )
+    )
     tot = counts.agg(F.sum("n_decontam").alias("nt"))
     w = counts.crossJoin(F.broadcast(tot)).select(
         "*",

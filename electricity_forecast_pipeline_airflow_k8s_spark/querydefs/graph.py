@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession, Window
 from pyspark.sql import functions as F
 
+from electricity_forecast_pipeline_airflow_k8s_spark.operators.partitioning import reuse
 from electricity_forecast_pipeline_airflow_k8s_spark.queries import register, table
 from electricity_forecast_pipeline_airflow_k8s_spark.querydefs.validation import (
     EVENTS_SRC,
@@ -42,19 +43,6 @@ _ITERS = 3
 # r10: a hardcoded 256 in the SQL would silently diverge from the Spark side
 # if the constant ever changed).
 _SSSP_HOUR_CAP = 256
-
-
-def _reuse(df, scoped: bool):
-    """Mark a multiply-referenced frame for reuse. Scoped sessions (the
-    default) persist -- the builder releases the cache before returning.
-    Bench's lazy-bracket mode (SPARK_GRAFT_SCOPED_CACHE=0) used to leave
-    the frame bare, so every downstream leg re-derived the whole subtree
-    (graph_triangle_count's plan held 290 Exchanges). A LAZY
-    localCheckpoint keeps the bracket honest -- nothing runs at build
-    time -- while the first timed action materializes the blocks once and
-    every leg reads them; lineage truncation also collapses the plan
-    (round-11, guide §2.4/§5)."""
-    return df.persist() if scoped else df.localCheckpoint(eager=False)
 
 
 def _cap_hours(ev):
@@ -131,9 +119,6 @@ ORDER BY node
 
 @register("graph_pagerank", oracle=_pagerank_oracle())
 def q_graph_pagerank(spark: SparkSession, sf_dir: str):
-    import os
-
-    scoped = os.environ.get("SPARK_GRAFT_SCOPED_CACHE", "1") != "0"
     ev = (
         table(spark, "events", sf_dir)
         .filter(F.col("ts").isNotNull() & F.col("user_id").isNotNull())
@@ -146,13 +131,11 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str):
         .groupBy(F.col("event_type").alias("u"), "v")
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    # the edge list is node^2-bounded; persisting it caps the whole
+    # the edge list is node^2-bounded; reusing it caps the whole
     # iteration pipeline at ONE events-sized pass (every downstream
     # table — outdeg, weights, nodes, dangling, the 3 rank iterations —
-    # re-derives from this tiny table, not the fact scan). Bench mode
-    # (SPARK_GRAFT_SCOPED_CACHE=0) keeps the plan fully lazy so the
-    # timer brackets the complete recompute.
-    edges = _reuse(edges, scoped)
+    # re-derives from this tiny table, not the fact scan)
+    edges = reuse(edges)
     outdeg = edges.groupBy("u").agg(F.sum("c").alias("tot"))
     w = edges.join(outdeg, "u").select(
         "u", "v", F.expr(f"(c * {_P_SCALE}) div tot").alias("p_fp")
@@ -170,13 +153,10 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str):
     for _ in range(_ITERS):
         # each iteration references `ranks` twice (inflow + dangling), so
         # an unbroken lineage doubles per iteration (2^k plan copies — the
-        # classic iterative-algorithm lineage explosion). In production
-        # mode cap it per iteration, exactly as connected_components does
-        # (operators/dedup.py); bench mode cuts LAZILY (round-11 F4) --
-        # the timer still sees all the work, but each iteration's result
-        # materializes once instead of re-deriving 2x per downstream
-        # reference.
-        ranks = ranks.localCheckpoint(eager=scoped)
+        # classic iterative-algorithm lineage explosion); the cut makes
+        # each iteration's result materialize once instead of re-deriving
+        # 2x per downstream reference
+        ranks = reuse(ranks)
         inflow = (
             w.join(ranks, w.u == ranks.node)
             .groupBy(F.col("v").alias("node"))
@@ -205,9 +185,6 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str):
         F.col("r_fp").alias("pagerank_fp"),
         (F.floor(F.col("r_fp") * 1.0 / 1000 + 0.5) / 1000000).alias("pagerank"),
     ).orderBy("node")
-    if scoped:
-        out = out.localCheckpoint(eager=True)
-        edges.unpersist()
     return out
 
 
@@ -271,9 +248,6 @@ def q_graph_triangle_count(spark: SparkSession, sf_dir: str):
     production corpus. tools/scale_bench.py EXCLUDED carries the matching
     entry and the measured scale path is graph_triangle_estimate
     (DOULION p=2/16: 3.4% error, flat 20x step)."""
-    import os
-
-    scoped = os.environ.get("SPARK_GRAFT_SCOPED_CACHE", "1") != "0"
     ev = (
         table(spark, "events", sf_dir)
         .filter(
@@ -296,9 +270,9 @@ def q_graph_triangle_count(spark: SparkSession, sf_dir: str):
         .distinct()
     )
     # the distinct edge list feeds degree, orientation (both wedge sides),
-    # the closing join, and the edge count — persist it so the expensive
-    # co-occurrence self-join runs ONCE (lazy in bench mode, as above)
-    edges = _reuse(edges, scoped)
+    # the closing join, and the edge count — reuse it so the expensive
+    # co-occurrence self-join runs ONCE
+    edges = reuse(edges)
     deg = (
         edges.select(F.col("ua").alias("n"))
         .union(edges.select(F.col("ub").alias("n")))
@@ -321,7 +295,7 @@ def q_graph_triangle_count(spark: SparkSession, sf_dir: str):
     # round-12: `oriented` is consumed three times (both wedge sides + the
     # closing join); without a cut each consumer re-runs the degree agg
     # and the two orientation joins from the edge blocks (F4, guide §2.4)
-    oriented = _reuse(oriented, scoped)
+    oriented = reuse(oriented)
     x, y = oriented.alias("x"), oriented.alias("y")
     wedges = x.join(
         y,
@@ -361,10 +335,6 @@ def q_graph_triangle_count(spark: SparkSession, sf_dir: str):
             ).alias("clustering_coeff"),
         )
     )
-    if scoped:
-        out = out.localCheckpoint(eager=True)
-        edges.unpersist()
-        oriented.unpersist()
     return out
 
 
@@ -422,9 +392,6 @@ SELECT (SELECT count(*) FROM e) AS n_edges_total,
 """,
 )
 def q_graph_triangle_estimate(spark: SparkSession, sf_dir: str):
-    import os
-
-    scoped = os.environ.get("SPARK_GRAFT_SCOPED_CACHE", "1") != "0"
     ev = (
         table(spark, "events", sf_dir)
         .filter(
@@ -446,7 +413,7 @@ def q_graph_triangle_estimate(spark: SparkSession, sf_dir: str):
         .select(F.col("a.user_id").alias("ua"), F.col("c.user_id").alias("ub"))
         .distinct()
     )
-    edges = _reuse(edges, scoped)
+    edges = reuse(edges)
     keep = (
         F.substring(
             F.md5(
@@ -459,7 +426,7 @@ def q_graph_triangle_estimate(spark: SparkSession, sf_dir: str):
         )
         <= "1"
     )
-    sampled = _reuse(edges.filter(keep), scoped)
+    sampled = reuse(edges.filter(keep))
     # same degree-ordered orientation as the exact lane, on the sample
     deg = (
         sampled.select(F.col("ua").alias("n"))
@@ -479,7 +446,7 @@ def q_graph_triangle_estimate(spark: SparkSession, sf_dir: str):
         F.when(a_first, F.col("d_b")).otherwise(F.col("d_a")).alias("dst_d"),
     )
     # round-12: same three-consumer reuse as the exact lane (F4)
-    oriented = _reuse(oriented, scoped)
+    oriented = reuse(oriented)
     x, y = oriented.alias("x"), oriented.alias("y")
     wedges = x.join(
         y,
@@ -509,11 +476,6 @@ def q_graph_triangle_estimate(spark: SparkSession, sf_dir: str):
             ),
         )
     )
-    if scoped:
-        out = out.localCheckpoint(eager=True)
-        edges.unpersist()
-        sampled.unpersist()
-        oriented.unpersist()
     return out
 
 
@@ -601,11 +563,7 @@ def q_graph_link_prediction(spark: SparkSession, sf_dir: str):
         .select(F.col("a.user_id").alias("ua"), F.col("c.user_id").alias("ub"))
         .distinct()
     )
-    import os
-
-    edges = _reuse(
-        edges, os.environ.get("SPARK_GRAFT_SCOPED_CACHE", "1") != "0"
-    )
+    edges = reuse(edges)
     und = edges.select(F.col("ua").alias("v"), F.col("ub").alias("n")).unionAll(
         edges.select(F.col("ub").alias("v"), F.col("ua").alias("n"))
     )
@@ -732,26 +690,20 @@ def q_graph_bfs_reachability(spark: SparkSession, sf_dir: str):
         .select(F.col("a.user_id").alias("ua"), F.col("c.user_id").alias("ub"))
         .distinct()
     )
-    # ALWAYS materialize the edge list and cut lineage per hop: an
-    # un-cut BFS lineage re-derives the co-occurrence join once per hop
-    # reference (measured 7.3s lazy vs ~2s cut at sf0.1) and grows
-    # exponentially with depth — checkpoint-per-hop IS the production
-    # shape of distributed BFS (dedup_clusters convention). Timed in
-    # bench's ITERATIVE wall-clock lane.
-    edges = edges.localCheckpoint(eager=True)
+    # cut lineage on the edge list and per hop: an un-cut BFS lineage
+    # re-derives the co-occurrence join once per hop reference (measured
+    # 7.3s lazy vs ~2s cut at sf0.1) and grows exponentially with depth --
+    # checkpoint-per-hop IS the production shape of distributed BFS
+    edges = reuse(edges)
     und = edges.select(F.col("ua").alias("v"), F.col("ub").alias("n")).unionAll(
         edges.select(F.col("ub").alias("v"), F.col("ua").alias("n"))
     )
-    # round-11: checkpoint each hop's NEW frontier/visited immediately
-    # after computing it (not at the top of the next iteration) -- the
-    # old ordering left the hop-i expansion lazy while BOTH the hop-i
-    # count legs and the hop-i+1 checkpoint re-ran it (the before-plan
-    # held 78 Exchanges of re-derived hops). Values are identical; the
-    # per-hop cut is the same checkpoint-per-hop production shape as
-    # before, just placed so each expansion runs once.
-    frontier = (
-        und.select("v").distinct().orderBy("v").limit(20)
-    ).localCheckpoint(eager=True)
+    # round-11: cut each hop's NEW frontier/visited immediately after
+    # computing it (not at the top of the next iteration) -- the old
+    # ordering left the hop-i expansion un-cut while BOTH the hop-i count
+    # legs and the hop-i+1 cut re-ran it (the before-plan held 78
+    # Exchanges of re-derived hops), so each expansion now runs once.
+    frontier = reuse(und.select("v").distinct().orderBy("v").limit(20))
     visited = frontier
     out_rows = [
         frontier.agg(F.count(F.lit(1)).alias("n_new")).crossJoin(
@@ -759,15 +711,13 @@ def q_graph_bfs_reachability(spark: SparkSession, sf_dir: str):
         ).select(F.lit(0).alias("hop"), "n_new", "n_cum")
     ]
     for i in range(1, _BFS_HOPS + 1):
-        frontier = (
+        frontier = reuse(
             und.join(frontier.withColumnRenamed("v", "fv"), und.v == F.col("fv"))
             .select(F.col("n").alias("v"))
             .distinct()
             .join(visited, "v", "left_anti")
-        ).localCheckpoint(eager=True)
-        visited = (
-            visited.unionAll(frontier.select("v")).distinct()
-        ).localCheckpoint(eager=True)
+        )
+        visited = reuse(visited.unionAll(frontier.select("v")).distinct())
         out_rows.append(
             frontier.agg(F.count(F.lit(1)).alias("n_new")).crossJoin(
                 visited.agg(F.count(F.lit(1)).alias("n_cum"))
@@ -874,8 +824,7 @@ def q_graph_assortativity(spark: SparkSession, sf_dir: str):
 # as graph_link_prediction): repeatedly delete nodes with fewer than K
 # alive neighbors until a fixed point — the standard cohesive-subgroup /
 # spam-cluster primitive. Spark iterates to the TRUE fixed point with
-# lineage capped per peel (_cut_lineage: reliable checkpoint under a
-# configured dir, localCheckpoint local-mode); peeling is monotone, so
+# lineage capped per peel (``reuse``); peeling is monotone, so
 # equal alive-counts imply convergence. The oracle unrolls the peel 10
 # times — strictly more than the fixture needs (sf0.01 converges in 5;
 # peels after convergence are no-ops) — and derives the same
@@ -933,10 +882,6 @@ GROUP BY 1 ORDER BY 1"""
 
 @register("graph_kcore", oracle=_kcore_oracle())
 def q_graph_kcore(spark: SparkSession, sf_dir: str):
-    from electricity_forecast_pipeline_airflow_k8s_spark.operators.dedup import (
-        _cut_lineage,
-    )
-
     ev = (
         table(spark, "events", sf_dir)
         .filter(
@@ -960,7 +905,7 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str):
         )
         .distinct()
     )
-    und = _cut_lineage(
+    und = reuse(
         e.select(F.col("ua").alias("v"), F.col("ub").alias("n")).unionAll(
             e.select(F.col("ub").alias("v"), F.col("ua").alias("n"))
         )
@@ -976,7 +921,7 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str):
             .filter(F.col("d") >= _KCORE_K)
             .select("v")
         )
-        alive = _cut_lineage(survivors, eager=False)
+        alive = reuse(survivors)
         prev, cur = cur, alive.count()
     return (
         und.join(alive.withColumnRenamed("v", "vv"), F.col("v") == F.col("vv"), "semi")
@@ -1076,46 +1021,29 @@ def q_graph_sssp_weighted(spark: SparkSession, sf_dir: str):
         .agg(F.count(F.lit(1)).alias("sh"))
     )
     w = F.greatest(F.lit(1), (F.lit(100) / F.col("sh")).cast("long"))
-    import os as _os
-
-    _scoped = _os.environ.get("SPARK_GRAFT_SCOPED_CACHE", "1") != "0"
-    edges = _reuse(
+    edges = reuse(
         e0.select(F.col("ua").alias("u"), F.col("ub").alias("v"), w.alias("w"))
         .unionAll(
             e0.select(F.col("ub").alias("u"), F.col("ua").alias("v"), w.alias("w"))
-        ),
-        _scoped,
+        )
     )
     src = e0.agg(F.min("ua").alias("v")).select(
         "v", F.lit(0).cast("bigint").alias("dist")
     )
-    from electricity_forecast_pipeline_airflow_k8s_spark.operators.dedup import _cut_lineage
-
-    # per-round lineage caps are cluster-durable via _cut_lineage (reliable
-    # checkpoint() when a dir is configured -- the same helper the dedup
-    # iteratives use). Under the default scoped-cache mode the rounds run
-    # EAGERLY so the node-sized frontiers materialize inside the builder
-    # and the cached edge frame can be released before returning; with
-    # SPARK_GRAFT_SCOPED_CACHE=0 (bench lazy-bracket mode) the plan stays
-    # lazy and the caller owns eviction.
-    import os
-
-    scoped = os.environ.get("SPARK_GRAFT_SCOPED_CACHE", "1") != "0"
+    # per-round lineage caps (reliable checkpoint() when a dir is
+    # configured -- the same primitive the dedup iteratives use)
     d = src
     for _ in range(_SSSP_ROUNDS):
         relaxed = (
             d.join(edges, d["v"] == edges["u"])
             .select(edges["v"].alias("v"), (d["dist"] + edges["w"]).alias("dist"))
         )
-        d = _cut_lineage(
+        d = reuse(
             d.select("v", "dist")
             .unionAll(relaxed)
             .groupBy("v")
-            .agg(F.min("dist").alias("dist")),
-            eager=scoped,
+            .agg(F.min("dist").alias("dist"))
         )
-    if scoped:
-        edges.unpersist()
     out = (
         d.groupBy("dist")
         .agg(
@@ -1212,32 +1140,23 @@ def q_graph_label_propagation(spark: SparkSession, sf_dir: str):
         .groupBy("ua", "ub")
         .agg(F.count(F.lit(1)).alias("sh"))
     )
-    import os
-
-    from electricity_forecast_pipeline_airflow_k8s_spark.operators.dedup import _cut_lineage
-
-    scoped = os.environ.get("SPARK_GRAFT_SCOPED_CACHE", "1") != "0"
-    edges = _reuse(
+    edges = reuse(
         e0.select(F.col("ua").alias("u"), F.col("ub").alias("v"), "sh")
-        .unionAll(e0.select(F.col("ub").alias("u"), F.col("ua").alias("v"), "sh")),
-        scoped,
+        .unionAll(e0.select(F.col("ub").alias("u"), F.col("ua").alias("v"), "sh"))
     )
     labels = edges.select(F.col("u").alias("v")).distinct().withColumn(
         "label", F.col("v")
     )
     for _ in range(_LPA_ROUNDS):
         w = Window.partitionBy("nv").orderBy(F.desc("s"), "label")
-        labels = _cut_lineage(
+        labels = reuse(
             edges.join(labels, edges["v"] == labels["v"])
             .groupBy(edges["u"].alias("nv"), "label")
             .agg(F.sum("sh").alias("s"))
             .withColumn("rk", F.row_number().over(w))
             .filter(F.col("rk") == 1)
-            .select(F.col("nv").alias("v"), "label"),
-            eager=scoped,
+            .select(F.col("nv").alias("v"), "label")
         )
-    if scoped:
-        edges.unpersist()
     return (
         labels.groupBy(F.col("label").alias("community"))
         .agg(
@@ -1337,8 +1256,6 @@ ORDER BY node
 
 @register("graph_ppr_unrolled", oracle=_ppr_oracle())
 def q_graph_ppr_unrolled(spark: SparkSession, sf_dir: str):
-    import os
-
     from electricity_forecast_pipeline_airflow_k8s_spark.querydefs.graph import (
         _D_DEN,
         _D_NUM,
@@ -1346,7 +1263,6 @@ def q_graph_ppr_unrolled(spark: SparkSession, sf_dir: str):
         _R_SCALE,
     )
 
-    scoped = os.environ.get("SPARK_GRAFT_SCOPED_CACHE", "1") != "0"
     ev = (
         table(spark, "events", sf_dir)
         .filter(F.col("ts").isNotNull() & F.col("user_id").isNotNull())
@@ -1359,7 +1275,7 @@ def q_graph_ppr_unrolled(spark: SparkSession, sf_dir: str):
         .groupBy(F.col("event_type").alias("u"), "v")
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    edges = _reuse(edges, scoped)
+    edges = reuse(edges)
     outdeg = edges.groupBy("u").agg(F.sum("c").alias("tot"))
     w = edges.join(outdeg, "u").select(
         "u", "v", F.expr(f"(c * {_P_SCALE}) div tot").alias("p_fp")
@@ -1378,8 +1294,8 @@ def q_graph_ppr_unrolled(spark: SparkSession, sf_dir: str):
         .alias("r_fp"),
     )
     for _ in range(_PPR_ITERS):
-        # round-11 F4: lazy cut in bench mode (see the PageRank loop)
-        ranks = ranks.localCheckpoint(eager=scoped)
+        # per-iteration cut (see the PageRank loop)
+        ranks = reuse(ranks)
         inflow = (
             w.join(ranks, w.u == ranks.node)
             .groupBy(F.col("v").alias("node"))
@@ -1415,7 +1331,4 @@ def q_graph_ppr_unrolled(spark: SparkSession, sf_dir: str):
         F.col("r_fp").alias("ppr_fp"),
         (F.floor(F.col("r_fp") * 1.0 / 1000 + 0.5) / 1000000).alias("ppr"),
     ).orderBy("node")
-    if scoped:
-        out = out.localCheckpoint(eager=True)
-        edges.unpersist()
     return out

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from electricity_forecast_pipeline_airflow_k8s_spark.operators import dedup as DD
+from electricity_forecast_pipeline_airflow_k8s_spark.operators.partitioning import reuse
 from electricity_forecast_pipeline_airflow_k8s_spark.queries import register, table
 from electricity_forecast_pipeline_airflow_k8s_spark.querydefs.graph import (
     _SSSP_HOUR_CAP,
@@ -104,15 +105,12 @@ ORDER BY doc_a, doc_b
 
 @register("inc_minhash_new_batch", oracle=_inc_minhash_oracle(0.5))
 def q_inc_minhash_new_batch(spark: SparkSession, sf_dir: str):
-    import os
-
-    scoped = os.environ.get("SPARK_GRAFT_SCOPED_CACHE", "1") != "0"
     docs = table(spark, "documents", sf_dir)
     par = spark.sparkContext.defaultParallelism
-    sh = (
-        docs.repartition(par, "doc_id")
-        .select("doc_id", DD.shingles("text").alias("sh"))
-        .persist()
+    sh = reuse(
+        docs.repartition(par, "doc_id").select(
+            "doc_id", DD.shingles("text").alias("sh")
+        )
     )
     sigs = (
         sh.select("doc_id", F.explode("sh").alias("s"))
@@ -134,10 +132,9 @@ def q_inc_minhash_new_batch(spark: SparkSession, sf_dir: str):
         ).alias(f"b{b}")
         for b in range(MINHASH_BANDS)
     ]
-    exploded = (
+    exploded = reuse(
         sigs.select("doc_id", F.explode(F.array(*band_cols)).alias("bh"))
         .select("doc_id", F.col("bh.band").alias("band"), F.col("bh.h").alias("h"))
-        .persist()
     )
     # the index side is the FULL banded table (at scale: the persisted
     # postings index); the probe side is only the new batch
@@ -182,10 +179,6 @@ def q_inc_minhash_new_batch(spark: SparkSession, sf_dir: str):
     out = verified.select(
         "doc_a", "doc_b", "jaccard", kind.alias("pair_kind")
     ).orderBy("doc_a", "doc_b")
-    if scoped:
-        out = out.localCheckpoint(eager=True)
-        sh.unpersist()
-        exploded.unpersist()
     return out
 
 
@@ -337,20 +330,13 @@ def q_inc_sessionize_rollforward(spark: SparkSession, sf_dir: str):
 # incident to any near-dup edge, identical to dedup_clusters' shape.
 @register("inc_cc_new_edges", oracle=_clusters_oracle(0.5))
 def q_inc_cc_new_edges(spark: SparkSession, sf_dir: str):
-    import os
-
-    scoped = os.environ.get("SPARK_GRAFT_SCOPED_CACHE", "1") != "0"
     docs = table(spark, "documents", sf_dir)
-    # persist: three consumers (old-half CC, the contracted merge, and the
-    # new-node scan) would otherwise each recompute the minhash subtree in
-    # the lazy (bench) path; under scoped-cache the inner pipeline already
-    # returns an eager checkpoint, so the persist is a no-cost alias there
-    pairs = (
+    # three consumers (old-half CC, the contracted merge, and the new-node
+    # scan) would otherwise each recompute the minhash subtree
+    pairs = reuse(
         DD.minhash_lsh_dedup_pairs(
             docs, k=MINHASH_K, bands=MINHASH_BANDS, threshold=0.5
-        )
-        .select("doc_a", "doc_b")
-        .persist()
+        ).select("doc_a", "doc_b")
     )
     in_batch = lambda c: F.col(c) % _BATCH_MOD == _BATCH_REM  # noqa: E731
     old_pairs = pairs.filter(~in_batch("doc_a") & ~in_batch("doc_b"))
@@ -400,9 +386,6 @@ def q_inc_cc_new_edges(spark: SparkSession, sf_dir: str):
     ).select("node", F.coalesce(F.col("_merged"), F.col("node")).alias("component"))
 
     out = final_old.unionByName(final_new).orderBy("node")
-    if scoped:
-        out = out.localCheckpoint(eager=True)
-        pairs.unpersist()
     return out
 
 
@@ -1004,9 +987,6 @@ SELECT (SELECT count(*) FROM samp_old) AS n_state_edges,
 
 @register("inc_triangle_estimate_merge", oracle=_ITE_ORACLE)
 def q_inc_triangle_estimate_merge(spark: SparkSession, sf_dir: str):
-    import os
-
-    scoped = os.environ.get("SPARK_GRAFT_SCOPED_CACHE", "1") != "0"
     ev = (
         table(spark, "events", sf_dir)
         .filter(
@@ -1019,20 +999,15 @@ def q_inc_triangle_estimate_merge(spark: SparkSession, sf_dir: str):
     )
     ev = _cap_hours(ev)
     cut = F.lit(_QCUT).cast("timestamp")
-    from electricity_forecast_pipeline_airflow_k8s_spark.operators.partitioning import (
-        reuse,
-    )
-
     # round-12 F4 (guide §2.4): state feeds the anti-join, the union, two
     # role terms, the exact-state triangle count and the edge count (~7
-    # references), batch ~5 -- the lazy bench bracket used to re-run the
-    # capped co-occurrence self-join + sampling once per reference
-    state = reuse(_ite_sampled(_ite_edges(ev.filter(F.col("h") < cut))), scoped)
+    # references), batch ~5 -- without the cut each reference re-ran the
+    # capped co-occurrence self-join + sampling
+    state = reuse(_ite_sampled(_ite_edges(ev.filter(F.col("h") < cut))))
     batch = reuse(
         _ite_sampled(_ite_edges(ev.filter(F.col("h") >= cut))).join(
             state, ["ua", "ub"], "left_anti"
-        ),
-        scoped,
+        )
     )
     union = state.unionByName(batch)
 
@@ -1079,8 +1054,4 @@ def q_inc_triangle_estimate_merge(spark: SparkSession, sf_dir: str):
             .alias("t_estimate"),
         )
     )
-    if scoped:
-        out = out.localCheckpoint(eager=True)
-        state.unpersist()
-        batch.unpersist()
     return out

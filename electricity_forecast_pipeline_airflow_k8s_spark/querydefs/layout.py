@@ -26,6 +26,10 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from electricity_forecast_pipeline_airflow_k8s_spark.operators.partitioning import (
+    fanout,
+    reuse,
+)
 from electricity_forecast_pipeline_airflow_k8s_spark.queries import register, table
 
 _BITS = 6  # 64 range bins per dimension -> 12-bit Morton code
@@ -88,10 +92,6 @@ ORDER BY 1
 
 @register("layout_zorder_locality", oracle=_ZORDER_ORACLE)
 def q_layout_zorder_locality(spark: SparkSession, sf_dir: str):
-    from electricity_forecast_pipeline_airflow_k8s_spark.operators.partitioning import (
-        fanout,
-    )
-
     o = table(spark, "orders", sf_dir)
     base = o.select(
         "o_orderkey",
@@ -103,11 +103,8 @@ def q_layout_zorder_locality(spark: SparkSession, sf_dir: str):
     )
     # round-11 F1+F4 (guide §2.5, §2.4): the single-row-group orders scan
     # is re-read single-task by BOTH boundary-derivation jobs AND the
-    # final plan's layout branches. Fan it out and materialize once --
-    # this lane is timed in bench's ITERATIVE wall-clock bracket (the
-    # boundary jobs run at build), so the eager checkpoint is inside the
-    # measured region.
-    base = fanout(base).localCheckpoint(eager=True)
+    # final plan's layout branches. Fan it out and materialize once.
+    base = reuse(fanout(base))
     # two narrow boundary-derivation sorts (key columns only) + broadcast
     # edge binning on the fact -- no Window, no full-frame rank pass.
     # Round-12 (guide §2.6): the two dimensions' boundary jobs are
@@ -282,18 +279,16 @@ FROM hits GROUP BY 1 ORDER BY 1
 
 @register("layout_zonemap_pruning", oracle=_zonemap_oracle())
 def q_layout_zonemap_pruning(spark: SparkSession, sf_dir: str):
-    from electricity_forecast_pipeline_airflow_k8s_spark.operators.partitioning import (
-        fanout,
-    )
-
     # round-11 F1+F4: one fanned-out materialization of the 3-column
     # projection feeds both layouts' boundary jobs, the span agg and the
-    # final zone aggregates (ITERATIVE wall-clock bracket, see zorder)
-    orders = fanout(
-        table(spark, "orders", sf_dir).select(
-            "o_orderkey", "o_custkey", "o_orderdate"
+    # final zone aggregates
+    orders = reuse(
+        fanout(
+            table(spark, "orders", sf_dir).select(
+                "o_orderkey", "o_custkey", "o_orderdate"
+            )
         )
-    ).localCheckpoint(eager=True)
+    )
     layouts = {
         "custkey_sorted": ["o_custkey", "o_orderkey"],
         "time_sorted": ["o_orderdate", "o_orderkey"],
@@ -449,16 +444,14 @@ def q_layout_bloom_pruning(spark: SparkSession, sf_dir: str):
         ntile_by_edges,
     )
 
-    from electricity_forecast_pipeline_airflow_k8s_spark.operators.partitioning import (
-        fanout,
-    )
-
     # round-11 F1+F4 (see zonemap): one materialized fanned-out scan
-    orders = fanout(
-        table(spark, "orders", sf_dir).select(
-            "o_orderkey", "o_custkey", "o_orderdate"
+    orders = reuse(
+        fanout(
+            table(spark, "orders", sf_dir).select(
+                "o_orderkey", "o_custkey", "o_orderdate"
+            )
         )
-    ).localCheckpoint(eager=True)
+    )
     # (tiled feeds zones, bit sets and the truth join 3x, but measured:
     # a lazy checkpoint of it was a net loss -- the 6-comparison bin
     # search re-evaluated from the base blocks is cheaper than

@@ -184,7 +184,7 @@ def q_emb_pq_assign(spark: SparkSession, sf_dir: str):
     # k-sized (16 centroids), the same accepted pattern as quantile
     # thresholds / ntile edges: the codebook is broadcast INSIDE the
     # expressions -- no join anywhere in the serving pass.
-    cents, _, cids = _pq_train_codebook(emb, corpus_key=sf_dir)
+    cents, _, cids = _pq_train_codebook(emb)
     bestf = _pq_best_frame(emb, cents, cids)
     return (
         bestf.groupBy(
@@ -400,38 +400,22 @@ def _pq_train_step(emb, cents, cids):
     return nxt
 
 
-# In production the trained codebook is a persisted index artifact --
-# trained once per corpus version, then served by every assignment/ADC/
-# IVF query. The memo mirrors that: one driver-side dict entry of 16x64
-# floats keyed by (corpus path, iters), so the three PQ lanes (and bench
-# re-iterations) train once per process instead of re-running the two
-# k-means passes each. Keys are corpus paths: test fixtures live in
-# unique tmp dirs and the driver's testdata is immutable, so a stale hit
-# cannot occur within a process lifetime.
-_PQ_CODEBOOK_MEMO: dict = {}
-
-
-def _pq_train_books(emb, iters: int = _PQ_TRAIN_ITERS, corpus_key=None):
+def _pq_train_books(emb, iters: int = _PQ_TRAIN_ITERS):
     """Full training trajectory: ([cents_0 .. cents_iters], queries_,
     cids) -- cents_0 is the init, each later entry one k-means iteration.
-    Pass ``corpus_key`` (the sf_dir) to reuse a trajectory already
-    trained on the same corpus in this process."""
-    key = (corpus_key, iters) if corpus_key is not None else None
-    if key is not None and key in _PQ_CODEBOOK_MEMO:
-        return _PQ_CODEBOOK_MEMO[key]
+    Every call trains from the corpus as it is now: a codebook cached by
+    corpus path would go stale when the corpus is rewritten in place."""
     cents, queries_, cids = _pq_collect_small(emb)
     books = [cents]
     for _ in range(iters):
         books.append(_pq_train_step(emb, books[-1], cids))
-    if key is not None:
-        _PQ_CODEBOOK_MEMO[key] = (books, queries_, cids)
     return books, queries_, cids
 
 
-def _pq_train_codebook(emb, iters: int = _PQ_TRAIN_ITERS, corpus_key=None):
+def _pq_train_codebook(emb, iters: int = _PQ_TRAIN_ITERS):
     """Returns (cents, queries_, cids) like _pq_collect_small, but with
     the codebook refined by ``iters`` k-means iterations over subvectors."""
-    books, queries_, cids = _pq_train_books(emb, iters, corpus_key)
+    books, queries_, cids = _pq_train_books(emb, iters)
     return books[-1], queries_, cids
 
 
@@ -514,7 +498,7 @@ def q_sim_pq_adc_recall(spark: SparkSession, sf_dir: str):
     emb = table(spark, "embeddings", sf_dir).filter(
         F.col("embedding").isNotNull() & (F.size("embedding") >= _PQ_M)
     )
-    cents, queries_, cids = _pq_train_codebook(emb, corpus_key=sf_dir)
+    cents, queries_, cids = _pq_train_codebook(emb)
     adc_t = _pq_adc_tables(queries_, cents, cids)
     coded = _pq_codes_wide(emb, cents, cids)
 
@@ -700,7 +684,7 @@ def q_sim_ivfpq_recall(spark: SparkSession, sf_dir: str):
     emb = table(spark, "embeddings", sf_dir).filter(
         F.col("embedding").isNotNull() & (F.size("embedding") >= _PQ_M)
     )
-    cents, queries_, cids = _pq_train_codebook(emb, corpus_key=sf_dir)
+    cents, queries_, cids = _pq_train_codebook(emb)
     adc_t = _pq_adc_tables(queries_, cents, cids)
 
     # coarse probe: per-cluster mean centroids (clusters x d aggregate),
@@ -888,10 +872,10 @@ def q_emb_pq_train_curve(spark: SparkSession, sf_dir: str):
     emb = table(spark, "embeddings", sf_dir).filter(
         F.col("embedding").isNotNull() & (F.size("embedding") >= _PQ_M)
     )
-    # the same memoized training trajectory the serving lanes use (the
+    # the same training trajectory the serving lanes use (the
     # codebook is a persisted artifact at scale -- trained once per
     # corpus version, diagnosed and served from the same trajectory)
-    books, _, cids = _pq_train_books(emb, corpus_key=sf_dir)
+    books, _, cids = _pq_train_books(emb)
 
     # one corpus pass: distances against all three codebooks as codegen
     # sums, argmin + change flags inline, 3-row aggregate out

@@ -1142,6 +1142,7 @@ def q_stream_upsert_replay_state(spark: SparkSession, sf_dir: str):
             key=lambda p: int(p.rsplit("=", 1)[1]),
         )
         last = dirs[-1]
+        # eager, not reuse(): land() overwrites the very path this reads
         land(
             spark.read.parquet(last).localCheckpoint(eager=True),
             int(last.rsplit("=", 1)[1]),
@@ -1149,7 +1150,8 @@ def q_stream_upsert_replay_state(spark: SparkSession, sf_dir: str):
         state = read_upsert_state(spark, root, ["event_type"]).orderBy(
             "event_type"
         )
-        # materialize before the tmp dir (the state's backing files) vanishes
+        # eager, not reuse(): the tmp dir (the state's backing files)
+        # vanishes on return
         return state.localCheckpoint(eager=True)
 
 

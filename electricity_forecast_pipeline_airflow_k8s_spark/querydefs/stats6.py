@@ -29,6 +29,10 @@ from pyspark.sql import functions as F
 from electricity_forecast_pipeline_airflow_k8s_spark.functions.stats import (
     portable_round,
 )
+from electricity_forecast_pipeline_airflow_k8s_spark.operators.partitioning import (
+    fanout,
+    reuse,
+)
 from electricity_forecast_pipeline_airflow_k8s_spark.queries import register, table
 from electricity_forecast_pipeline_airflow_k8s_spark.querydefs.validation import (
     EVENTS_SRC,
@@ -545,13 +549,8 @@ def q_rel_decile_lift(spark: SparkSession, sf_dir: str):
     )
     # the 10-row decile aggregate feeds BOTH the cumulative branch and the
     # totals branch; without a materialization Spark duplicates the whole
-    # dimension-scan + edge-binning subtree per consumer. Under scoped-
-    # cache mode pin it eagerly (10 rows); bench lazy-bracket mode keeps
-    # the plan lazy (the duplicate subtree is the measured cost there).
-    import os
-
-    if os.environ.get("SPARK_GRAFT_SCOPED_CACHE", "1") != "0":
-        agg = agg.localCheckpoint(eager=True)
+    # dimension-scan + edge-binning subtree per consumer (10 rows)
+    agg = reuse(agg)
     tot = agg.agg(F.sum("n_buyers").alias("tb"), F.sum("n_cust").alias("tc"))
     wcum = Window.orderBy("decile").rowsBetween(Window.unboundedPreceding, 0)
     cum = agg.select(
@@ -793,13 +792,9 @@ def q_rel_bitmap_overlap(spark: SparkSession, sf_dir: str):
         ).alias("bits")
     )
     # the word-bitmap table (types x words, ~32x smaller than the distinct
-    # pairs) feeds three consumers (sizes + both join sides): persist it so
-    # the fact scan+distinct runs once (theilsen's scoped-cache pattern;
-    # bench mode keeps the plan lazy for honest timing)
-    import os
-
-    if os.environ.get("SPARK_GRAFT_SCOPED_CACHE", "1") != "0":
-        bitmaps = bitmaps.persist()
+    # pairs) feeds three consumers (sizes + both join sides): reuse it so
+    # the fact scan+distinct runs once (theilsen's pattern)
+    bitmaps = reuse(bitmaps)
     sizes = bitmaps.groupBy("event_type").agg(
         F.sum(F.bit_count("bits")).alias("n")
     )
@@ -2457,11 +2452,6 @@ def q_sample_curriculum_order(spark: SparkSession, sf_dir: str):
         bpe_token_estimate,
     )
 
-    from electricity_forecast_pipeline_airflow_k8s_spark.operators.partitioning import (
-        fanout,
-        reuse,
-    )
-
     docs = table(spark, "documents", sf_dir)
     # round-11 F1+F4: fan the single-row-group scan out before the BPE
     # estimate, and mark it for reuse -- it feeds both the quartile agg
@@ -2487,8 +2477,6 @@ def q_sample_curriculum_order(spark: SparkSession, sf_dir: str):
         ).alias("stage"),
         F.md5(F.col("doc_id").cast("string")).alias("h"),
     )
-    import os
-
     # round-11: persist unconditionally -- this is an ITERATIVE
     # wall-clock bench lane (the offsets job runs at build, inside the
     # bracket), so caching the range sort between the counts job and the

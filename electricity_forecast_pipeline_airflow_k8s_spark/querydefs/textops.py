@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from electricity_forecast_pipeline_airflow_k8s_spark.operators import dedup as DD
 from electricity_forecast_pipeline_airflow_k8s_spark.operators import similarity as SIM
 from electricity_forecast_pipeline_airflow_k8s_spark.operators import text as TX
+from electricity_forecast_pipeline_airflow_k8s_spark.operators.partitioning import reuse
 from electricity_forecast_pipeline_airflow_k8s_spark.queries import register, table
 from electricity_forecast_pipeline_airflow_k8s_spark.functions.stats import (
     portable_round,
@@ -1839,9 +1840,9 @@ def q_dedup_semantic_clusters_scale(spark: SparkSession, sf_dir: str):
     )
     # round-11 F4: embedding_neardup_pairs consumes its corpus TWICE
     # (probe + broadcast build side), so the 16 interpreted sign-bit
-    # fold expressions above ran twice per vector. LAZY checkpoint:
-    # materialized once inside the CC fixpoint's first build job.
-    bucketed = bucketed.localCheckpoint(eager=False)
+    # fold expressions above ran twice per vector. The cut materializes
+    # once inside the CC fixpoint's first build job.
+    bucketed = reuse(bucketed)
     pairs = SIM.embedding_neardup_pairs(
         bucketed, threshold=_SEMS_THRESHOLD, block_col="lb"
     )
@@ -2675,20 +2676,15 @@ SELECT (SELECT count(*) FROM truth) AS n_truth_pairs,
 
 @register("dedup_lsh_recall_eval", oracle=_lsh_recall_oracle())
 def q_dedup_lsh_recall_eval(spark: SparkSession, sf_dir: str):
-    import os
-
     docs = table(spark, "documents", sf_dir)
     par = spark.sparkContext.defaultParallelism
-    handles: list = []
-    # one shingle pass feeds truth, signatures, AND verify (persisted, as in
+    # one shingle pass feeds truth, signatures, AND verify (reused, as in
     # operators.dedup.minhash_lsh_dedup_pairs)
-    sh = (
+    sh = reuse(
         docs.repartition(par, "doc_id")
         .select("doc_id", DD.shingles("text").alias("sh"))
         .filter(F.size("sh") > 0)
-        .persist()
     )
-    handles.append(sh)
     # exact truth via inverted index: only pairs sharing a shingle are
     # ever materialized (posting-list bounded, complete for jaccard > 0)
     ex = sh.select("doc_id", F.size("sh").alias("n"), F.explode("sh").alias("sg"))
@@ -2717,9 +2713,7 @@ def q_dedup_lsh_recall_eval(spark: SparkSession, sf_dir: str):
         for i in range(MINHASH_K)
     ]
     sigs = exploded.groupBy("doc_id").agg(*aggs)
-    cand = DD.lsh_candidate_pairs(
-        sigs, k=MINHASH_K, bands=MINHASH_BANDS, cache_registry=handles
-    )
+    cand = DD.lsh_candidate_pairs(sigs, k=MINHASH_K, bands=MINHASH_BANDS)
     verified = DD.jaccard_verify(cand, docs, threshold=0.5)
     row = (
         truth.agg(F.count(F.lit(1)).alias("n_truth_pairs"))
@@ -2751,10 +2745,6 @@ def q_dedup_lsh_recall_eval(spark: SparkSession, sf_dir: str):
             ).alias("candidate_precision"),
         )
     )
-    if os.environ.get("SPARK_GRAFT_SCOPED_CACHE", "1") != "0":
-        row = row.localCheckpoint(eager=True)
-        for h in handles:
-            h.unpersist()
     return row
 
 
@@ -2921,9 +2911,6 @@ ORDER BY v.dim
 
 @register("emb_top_pc_power_iteration", oracle=_top_pc_oracle())
 def q_emb_top_pc_power_iteration(spark: SparkSession, sf_dir: str):
-    import os
-
-    scoped = os.environ.get("SPARK_GRAFT_SCOPED_CACHE", "1") != "0"
     emb = table(spark, "embeddings", sf_dir)
     # values quantize to a 1e7 INTEGER grid (fast long multiplies; only
     # the overflow-safe sum is DECIMAL(38,0)), and the outer product is a
@@ -2962,22 +2949,19 @@ def q_emb_top_pc_power_iteration(spark: SparkSession, sf_dir: str):
             .alias("g")
         )
     )
-    # ALWAYS materialize: gram is the one corpus-sized pass and is
-    # referenced by every iteration plus the Rayleigh/trace legs (~6
-    # subtree reuses) — without the eager cut each reference recomputes
-    # the full explode self-join (measured 6-10s vs ~2s at sf0.1). The
-    # operator is therefore two-phase like dedup_clusters and is timed
-    # in bench's ITERATIVE wall-clock lane, which brackets from build.
-    gram = gram.localCheckpoint(eager=True)
+    # gram is the one corpus-sized pass and is referenced by every
+    # iteration plus the Rayleigh/trace legs (~6 subtree reuses) --
+    # without the cut each reference recomputes the full explode
+    # self-join (measured 6-10s vs ~2s at sf0.1)
+    gram = reuse(gram)
     dims = gram.select(F.col("d").alias("dim")).distinct()
     v = dims.withColumn("v", F.lit(1000000).cast("long"))
     for _ in range(_PC_ITERS):
         # round-11 F4: each iteration references v twice (w join + the
-        # max-normalizer crossJoin), so the uncut bench-mode lineage
-        # doubled per iteration -- the before-plan held 522 Exchanges of
-        # tiny re-derived joins. LAZY checkpoint in bench mode cuts the
-        # plan while keeping all compute inside the timed action.
-        v = v.localCheckpoint(eager=scoped)
+        # max-normalizer crossJoin), so the uncut lineage doubled per
+        # iteration -- the before-plan held 522 Exchanges of tiny
+        # re-derived joins
+        v = reuse(v)
         w = (
             gram.join(v, gram.e == v.dim)
             .groupBy(F.col("d").alias("dim"))
@@ -2990,7 +2974,7 @@ def q_emb_top_pc_power_iteration(spark: SparkSession, sf_dir: str):
         )
     # F4: the final iterate feeds nrm, both Rayleigh legs, den and the
     # output projection (5 references) -- cut once more after the loop
-    v = v.localCheckpoint(eager=scoped)
+    v = reuse(v)
     nrm = v.agg(F.sqrt(F.sum(F.col("v") * 1.0 * F.col("v"))).alias("l2"))
     # Rayleigh quotient v'Gv / v'v: per-term floor-quantization (the
     # g*v1 product stays exact BIGINT, the second multiply runs in
@@ -3038,8 +3022,6 @@ def q_emb_top_pc_power_iteration(spark: SparkSession, sf_dir: str):
         )
         .orderBy("dim")
     )
-    if scoped:
-        out = out.localCheckpoint(eager=True)
     return out
 
 
@@ -3115,7 +3097,7 @@ def q_emb_kcenter_seeds(spark: SparkSession, sf_dir: str):
         .cast("long")
         .alias("qi"),
     )
-    ex = ex.localCheckpoint(eager=True)  # one corpus pass feeds every round
+    ex = reuse(ex)  # one corpus pass feeds every round
     s1 = ex.agg(F.min("vec_id").alias("vid"))
     seed_vec = ex.join(s1, ex.vec_id == s1.vid).select("dim", "qi")
     mind = (
@@ -3131,7 +3113,7 @@ def q_emb_kcenter_seeds(spark: SparkSession, sf_dir: str):
     chosen = [s1.select(F.lit(1).alias("seed_rank"), F.col("vid").alias("vec_id"),
                         F.lit(0).cast("long").alias("chosen_d2"))]
     for i in range(1, _KC_ROUNDS + 1):
-        mind = mind.localCheckpoint(eager=True)
+        mind = reuse(mind)
         nxt = mind.orderBy(F.col("d2").desc(), "vec_id").limit(1)
         chosen.append(
             nxt.select(
@@ -3734,7 +3716,7 @@ def q_text_bpe_merge_step(spark: SparkSession, sf_dir: str):
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    words = words.persist()
+    words = reuse(words)
     pairs = (
         words.filter(F.length("w") >= 2)
         .select(
@@ -3769,16 +3751,6 @@ def q_text_bpe_merge_step(spark: SparkSession, sf_dir: str):
         F.sum(F.col("c") * F.col("len_before")).cast("bigint").alias("symbols_before"),
         F.sum(F.col("c") * F.col("len_after")).cast("bigint").alias("symbols_after"),
     ).withColumnRenamed("pair", "best_pair")
-    # scoped-cache hygiene (same convention as quality_profile): under the
-    # default, materialize the one-row result eagerly and release the
-    # vocab cache instead of leaking the persist handle past the builder;
-    # with SPARK_GRAFT_SCOPED_CACHE=0 (bench lazy-bracket mode) the plan
-    # stays lazy and the caller owns eviction.
-    import os
-
-    if os.environ.get("SPARK_GRAFT_SCOPED_CACHE", "1") != "0":
-        out = out.localCheckpoint(eager=True)
-        words.unpersist()
     return out
 
 

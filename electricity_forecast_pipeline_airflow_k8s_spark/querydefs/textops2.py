@@ -20,6 +20,7 @@ from electricity_forecast_pipeline_airflow_k8s_spark.operators import dedup as D
 from electricity_forecast_pipeline_airflow_k8s_spark.operators import text as TX
 from electricity_forecast_pipeline_airflow_k8s_spark.operators.partitioning import (
     fanout,
+    reuse,
 )
 from electricity_forecast_pipeline_airflow_k8s_spark.queries import register, table
 from electricity_forecast_pipeline_airflow_k8s_spark.querydefs.textops import _TOKS
@@ -414,10 +415,6 @@ def containment_pairs(docs):
     frame -- the inverted-index posting join with the _CONT_DF_CAP
     stop-shingle guard (the lane body, parametrized so the 10x stress can
     drive it on a boilerplate-injected corpus)."""
-    from electricity_forecast_pipeline_airflow_k8s_spark.operators.partitioning import (
-        fanout,
-    )
-
     # round-11 (guide §2.5): fan the narrow (doc_id, text) frame out
     # before the shingle build -- a single-row-group input ran the whole
     # shingle explode on one core; no-op at real scale.
@@ -433,9 +430,9 @@ def containment_pairs(docs):
     # round-11 (guide §2.4/§5): the capped posting list feeds sizes AND
     # both sides of the pair join -- without a lineage cut each reference
     # re-derives the shingle explode + DF-cap join (3 more corpus passes).
-    # LAZY localCheckpoint: materializes once inside the first action
-    # (honest bench bracket), every consumer reads the stored blocks.
-    ex = ex0.join(keep.select("sg"), "sg").localCheckpoint(eager=False)
+    # The cut materializes once inside the first action; every consumer
+    # reads the stored blocks.
+    ex = reuse(ex0.join(keep.select("sg"), "sg"))
     sizes = ex.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     # shared-shingle counts computed UNDIRECTED (a < b) -- half the join
     # output -- then both orientations emitted from the tiny pair frame
@@ -528,9 +525,8 @@ def _span_gram_positions(toks):
     )
     # round-11 F4 (guide §2.4): pos feeds BOTH the document-frequency
     # aggregate and the caller's join-back, so the corpus-wide 5-gram
-    # explode evaluated twice. LAZY cut: materialized once inside the
-    # first timed action.
-    pos = pos.localCheckpoint(eager=False)
+    # explode evaluated twice; the cut materializes it once.
+    pos = reuse(pos)
     dfreq = (
         pos.groupBy("g")
         .agg(F.count_distinct("doc_id").alias("ndocs"))

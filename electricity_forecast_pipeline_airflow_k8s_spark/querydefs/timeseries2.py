@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from electricity_forecast_pipeline_airflow_k8s_spark.functions.stats import (
     portable_round,
 )
+from electricity_forecast_pipeline_airflow_k8s_spark.operators.partitioning import reuse
 from electricity_forecast_pipeline_airflow_k8s_spark.queries import register, table
 from electricity_forecast_pipeline_airflow_k8s_spark.querydefs.validation import (
     EVENTS_SRC,
@@ -1366,8 +1367,6 @@ FROM slopes GROUP BY 1 ORDER BY 1
 """.format(EVENTS_SRC=EVENTS_SRC),
 )
 def q_ts_theilsen_trend(spark: SparkSession, sf_dir: str):
-    import os
-
     daily = (
         table(spark, "events", sf_dir)
         .filter(F.col("ts").isNotNull() & F.col("value").isNotNull())
@@ -1376,11 +1375,9 @@ def q_ts_theilsen_trend(spark: SparkSession, sf_dir: str):
     )
     # the self-join would otherwise scan+aggregate events TWICE (the two
     # branches plan different exchange types, so ReuseExchange cannot
-    # stamp them): persist the calendar-sized partials — groups x days
-    # rows — so the fact scan runs once (pagerank's scoped-cache pattern;
-    # bench mode keeps the plan lazy for honest timing)
-    if os.environ.get("SPARK_GRAFT_SCOPED_CACHE", "1") != "0":
-        daily = daily.persist()
+    # stamp them): reuse the calendar-sized partials — groups x days
+    # rows — so the fact scan runs once (pagerank's pattern)
+    daily = reuse(daily)
     a, b = daily.alias("a"), daily.alias("b")
     slopes = a.join(
         b,

@@ -50,6 +50,11 @@ def get_spark(
     to ``local[$SPARK_GRAFT_CPUS]`` with shuffle partitions matched to cores
     (at cluster scale, shuffle partitions should be sized so each partition
     stays ~100-200 MiB; AQE coalescing then trims the tail).
+
+    ``SPARK_GRAFT_CHECKPOINT_DIR`` (HDFS or the object store on a cluster)
+    becomes the context's checkpoint dir, which switches
+    ``operators.partitioning.reuse`` from ``localCheckpoint`` to reliable
+    checkpoints that survive executor loss.
     """
     cpus = default_parallelism()
     builder = SparkSession.builder.appName(app_name)
@@ -61,7 +66,11 @@ def get_spark(
         conf.update(extra_conf)
     for k, v in conf.items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    ckdir = os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")
+    if ckdir:
+        spark.sparkContext.setCheckpointDir(ckdir)
+    return spark
 
 
 def s3a_conf(

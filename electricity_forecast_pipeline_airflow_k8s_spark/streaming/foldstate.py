@@ -94,4 +94,5 @@ def fold_stream_state(
             final = fold(None, spark.read.schema(schema).parquet(src)).limit(0)
         else:
             final = spark.read.parquet(versions[-1][1])
+        # eager, not reuse(): the state files under tmp vanish on return
         return finalize(final).localCheckpoint(eager=True)

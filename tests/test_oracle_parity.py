@@ -76,3 +76,40 @@ def test_slow_parity_lanes_are_green_in_committed_sweep():
         if sweep.get(n, {}).get("status") not in ("MATCH", "NUMPY-MATCH")
     }
     assert not bad, f"opt-in parity lanes lack green sweep evidence: {bad}"
+
+
+def test_pq_lane_follows_corpus_rewritten_in_place(spark, sf_dir, tmp_path):
+    """The PQ codebook is trained from the corpus as it is at build time.
+    A codebook cached per corpus path would survive an in-place rewrite of
+    the embeddings and serve assignments the rewritten corpus's oracle
+    rejects."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from electricity_forecast_pipeline_airflow_k8s_spark.sources.tables import TABLES
+
+    for t in TABLES:
+        if t != "embeddings":
+            os.symlink(os.path.join(sf_dir, f"{t}.parquet"), tmp_path / f"{t}.parquet")
+    emb = pq.read_table(os.path.join(sf_dir, "embeddings.parquet"))
+    dest = tmp_path / "embeddings.parquet"
+    pq.write_table(emb, dest)
+    assert compare(spark, "emb_pq_assign", str(tmp_path))["ok"]
+
+    # same ids and shapes, different vectors: every embedding reversed
+    vecs = emb.column("embedding").to_pylist()
+    flipped = pa.array(
+        [None if v is None else v[::-1] for v in vecs],
+        type=emb.schema.field("embedding").type,
+    )
+    rewritten = emb.set_column(
+        emb.schema.get_field_index("embedding"), "embedding", flipped
+    )
+    old_values = pc.list_flatten(emb.column("embedding"))
+    assert not pc.all(pc.equal(pc.list_flatten(flipped), old_values)).as_py()
+    staged = tmp_path / "embeddings.parquet.tmp"
+    pq.write_table(rewritten, staged)
+    os.replace(staged, dest)
+    res = compare(spark, "emb_pq_assign", str(tmp_path))
+    assert res["ok"], res

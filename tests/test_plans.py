@@ -65,19 +65,14 @@ def test_quality_profile_scale_windows_never_partition_rows_by_group_alone(
     group key alone (that caps parallelism at the group count). Row-level
     lag windows must partition by (group, bucket); the only group-keyed
     window allowed is the boundary pass over the tiny per-bucket
-    aggregate.
-
-    Built with scoped_cache=False: the registered query eagerly
-    checkpoints its tiny result (cache hygiene), which hides the logical
-    plan this test inspects."""
+    aggregate."""
     from electricity_forecast_pipeline_airflow_k8s_spark.operators.profile import (
         quality_profile_scale,
     )
 
     ev = load_table(spark, "events", sf_dir)
     q = quality_profile_scale(
-        ev, group_col="event_type", ts_col="ts", value_col="value",
-        scoped_cache=False,
+        ev, group_col="event_type", ts_col="ts", value_col="value"
     )
     plan = explain_str(q)
     # the row-level gap window shuffles on (event_type, _bkt)
@@ -435,13 +430,12 @@ def test_ivfpq_recall_probes_broadcast_corpus_never_nested_loop(spark, sf_dir):
             assert "query_id" in ln, ln
 
 
-def test_inc_minhash_probe_side_filtered_below_join(spark, sf_dir, monkeypatch):
+def test_inc_minhash_probe_side_filtered_below_join(spark, sf_dir):
     """inc_minhash_new_batch: the candidate join must be (full banded
     index) x (BATCH-FILTERED bands) -- the probe never becomes full x
     full. Pin: the batch predicate (doc_id % 10 = 9) sits below the
     band/hash equi-join as a Filter on exactly one join input, and the
     join itself is an equi-join (no cartesian)."""
-    monkeypatch.setenv("SPARK_GRAFT_SCOPED_CACHE", "0")
     q = registry()["inc_minhash_new_batch"].build(spark, sf_dir)
     plan = q._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan and "NestedLoop" not in plan, plan[:2000]

@@ -419,7 +419,6 @@ def test_quality_profile_scale_task_shape_groups_x_buckets_10x(spark, events_10x
             group_col="event_type",
             ts_col="ts",
             value_col="value",
-            scoped_cache=False,
         )
         ._jdf.queryExecution()
         .executedPlan()

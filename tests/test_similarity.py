@@ -121,9 +121,9 @@ def test_exact_dedup_keeps_one_per_duplicate(spark):
 
 
 def test_lsh_pipeline_leaves_no_cached_blocks(spark):
-    """Scoped-cache hygiene (VERDICT r2 item 7): the LSH pipeline persists
-    two intermediates internally; after the terminal action completes the
-    cache manager must be empty again."""
+    """Cache hygiene (VERDICT r2 item 7): the LSH pipeline reuses two
+    intermediates internally (lazy checkpoints, not cache entries); after
+    the terminal action completes the cache manager must be empty."""
     df = spark.createDataFrame(
         [(i, f"the quick brown fox jumps over dog {i % 3}") for i in range(20)],
         "doc_id long, text string",

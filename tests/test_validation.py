@@ -249,7 +249,7 @@ def test_quality_profile_grid_mode_rollup_single_fact_scan(spark, sf_dir):
     ev = load_table(spark, "events", sf_dir)
     q = quality_profile_scale(
         ev, group_col="event_type", ts_col="ts", value_col="value",
-        quantile_mode="grid", scoped_cache=False,
+        quantile_mode="grid",
     )
     plan = q._jdf.queryExecution().executedPlan().toString()
     assert "Expand" in plan, plan[:1500]

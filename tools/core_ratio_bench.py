@@ -48,7 +48,6 @@ LANES = [
 
 
 def main() -> int:
-    os.environ["SPARK_GRAFT_SCOPED_CACHE"] = "0"  # bench timing convention
     only = [a for a in sys.argv[1:] if not a.startswith("--")]
 
     import bench

@@ -184,9 +184,6 @@ SHOWCASE = [
 
 
 def main() -> None:
-    # lazy plans: the scoped-cache eager checkpoints would otherwise hide
-    # the logical structure behind a Scan ExistingRDD
-    os.environ["SPARK_GRAFT_SCOPED_CACHE"] = "0"
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark(app_name="plan-dump")
     spark.sparkContext.setLogLevel("ERROR")

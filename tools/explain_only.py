@@ -12,8 +12,6 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-os.environ.setdefault("SPARK_GRAFT_SCOPED_CACHE", "0")
-
 from electricity_forecast_pipeline_airflow_k8s_spark.plans.inspect import (  # noqa: E402
     explain_str,
 )

@@ -19,8 +19,6 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-os.environ.setdefault("SPARK_GRAFT_SCOPED_CACHE", "0")
-
 from electricity_forecast_pipeline_airflow_k8s_spark.queries import queries as all_queries  # noqa: E402
 from electricity_forecast_pipeline_airflow_k8s_spark.session import get_spark  # noqa: E402
 

@@ -7,7 +7,7 @@ this tool converts it into a committed timing artifact: every ITERATIVE
 lane plus the top HEADLINE lanes run at BOTH sf0.1 and a 10x inflation of
 sf0.1, in one session, same timing convention as bench.py (lazy-plan noop
 bracket for headline lanes, build-inclusive wall-clock for iterative
-lanes, SPARK_GRAFT_SCOPED_CACHE=0). The committed output is
+lanes). The committed output is
 BENCH_LEDGER/scale10x.json; SCALING.md summarizes it.
 
 ## The 10x corpus (same recipes as tests/test_scale_stress.py)
@@ -215,7 +215,6 @@ def build_scale_dir(spark, src: str, dst: str) -> None:
 
 
 def main() -> int:
-    os.environ["SPARK_GRAFT_SCOPED_CACHE"] = "0"  # bench timing convention
     argv = [a for a in sys.argv[1:]]
     rebuild = "--rebuild" in argv
     force_error = "--force-error" in argv

@@ -15,7 +15,6 @@ import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-os.environ.setdefault("SPARK_GRAFT_SCOPED_CACHE", "0")
 
 from electricity_forecast_pipeline_airflow_k8s_spark.plans.inspect import explain_str  # noqa: E402
 from electricity_forecast_pipeline_airflow_k8s_spark.queries import queries as all_queries  # noqa: E402

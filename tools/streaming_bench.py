@@ -82,7 +82,6 @@ def effective_stream_budget(name: str) -> float:
 
 
 def main() -> int:
-    os.environ["SPARK_GRAFT_SCOPED_CACHE"] = "0"
     only = [a for a in sys.argv[1:] if not a.startswith("--")]
 
     from pyspark.sql.streaming import StreamingQueryListener
