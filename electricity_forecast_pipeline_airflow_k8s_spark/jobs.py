@@ -33,9 +33,7 @@ from electricity_forecast_pipeline_airflow_k8s_spark.sources.snapshots import (
     latest_snapshot,
     list_snapshots,
 )
-from electricity_forecast_pipeline_airflow_k8s_spark.sources.tables import (
-    _parquet_ts_is_nanos,
-)
+from electricity_forecast_pipeline_airflow_k8s_spark.sources.tables import read_parquet
 
 
 def prepare_job(
@@ -49,31 +47,10 @@ def prepare_job(
     retention, plus the drift check the reference only configured
     (`config.yaml:44-47`): PSI + KS between the trailing week and the rest
     of the new batch."""
-    # tolerate TIMESTAMP(NANOS)/MICROS-ntz parquet (same handling as
-    # sources/tables.py, with the conf scoped so it can't leak into later
-    # reads in the same session)
-    conf_key = "spark.sql.legacy.parquet.nanosAsLong"
-    prior = spark.conf.get(conf_key, None)
-    spark.conf.set(conf_key, "true")
-    try:
-        raw = spark.read.parquet(input_path)
-        if "ts" in raw.columns and "period" not in raw.columns:
-            dtype = dict(raw.dtypes).get("ts")
-            if dtype == "bigint":
-                # only TIMESTAMP(NANOS) per the footer gets the div-1000;
-                # a genuine int64 ts passes through untouched (ADVICE r3)
-                if _parquet_ts_is_nanos(input_path):
-                    raw = raw.withColumn(
-                        "ts", F.timestamp_micros(F.expr("ts div 1000"))
-                    )
-            elif dtype == "timestamp_ntz":
-                raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-            raw = events_as_readings(raw)
-    finally:
-        if prior is None:
-            spark.conf.unset(conf_key)
-        else:
-            spark.conf.set(conf_key, prior)
+    # the loader's footer-pinned read: any `ts` precision lands as TIMESTAMP
+    raw = read_parquet(spark, input_path)
+    if "ts" in raw.columns and "period" not in raw.columns:
+        raw = events_as_readings(raw)
     res = run_preparation(spark, raw, lake_root, run_ts=run_ts, fail_on_errors=False)
 
     normalized = normalize_readings(raw)

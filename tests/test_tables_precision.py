@@ -11,12 +11,16 @@ build silently again.
 """
 
 import datetime
+import os
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from electricity_forecast_pipeline_airflow_k8s_spark.sources.tables import load_table
+from pyspark.sql.types import StructType, TimestampType
+
+from electricity_forecast_pipeline_airflow_k8s_spark.pipeline import run_preparation
+from electricity_forecast_pipeline_airflow_k8s_spark.sources.tables import TABLES, load_table
 
 ROWS = [
     (1, datetime.datetime(2024, 1, 1, 0, 0, 0, 0), 10, "a", 1.0, "{}"),
@@ -70,18 +74,26 @@ def test_events_ts_loads_as_timestamp(spark, tmp_path, label, ts_type):
     assert gaps == [30_500_000, 89_750_000], f"{label}: gaps {gaps}"
 
 
-def test_events_nanos_conf_restored(spark, tmp_path):
-    """The nanos-as-long conf must not leak past load_table (ADVICE r2):
-    whatever the conf was before the read, it must be after."""
+def test_events_nanos_read_without_nanos_as_long(spark, tmp_path):
+    """The nanos decision comes from the footer, not from the session: with
+    the legacy nanos-as-long conf unset or explicitly false, a
+    TIMESTAMP(NANOS) ts still reads to the exact microsecond values, and
+    the conf is left as it was found."""
     conf_key = "spark.sql.legacy.parquet.nanosAsLong"
-    spark.conf.unset(conf_key)
     _write_events(str(tmp_path), pa.timestamp("ns"))
-    load_table(spark, "events", str(tmp_path))
-    assert spark.conf.get(conf_key, None) in (None, "false")
-    # and a preexisting explicit value is restored, not clobbered
-    spark.conf.set(conf_key, "false")
-    load_table(spark, "events", str(tmp_path))
-    assert spark.conf.get(conf_key, None) == "false"
+    try:
+        for prior in (None, "false"):
+            if prior is None:
+                spark.conf.unset(conf_key)
+            else:
+                spark.conf.set(conf_key, prior)
+            df = load_table(spark, "events", str(tmp_path))
+            assert dict(df.dtypes)["ts"] == "timestamp"
+            got = sorted(r["ts"] for r in df.select("ts").collect())
+            assert got == sorted(r[1] for r in ROWS), prior
+            assert spark.conf.get(conf_key, None) == prior
+    finally:
+        spark.conf.unset(conf_key)
 
 
 def test_events_plain_int64_ts_not_corrupted(spark, tmp_path):
@@ -105,45 +117,156 @@ def test_events_plain_int64_ts_not_corrupted(spark, tmp_path):
     assert sorted(r["ts"] for r in df.select("ts").collect()) == micros
 
 
-def test_footer_check_raises_on_unreadable_footer(tmp_path, monkeypatch):
-    """An unreadable footer for a bigint ts must be an error, not a silent
-    nanos guess (ADVICE r3): either wrong guess corrupts the column."""
-    from electricity_forecast_pipeline_airflow_k8s_spark.sources.tables import (
-        _parquet_ts_is_nanos,
+def test_footer_check_raises_on_unreadable_footer(spark, tmp_path):
+    """Every load reads the footer, so a path whose footer cannot be read
+    cannot be loaded: an error naming the path, not a guessed schema --
+    for a missing file and for one that is not parquet."""
+    path = str(tmp_path / "events.parquet")
+    for content in (None, b"not a parquet file"):
+        if content is not None:
+            (tmp_path / "events.parquet").write_bytes(content)
+        with pytest.raises(ValueError, match="parquet footer") as err:
+            load_table(spark, "events", str(tmp_path))
+        assert path in str(err.value)
+
+
+def test_nanos_column_other_than_ts_raises(spark, tmp_path):
+    """Spark has no nanosecond type. Only the events ``ts`` is read as raw
+    nanos and truncated; any other TIMESTAMP(NANOS) column is an error
+    naming it, never a silent bigint."""
+    table = pa.table(
+        {
+            "o_orderkey": pa.array([1, 2], pa.int64()),
+            "o_orderdate": pa.array(
+                [datetime.datetime(2024, 1, 1), datetime.datetime(2024, 1, 2)]
+            ).cast(pa.timestamp("ns")),
+        }
     )
-
-    missing = str(tmp_path / "does_not_exist.parquet")
-    monkeypatch.delenv("SPARK_GRAFT_BIGINT_TS", raising=False)
-    with pytest.raises(ValueError, match="parquet footer"):
-        _parquet_ts_is_nanos(missing)
-    # the documented escape hatch for footer-unreachable filesystems
-    monkeypatch.setenv("SPARK_GRAFT_BIGINT_TS", "ns")
-    assert _parquet_ts_is_nanos(missing) is True
-    monkeypatch.setenv("SPARK_GRAFT_BIGINT_TS", "raw")
-    assert _parquet_ts_is_nanos(missing) is False
+    pq.write_table(table, f"{tmp_path}/orders.parquet")
+    with pytest.raises(ValueError, match="'o_orderdate'.*TIMESTAMP\\(NANOS\\)"):
+        load_table(spark, "orders", str(tmp_path))
 
 
-def test_prepare_job_does_not_divide_plain_int64_ts(spark, tmp_path):
-    """jobs.prepare_job must route its bigint-ts conversion through the
-    same footer check as load_table (ADVICE r3): a genuine int64 ts fed to
-    the job is not divided by 1000."""
-    from electricity_forecast_pipeline_airflow_k8s_spark.sources.tables import (
-        _parquet_ts_is_nanos,
+def test_unmapped_arrow_type_raises(spark, tmp_path):
+    """A footer type the arrow-to-Spark mapping cannot convert is an error
+    naming the column."""
+    table = pa.table(
+        {
+            "r_regionkey": pa.array([0, 1], pa.int32()),
+            "r_code": pa.array([7, 8], pa.uint32()),
+        }
     )
+    pq.write_table(table, f"{tmp_path}/region.parquet")
+    with pytest.raises(ValueError, match="'r_code'.*uint32"):
+        load_table(spark, "region", str(tmp_path))
 
+
+def _jobs_started(spark) -> int:
+    return spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs()
+
+
+def test_load_table_fires_no_job_and_matches_inferred_schema(spark, sf_dir):
+    """The schema is pinned from the footer on the driver, so loading a
+    table runs no Spark job, and the pinned schema is the one Spark's own
+    inference yields (events.ts aside, which the loader normalizes to a
+    session-TZ TIMESTAMP)."""
+    for name in TABLES:
+        before = _jobs_started(spark)
+        schema = load_table(spark, name, sf_dir).schema
+        assert _jobs_started(spark) == before, f"{name}: load_table ran a job"
+        inferred = spark.read.parquet(f"{sf_dir}/{name}.parquet").schema
+        if name == "events":
+            assert schema["ts"].dataType == TimestampType()
+            inferred = StructType([f for f in inferred if f.name != "ts"])
+            schema = StructType([f for f in schema if f.name != "ts"])
+        assert schema == inferred, name
+
+
+def test_spark_written_directory_round_trips(spark, sf_dir, tmp_path):
+    """Spark-written table directories (the scale-bench replicas) load
+    through the same footer read: the Spark schema stored in the footer
+    wins, so INT96 timestamps stay TIMESTAMP."""
+    src = load_table(spark, "events", sf_dir)
+    src.write.parquet(f"{tmp_path}/events.parquet")
+    back = load_table(spark, "events", str(tmp_path))
+    assert back.schema == src.schema
+    assert sorted(back.collect()) == sorted(src.collect())
+
+
+class _Stop(Exception):
+    pass
+
+
+def _capture_prepare_raw(monkeypatch, stop: bool):
+    """prepare_job with run_preparation spied on: the spy keeps the raw
+    frame prepare_job built from its input, then either delegates to the
+    real run_preparation or stops the job there."""
+    from electricity_forecast_pipeline_airflow_k8s_spark import jobs
+
+    seen = []
+
+    def spy(spark, raw, *args, **kwargs):
+        seen.append(raw)
+        if stop:
+            raise _Stop
+        return run_preparation(spark, raw, *args, **kwargs)
+
+    monkeypatch.setattr(jobs, "run_preparation", spy)
+    return jobs.prepare_job, seen
+
+
+def test_prepare_job_does_not_divide_plain_int64_ts(spark, tmp_path, monkeypatch):
+    """prepare_job reads through the loader's footer-pinned reader: a
+    genuine int64 ts is not divided by 1000. The job stops at
+    run_preparation there, since a bigint period is no timestamp for the
+    validation and drift steps to work on."""
+    prepare_job, seen = _capture_prepare_raw(monkeypatch, stop=True)
     micros = [1_704_067_200_000_000, 1_704_067_230_500_000]
     table = pa.table(
         {
             "event_id": pa.array([1, 2], pa.int64()),
             "ts": pa.array(micros, pa.int64()),
+            "event_type": pa.array(["a", "a"], pa.string()),
+            "value": pa.array([1.0, 2.0], pa.float64()),
         }
     )
     path = str(tmp_path / "raw.parquet")
     pq.write_table(table, path)
-    assert _parquet_ts_is_nanos(path) is False
-    # and a real nanos footer still converts
-    ts = [datetime.datetime(2024, 1, 1), datetime.datetime(2024, 1, 2)]
-    table_ns = pa.table({"ts": pa.array(ts).cast(pa.timestamp("ns"))})
-    path_ns = str(tmp_path / "raw_ns.parquet")
-    pq.write_table(table_ns, path_ns)
-    assert _parquet_ts_is_nanos(path_ns) is True
+    with pytest.raises(_Stop):
+        prepare_job(spark, path, f"file://{tmp_path}/lake", run_ts="20240101_000000")
+    assert sorted(r["period"] for r in seen[0].select("period").collect()) == micros
+
+
+def test_prepare_job_truncates_nanos_ts(spark, tmp_path, monkeypatch):
+    """A TIMESTAMP(NANOS) ts fed to prepare_job becomes the same
+    microsecond timestamps load_table yields, and the job runs through."""
+    prepare_job, seen = _capture_prepare_raw(monkeypatch, stop=False)
+    _write_events(str(tmp_path), pa.timestamp("ns"))
+    out = prepare_job(
+        spark, f"{tmp_path}/events.parquet", f"file://{tmp_path}/lake",
+        run_ts="20240101_000000",
+    )
+    got = sorted(r["period"] for r in seen[0].select("period").collect())
+    assert got == sorted(r[1] for r in ROWS)
+    assert out["record_count"] == len(ROWS)
+
+
+def test_no_package_module_mentions_nanos_as_long():
+    """The nanos decision lives in the footer read: no package module sets,
+    unsets or reads the legacy nanos-as-long conf, or the removed unit
+    override."""
+    pkg = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "electricity_forecast_pipeline_airflow_k8s_spark",
+    )
+    removed = ("nanos" + "AsLong", "SPARK_GRAFT_" + "BIGINT_TS")
+    bad = []
+    for dirpath, _, files in os.walk(pkg):
+        for f in files:
+            if not f.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, f)
+            with open(path) as fh:
+                src = fh.read()
+            bad += [f"{os.path.relpath(path, pkg)}: {word}" for word in removed if word in src]
+    assert not bad, bad
