@@ -30,6 +30,7 @@ from electricity_forecast_pipeline_airflow_k8s_spark.sources.normalize import (
     normalize_readings,
 )
 from electricity_forecast_pipeline_airflow_k8s_spark.sources.snapshots import (
+    apply_retention,
     latest_snapshot,
     list_snapshots,
 )
@@ -52,6 +53,8 @@ def prepare_job(
     if "ts" in raw.columns and "period" not in raw.columns:
         raw = events_as_readings(raw)
     res = run_preparation(spark, raw, lake_root, run_ts=run_ts, fail_on_errors=False)
+    for prefix in ("raw", "processed", "reports"):
+        apply_retention(spark, lake_root, prefix)
 
     normalized = normalize_readings(raw)
     # timestamp arithmetic, not date_sub: date_sub truncates to midnight,

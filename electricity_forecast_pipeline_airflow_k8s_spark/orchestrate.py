@@ -69,12 +69,10 @@ def run_dag(tasks: list[Task], ctx: Mapping[str, Any] | None = None) -> RunRepor
         missing = [d for d in t.deps if d not in by_name]
         if missing:
             raise ValueError(f"task {t.name!r} depends on unknown {missing}")
-    ts = TopologicalSorter({t.name: set(t.deps) for t in tasks})
     try:
-        order = list(ts.static_order())
+        TopologicalSorter({t.name: set(t.deps) for t in tasks}).prepare()
     except CycleError as e:
         raise ValueError(f"dependency cycle: {e.args[1]}") from e
-    # static_order is stable for ready-sets only per insertion; enforce a
     # deterministic total order: repeatedly take the lexicographically
     # smallest ready task
     done: set[str] = set()
@@ -87,7 +85,6 @@ def run_dag(tasks: list[Task], ctx: Mapping[str, Any] | None = None) -> RunRepor
         ordered.append(ready[0])
         done.add(ready[0])
         pending.remove(ready[0])
-    assert set(ordered) == set(order)
 
     ctx = dict(ctx or {})
     report = RunReport()
@@ -138,7 +135,8 @@ def electricity_dag(
       train            per-group ridge fit + metrics (the Katib/KFP stage,
                        ref generate_pipeline_parameters :481-:568)
       register         versioned params in the model registry
-      cleanup          snapshot retention (ref cleanup_old_files :570-631)
+      cleanup          snapshot retention, the run's only prune, after
+                       success (ref cleanup_old_files :570-631)
       notify           run summary dict (ref send_success_notification
                        :635-733) -- pure result assembly, no side channel
     """
@@ -164,9 +162,7 @@ def electricity_dag(
         return events_as_readings(ev)
 
     def t_prepare(ctx, results):
-        return run_preparation(
-            spark, results["extract"], root, run_ts, retention_keep
-        )
+        return run_preparation(spark, results["extract"], root, run_ts)
 
     def t_quality(ctx, results):
         prof = quality_profile(results["extract"])

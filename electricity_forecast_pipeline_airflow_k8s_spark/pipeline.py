@@ -42,7 +42,6 @@ from electricity_forecast_pipeline_airflow_k8s_spark.sources.normalize import (
     normalize_readings,
 )
 from electricity_forecast_pipeline_airflow_k8s_spark.sources.snapshots import (
-    apply_retention,
     write_snapshot,
 )
 
@@ -60,15 +59,17 @@ def run_preparation(
     raw: DataFrame,
     root: str,
     run_ts: str | None = None,
-    retention_keep: int = 10,
     fail_on_errors: bool = True,
 ) -> PreparationResult:
-    """extract->validate->persist->cleanup as one Spark app.
+    """extract->validate->persist as one Spark app.
 
-    Mirrors `core/airflow_dag.py:87-225,570-631`: raw snapshot, validation
+    Mirrors `core/airflow_dag.py:87-225`: raw snapshot, validation
     (raising on errors like the DAG's task failure), validated snapshot +
-    JSON report, then retention. Storage is Parquet snapshots instead of
-    CSV objects (SURVEY §4.2)."""
+    JSON report. Storage is Parquet snapshots instead of CSV objects
+    (SURVEY §4.2). Retention is the caller's step, run only after a
+    successful preparation, as the reference's cleanup_old_files
+    (`core/airflow_dag.py:570-631`) runs only after its upstream tasks
+    succeed: the DAG's cleanup task, or jobs.prepare_job."""
     normalized = normalize_readings(raw)
     raw_path = write_snapshot(normalized, root, "raw", run_ts)
 
@@ -83,9 +84,6 @@ def run_preparation(
         [(json.dumps(report.as_dict()),)], "report string"
     ).coalesce(1)
     write_snapshot(report_df, root, "reports", run_ts)
-
-    for prefix in ("raw", "processed", "reports"):
-        apply_retention(spark, root, prefix, keep=retention_keep)
 
     if fail_on_errors and not report.is_valid:
         raise ValueError(f"validation failed: {report.errors}")

@@ -11,7 +11,7 @@ order-insensitive value-hash matches.
 from __future__ import annotations
 
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -22,7 +22,6 @@ from electricity_forecast_pipeline_airflow_k8s_spark.sources.tables import load_
 class Query:
     build: Callable[[SparkSession, str], DataFrame]
     oracle: str | None = None
-    tags: tuple[str, ...] = field(default_factory=tuple)
 
 
 _REGISTRY: dict[str, Query] = {}
@@ -385,9 +384,9 @@ _VERIFICATION_WINDOW: tuple[str, ...] = (
 
 
 
-def register(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
+def register(name: str, oracle: str | None = None):
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        _REGISTRY[name] = Query(fn, oracle, tags)
+        _REGISTRY[name] = Query(fn, oracle)
         return fn
 
     return deco

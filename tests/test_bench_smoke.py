@@ -1,61 +1,56 @@
-"""Bench smoke gate (VERDICT r2 item 5): every bench.py HEADLINE query
-must build and materialize at sf0.001 through the same noop sink the bench
-uses. Round 2's bench crashed (rc 1, no timings) on a loader regression
-that this test now catches locally before the driver's per-round bench
-run ever sees it.
+"""Bench smoke gate (VERDICT r2 item 5): every lane bench.py times must
+be registered and build its plan, and the bench's one timer (time_lane)
+must count a builder's jobs in the lane's time. Round 2's bench crashed
+(rc 1, no timings) on a loader regression that this file now catches
+locally before the driver's per-round bench run ever sees it.
 """
 
 import os
+import time
 
 import pytest
 
 import bench
 from electricity_forecast_pipeline_airflow_k8s_spark.queries import (
     queries as all_queries,
+    registry,
 )
 
 
 def test_every_bench_lane_is_registered_and_headline_plans_build(spark, sf_dir):
     """Round-12 (VERDICT r11 item 2): the per-lane noop materialization
-    of all 331 bench lanes duplicated test_oracle_parity -- the whole
-    registry already MATERIALIZES there (compare() collects every lane)
-    in the same session, and HEADLINE+ITERATIVE+STREAMING == registry is
-    pinned below -- while costing 346 s of the suite's 1,815 s. What
-    bench.py can still break on its own is a dangling lane name or a
-    query whose PLAN no longer builds; both are caught here by building
-    (analyzing) every HEADLINE plan without running it. ITERATIVE lanes
-    run jobs at build time by design, so they are exercised through
-    oracle parity only. The full materialize-everything loop remains
-    available opt-in (SPARK_GRAFT_SLOW_TESTS=1) below."""
+    of every bench lane duplicated test_oracle_parity -- the whole registry
+    already MATERIALIZES there (compare() collects every lane) in the same
+    session. What bench.py can still break on its own is a dangling lane
+    name or a query whose PLAN no longer builds; both are caught here by
+    building (analyzing) every timed lane's plan without materializing it.
+    Builders that run jobs (lineage cuts, boundary collects, fixed-point
+    iterations) run them here too, at sf0.001. The full
+    materialize-everything loop remains available opt-in
+    (SPARK_GRAFT_SLOW_TESTS=1) below."""
     qs = all_queries()
-    missing = [n for n in bench.HEADLINE + bench.ITERATIVE if n not in qs]
-    assert not missing, f"bench references unregistered queries: {missing}"
-    for name in bench.HEADLINE:
-        df = qs[name](spark, sf_dir)
-        df.schema  # forces analysis; no job runs
+    for name in bench.timed_lanes():
+        qs[name](spark, sf_dir).schema  # forces analysis of the returned plan
 
 
 @pytest.mark.skipif(
     os.environ.get("SPARK_GRAFT_SLOW_TESTS") != "1",
     reason="opt-in: materializes every bench lane (set SPARK_GRAFT_SLOW_TESTS=1)",
 )
-@pytest.mark.parametrize("name", bench.HEADLINE + bench.ITERATIVE)
+@pytest.mark.parametrize("name", bench.timed_lanes())
 def test_bench_lane_materializes(spark, sf_dir, name):
-    qs = all_queries()
-    qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+    bench.time_lane(spark, all_queries()[name], sf_dir)
 
 
 def test_every_budget_key_is_benched():
-    """BUDGETS must stay in sync with the benched query set -- a budget for
-    a query that no longer runs is dead weight, a benched headline query
-    without a budget escapes the regression gate."""
-    benched = set(bench.HEADLINE) | set(bench.ITERATIVE)
-    assert set(bench.BUDGETS) <= benched, set(bench.BUDGETS) - benched
-    # every HEADLINE lane needs a budget; ITERATIVE lanes may carry one
-    # (their timings feed the same over_budget check) but are not required
-    # to — the two CC lanes predate per-lane budgets
-    missing = set(bench.HEADLINE) - set(bench.BUDGETS)
-    assert not missing, f"headline queries without a budget: {missing}"
+    """BUDGETS is keyed by exactly the timed lanes -- a budget for a query
+    that no longer runs is dead weight, a timed lane without a budget
+    escapes the regression gate."""
+    lanes = set(bench.timed_lanes())
+    assert set(bench.BUDGETS) == lanes, (
+        f"stale budgets: {sorted(set(bench.BUDGETS) - lanes)}; "
+        f"unbudgeted lanes: {sorted(lanes - set(bench.BUDGETS))}"
+    )
 
 
 @pytest.mark.skipif(
@@ -84,23 +79,15 @@ def test_headline_queries_within_budget():
 
 
 def test_bench_covers_registry():
-    """Ledger-coverage pin (VERDICT r8 item 3): every registry query is
-    either timed (HEADLINE / ITERATIVE) or on the documented streaming
-    exclusion list -- no lane can silently fall out of the perf gate --
-    and no lane is double-listed."""
-    from electricity_forecast_pipeline_airflow_k8s_spark.queries import registry
-
-    reg = set(registry())
-    h, it, ex = (
-        set(bench.HEADLINE),
-        set(bench.ITERATIVE),
-        set(bench.STREAMING_EXCLUDED),
-    )
-    assert not (h & it) and not (h & ex) and not (it & ex)
-    benched = h | it | ex
-    assert benched == reg, (
-        f"unbenched: {sorted(reg - benched)}; stale: {sorted(benched - reg)}"
-    )
+    """Ledger-coverage pin (VERDICT r8 item 3): the timed lanes are the
+    registry minus the stream_* lanes, in registry order -- no batch lane
+    can silently fall out of the perf gate -- and every stream_* lane
+    (timed into BENCH_LEDGER/streaming.json instead) is excluded."""
+    reg = list(registry())
+    lanes = bench.timed_lanes()
+    assert lanes == [n for n in reg if not n.startswith("stream_")]
+    streaming = set(reg) - set(lanes)
+    assert streaming and all(n.startswith("stream_") for n in streaming)
 
 
 def test_compact_stdout_line_fits_driver_tail():
@@ -138,3 +125,60 @@ def test_compact_stdout_line_fits_driver_tail():
     assert len(line) <= 1900
     d = json.loads(line)
     assert d["over_budget_total"] == 330
+
+
+def _jobs_started(spark) -> int:
+    return spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs()
+
+
+def test_time_lane_counts_build_jobs_in_build_s(spark, sf_dir):
+    """A builder that runs a Spark job before returning its lazy frame
+    shows that job inside build_s; a lazy builder fires no job before the
+    write, and the write's jobs land in exec_s."""
+    seen = {}
+
+    def eager(spark, sf_dir):
+        j0, t0 = _jobs_started(spark), time.perf_counter()
+        spark.range(1000).collect()
+        seen["eager_s"] = time.perf_counter() - t0
+        seen["eager_jobs"] = _jobs_started(spark) - j0
+        return spark.range(10)
+
+    def lazy(spark, sf_dir):
+        seen["lazy_jobs_at_return"] = _jobs_started(spark)
+        return spark.range(10).selectExpr("id * 2 AS x")
+
+    build_s, exec_s = bench.time_lane(spark, eager, sf_dir)
+    assert seen["eager_jobs"] == 1
+    assert build_s >= round(seen["eager_s"], 3) > 0
+    assert exec_s > 0
+
+    j0 = _jobs_started(spark)
+    build_s, exec_s = bench.time_lane(spark, lazy, sf_dir)
+    assert seen["lazy_jobs_at_return"] == j0  # nothing ran before the write
+    assert _jobs_started(spark) > j0  # the noop write ran the plan
+    assert exec_s > 0
+
+
+def test_bench_payload_is_self_describing(spark, sf_dir):
+    """The ledger payload pins its keys: per-lane build/exec splits of the
+    best pass beside the per-lane totals, both split sums, and the run's
+    provenance (cpus, master, sf, git sha)."""
+    lanes = ["val_summary", "rel_topk_orders"]
+    payload = bench.run_bench(spark, lanes, sf_dir, sf_dir, n_iter=1)
+    assert set(payload) == {
+        "metric", "value", "unit", "queries", "splits", "build_s_total",
+        "exec_s_total", "n_iter", "retried_lanes", "retried", "over_budget",
+        "sf", "cpus", "master", "git_sha",
+    }
+    assert list(payload["queries"]) == lanes
+    for name in lanes:
+        split = payload["splits"][name]
+        assert set(split) == {"build_s", "exec_s"}
+        assert payload["queries"][name] == round(split["build_s"] + split["exec_s"], 3)
+    assert payload["build_s_total"] == round(
+        sum(s["build_s"] for s in payload["splits"].values()), 3
+    )
+    assert payload["value"] == round(sum(payload["queries"].values()), 3)
+    assert payload["master"] == spark.sparkContext.master
+    assert payload["cpus"] > 0

@@ -107,6 +107,23 @@ def test_electricity_dag_end_to_end(spark, sf_dir, tmp_path):
         assert os.path.isdir(f"{root}/{prefix}/run_ts=20240101_000000"), prefix
 
 
+def test_electricity_dag_retention_runs_once_in_cleanup(spark, sf_dir, tmp_path):
+    """Retention is the cleanup task's job alone: a second run into the
+    same lake with keep=1 has cleanup delete the first run's raw,
+    processed and reports snapshots, and notify reports all three."""
+    import os
+
+    root = str(tmp_path / "lake")
+    for run_ts in ("20240101_000000", "20240108_000000"):
+        tasks = electricity_dag(spark, sf_dir, root, run_ts=run_ts, retention_keep=1)
+        report = run_dag(tasks, ctx={"spark": spark})
+        assert report.ok, {n: (t.state, t.error) for n, t in report.tasks.items()}
+    assert report.results["notify"]["snapshots_deleted"] == 3
+    for prefix in ("raw", "processed", "reports"):
+        kept = [d for d in os.listdir(f"{root}/{prefix}") if d.startswith("run_ts=")]
+        assert kept == ["run_ts=20240108_000000"], prefix
+
+
 def test_electricity_dag_failure_path(spark, sf_dir, tmp_path, monkeypatch):
     """A failing prepare must mark train/register/cleanup/notify
     upstream_failed while the quality summary (parallel branch) still

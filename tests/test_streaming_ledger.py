@@ -1,9 +1,10 @@
 """Shape pin for the committed streaming timing ledger (VERDICT r10
-item 3): the 14 bench-excluded stream_* lanes must each carry real
-engine-measured evidence in BENCH_LEDGER/streaming.json -- wall-clock,
-input rows, end-to-end rows/sec, and per-micro-batch triggerExecution
-latencies captured by a StreamingQueryListener (tools/streaming_bench.py).
-Pure JSON checks, no Spark.
+item 3): the registry's stream_* lanes, which bench.py does not time,
+must each carry real engine-measured evidence in
+BENCH_LEDGER/streaming.json -- wall-clock, input rows, end-to-end
+rows/sec, and per-micro-batch triggerExecution latencies captured by a
+StreamingQueryListener (tools/streaming_bench.py). JSON checks against
+the registry; no Spark session.
 """
 
 from __future__ import annotations
@@ -20,10 +21,11 @@ def _lanes():
 
 
 def test_every_bench_excluded_stream_lane_is_measured():
-    import bench
+    from electricity_forecast_pipeline_airflow_k8s_spark.queries import registry
 
-    lanes = _lanes()
-    missing = set(bench.STREAMING_EXCLUDED) - set(lanes)
+    stream_lanes = {n for n in registry() if n.startswith("stream_")}
+    assert stream_lanes
+    missing = stream_lanes - set(_lanes())
     assert not missing, f"stream lanes with no committed timing: {missing}"
 
 

@@ -70,21 +70,11 @@ def main() -> int:
     lanes = only or LANES
 
     def run(name: str) -> float:
-        if name in bench.ITERATIVE:  # build-inclusive wall-clock
-            t = time.perf_counter()
-            qs[name](spark, SCALE_DIR).write.format("noop").mode("overwrite").save()
-            return round(time.perf_counter() - t, 3)
-        df = qs[name](spark, SCALE_DIR)  # lazy-plan noop bracket
-        t = time.perf_counter()
-        df.write.format("noop").mode("overwrite").save()
-        return round(time.perf_counter() - t, 3)
+        return round(sum(bench.time_lane(spark, qs[name], SCALE_DIR)), 3)
 
     # warmup at the source sf so codegen/JIT is out of the timed runs
     for name in lanes:
-        if name in bench.ITERATIVE:
-            qs[name](spark, SRC_DIR).write.format("noop").mode("overwrite").save()
-        else:
-            qs[name](spark, SRC_DIR).write.format("noop").mode("overwrite").save()
+        bench.time_lane(spark, qs[name], SRC_DIR)
 
     col = f"c{cpus}_sec"
     out = os.path.join(REPO, "BENCH_LEDGER", "core_ratio.json")

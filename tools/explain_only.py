@@ -1,6 +1,7 @@
 """Dump .explain("formatted") for named lanes WITHOUT timing them —
-used to capture before/after plan evidence cheaply (build-time boundary
-jobs still run for ITERATIVE lanes, but nothing is materialized).
+used to capture before/after plan evidence cheaply (jobs a lane's builder
+runs -- boundary collects, lineage cuts -- still run, but the returned
+frame is never materialized).
 
 Usage: python tools/explain_only.py OUTDIR SUFFIX name...
 """

@@ -1,13 +1,14 @@
 """Profile individual bench lanes: time them exactly like bench.py (warmup
-at sf0.001, best-of-N noop materialization of a lazy plan) and optionally
-dump the formatted physical plan to a file.
+at sf0.001, best-of-N bench.time_lane runs: build call through the noop
+write) and optionally dump the formatted physical plan to a file.
 
 Usage:
     python tools/profile_lane.py [--sf DIR] [--iters N] [--plans OUTDIR] name...
 
-Prints one line per lane: ``name  best  [all timings]`` plus plan-shape
-counts (Exchanges, joins, python-eval nodes) so before/after claims in
-OPTIMIZATION_r*.md can be checked against real output.
+Prints one line per lane: ``name  best  build/exec split of the best run
+[all totals]`` plus plan-shape counts (Exchanges, joins, python-eval nodes)
+so before/after claims in OPTIMIZATION_r*.md can be checked against real
+output.
 """
 
 from __future__ import annotations
@@ -15,10 +16,10 @@ from __future__ import annotations
 import argparse
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import time_lane  # noqa: E402
 from electricity_forecast_pipeline_airflow_k8s_spark.queries import queries as all_queries  # noqa: E402
 from electricity_forecast_pipeline_airflow_k8s_spark.session import get_spark  # noqa: E402
 
@@ -50,19 +51,10 @@ def main() -> None:
             continue
         spark.sparkContext.setJobDescription(f"profile:{name}")
         if not args.no_warm:
-            qs[name](spark, warm_dir).write.format("noop").mode("overwrite").save()
-        timings = []
-        for _ in range(args.iters):
-            df = qs[name](spark, args.sf)
-            t0 = time.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
-            timings.append(round(time.perf_counter() - t0, 3))
-        # wall-clock bracket too (build + materialize), for ITERATIVE-style lanes
-        wall = []
-        for _ in range(2):
-            t0 = time.perf_counter()
-            qs[name](spark, args.sf).write.format("noop").mode("overwrite").save()
-            wall.append(round(time.perf_counter() - t0, 3))
+            time_lane(spark, qs[name], warm_dir)
+        runs = [time_lane(spark, qs[name], args.sf) for _ in range(args.iters)]
+        build_s, exec_s = min(runs, key=sum)
+        totals = [round(b + e, 3) for b, e in runs]
         if args.plans:
             from electricity_forecast_pipeline_airflow_k8s_spark.plans.inspect import explain_str
 
@@ -79,7 +71,8 @@ def main() -> None:
         else:
             shape = ""
         print(
-            f"{name}: best={min(timings):.3f} noop={timings} wall={wall}{shape}",
+            f"{name}: best={build_s + exec_s:.3f} build={build_s:.3f} "
+            f"exec={exec_s:.3f} all={totals}{shape}",
             flush=True,
         )
 

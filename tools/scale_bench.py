@@ -3,11 +3,10 @@ sf1-equivalent data size and commit observed-vs-linear ratios.
 
 The 100 TB story so far rested on plan pins (docs/PLANS.md,
 tests/test_plans.py) and 10x stress *tests* (tests/test_scale_stress.py);
-this tool converts it into a committed timing artifact: every ITERATIVE
-lane plus the top HEADLINE lanes run at BOTH sf0.1 and a 10x inflation of
-sf0.1, in one session, same timing convention as bench.py (lazy-plan noop
-bracket for headline lanes, build-inclusive wall-clock for iterative
-lanes). The committed output is
+this tool converts it into a committed timing artifact: the LANES below
+run at BOTH sf0.1 and a 10x inflation of sf0.1, in one session, timed by
+bench.time_lane (build call through the noop write, as bench.py times
+every lane). The committed output is
 BENCH_LEDGER/scale10x.json; SCALING.md summarizes it.
 
 ## The 10x corpus (same recipes as tests/test_scale_stress.py)
@@ -67,10 +66,38 @@ SCALE_DIR = os.environ.get(
     "SPARK_GRAFT_SCALE_DIR", os.path.join(REPO, f".scale{REPLICAS}x")
 )
 
-# r9-committed-ledger top-10 headline lanes by time (BENCH_LEDGER) minus
-# the declared-quadratic truth lane, plus the two flagship scale lanes the
-# 100 TB story leans on. ITERATIVE lanes are added programmatically.
-TOP_HEADLINE = [
+# The lanes whose builders run Spark jobs (lineage cuts, boundary and
+# offset jobs, fixed-point iterations), then the r9-committed-ledger top
+# lanes by time minus the declared-quadratic truth lane, then the flagship
+# scale paths the 100 TB story leans on. The EXCLUDED truth lanes are
+# measured through their scale paths instead.
+LANES = (
+    "dedup_clusters",
+    "dedup_keep_best",
+    "emb_top_pc_power_iteration",
+    "emb_kcenter_seeds",
+    "graph_bfs_reachability",
+    "rel_rfm_segments_scale",
+    "rel_exact_quantiles_scale",
+    "text_heavy_hitters",
+    "val_winsorized_stats",
+    "rel_weighted_quantiles_scale",
+    "layout_zorder_locality",
+    "rel_equidepth_histogram",
+    "rel_decile_lift",
+    "graph_kcore",
+    "rel_abc_classification",
+    "sample_curriculum_order",
+    "emb_pq_assign",
+    "layout_zonemap_pruning",
+    "sim_pq_adc_recall",
+    "sim_ivfpq_recall",
+    "inc_cc_new_edges",
+    "emb_pq_train_curve",
+    "layout_bloom_pruning",
+    "corpus_prep_e2e",
+    "corpus_prep_inc_batch",
+    "dedup_semantic_clusters_scale",
     "text_fuzzy_prefix_pairs",
     "text_repetition_stats",
     "text_setsim_prefix_join",
@@ -80,11 +107,10 @@ TOP_HEADLINE = [
     "ml_forecast_next",
     "text_bigram_lm_score",
     "rel_range_join",
-    # flagship scale paths
     "quality_profile_approx",
     "dedup_minhash_lsh_pairs",
     "graph_triangle_estimate",  # DOULION answer to the exact lane's ENOSPC
-]
+)
 EXCLUDED = {
     "dedup_ngram_jaccard_pairs": (
         "O(n^2) brute-force truth lane by declared design "
@@ -236,26 +262,13 @@ def main() -> int:
     build_sec = round(time.perf_counter() - t0, 1)
 
     qs = all_queries()
-    lanes = [
-        n
-        for n in dict.fromkeys(bench.ITERATIVE + TOP_HEADLINE)
-        if n not in EXCLUDED
-    ]
-    missing = [n for n in lanes if n not in qs]
+    missing = [n for n in LANES if n not in qs]
     assert not missing, f"unknown lanes: {missing}"
-    if only:
-        # explicit names may name ANY registry lane, not just the default set
-        lanes = [n for n in only if n in qs]
+    # explicit names may name ANY registry lane, not just the default set
+    lanes = [n for n in only if n in qs] if only else list(LANES)
 
     def run(name: str, sf_dir: str) -> float:
-        if name in bench.ITERATIVE:  # build-inclusive wall-clock
-            t = time.perf_counter()
-            qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-            return round(time.perf_counter() - t, 3)
-        df = qs[name](spark, sf_dir)  # lazy-plan noop bracket
-        t = time.perf_counter()
-        df.write.format("noop").mode("overwrite").save()
-        return round(time.perf_counter() - t, 3)
+        return round(sum(bench.time_lane(spark, qs[name], sf_dir)), 3)
 
     # JIT/codegen warmup at the smallest sf, as the bench does
     warm = os.path.join(os.path.dirname(SRC_DIR.rstrip("/")), "sf0.001")

@@ -20,7 +20,7 @@ from electricity_forecast_pipeline_airflow_k8s_spark.plans.inspect import explai
 from electricity_forecast_pipeline_airflow_k8s_spark.queries import queries as all_queries  # noqa: E402
 from electricity_forecast_pipeline_airflow_k8s_spark.session import get_spark  # noqa: E402
 
-from bench import STREAMING_EXCLUDED  # noqa: E402
+from bench import timed_lanes  # noqa: E402
 
 
 def _indent(line: str) -> int:
@@ -60,11 +60,9 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     qs = all_queries()
     flagged: list[tuple[float, str, int]] = []
-    for name, fn in sorted(qs.items()):
-        if name in STREAMING_EXCLUDED:
-            continue
+    for name in sorted(timed_lanes()):
         try:
-            df = fn(spark, sf_dir)
+            df = qs[name](spark, sf_dir)
             n = bare_range_exchanges(explain_str(df, "simple"))
         except Exception as exc:  # noqa: BLE001
             print(f"{name}: ERROR {exc}", flush=True)

@@ -1,14 +1,15 @@
 """Streaming timing evidence (VERDICT r10 item 3).
 
-The 14 `stream_*` lanes are bench.py STREAMING_EXCLUDED by policy (their
-wall-clock is dominated by landing the file source + micro-batch trigger
-overhead, which would drown the batch lanes' signal in the main ledger) --
-but that left them with ZERO committed performance numbers. This tool
+bench.py times every registry lane except the `stream_*` lanes (see
+bench.timed_lanes: their wall-clock is dominated by landing the file
+source + micro-batch trigger overhead, which would drown the batch lanes'
+signal in the main ledger), so they get their own ledger. This tool
 measures them for real: each lane runs exactly as registered (REAL
 Structured Streaming -- file source, availableNow trigger, foreachBatch
 state folds / memory sinks), while a StreamingQueryListener captures
 per-micro-batch progress (numInputRows, triggerExecution ms) from the
-engine itself; no lane code is modified.
+engine itself; no lane code is modified. Each lane is timed by
+bench.time_lane, the bench's one timer (build call through the noop write).
 
 Recorded per lane:
 - wall_sec          end-to-end: source landing + all micro-batches + finalize
@@ -86,6 +87,7 @@ def main() -> int:
 
     from pyspark.sql.streaming import StreamingQueryListener
 
+    from bench import time_lane
     from electricity_forecast_pipeline_airflow_k8s_spark.queries import (
         queries as all_queries,
     )
@@ -124,14 +126,12 @@ def main() -> int:
     # r12 refresh measured the first lane 3.5x its warm wall. One untimed
     # run of the first lane puts every timed lane on equal footing (the
     # same convention as bench.py's sf0.001 warmup pass).
-    qs[lanes[0]](spark, SF_DIR).write.format("noop").mode("overwrite").save()
+    time_lane(spark, qs[lanes[0]], SF_DIR)
 
     results: dict[str, dict] = {}
     for name in lanes:
         collector.progress.clear()
-        t0 = time.perf_counter()
-        qs[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()
-        wall = round(time.perf_counter() - t0, 3)
+        wall = round(sum(time_lane(spark, qs[name], SF_DIR)), 3)
         # listener events arrive on a background thread; availableNow
         # queries are terminated by now, give the bus a moment to drain
         deadline = time.time() + 10
