@@ -555,18 +555,16 @@ def compact_stdout_line(payload: dict, max_len: int = 1900) -> str:
         "lanes": len(timings),
         "n_iter": payload["n_iter"],
         "over_budget": payload["over_budget"],
-        "retried_lanes": payload["retried_lanes"],
         "ledger": "BENCH_LEDGER/latest.json",
     }
-    # A pathological run can overflow the budget/retry dicts themselves
-    # (e.g. every lane over budget): cap them to the worst offenders first
-    # so the aggregate line always parses.
+    # A pathological run can overflow the budget dict itself (e.g. every
+    # lane over budget): cap it to the worst offenders first so the
+    # aggregate line always parses.
     over = compact["over_budget"]
     if len(json.dumps(compact)) > max_len // 2 and len(over) > 8:
         worst = sorted(over, key=lambda n: -(over[n]["sec"] - over[n]["budget"]))
         compact["over_budget"] = {n: over[n] for n in worst[:8]}
         compact["over_budget_total"] = len(over)
-        compact["retried_lanes"] = compact["retried_lanes"][:8]
     by_time = sorted(timings, key=lambda n: -timings[n])
     line = json.dumps(compact)
     for keep in range(24, -1, -4):
@@ -576,6 +574,38 @@ def compact_stdout_line(payload: dict, max_len: int = 1900) -> str:
         if len(line) <= max_len:
             break
     return line
+
+
+def sf_of(sf_dir: str) -> float | str:
+    """The scale factor an ``.../sf<N>`` data dir holds (the dir name if
+    it does not end in a number)."""
+    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+    return float(sf) if sf.replace(".", "").isdigit() else sf
+
+
+def run_meta(spark, sf_dir: str) -> dict:
+    """What every ledger records about the run that wrote it."""
+    return {
+        "sf": sf_of(sf_dir),
+        "cpus": default_parallelism(),
+        "master": spark.sparkContext.master,
+        "git_sha": _git_sha(),
+    }
+
+
+def warm_dir_for(sf_dir: str) -> str:
+    """The warmup data for sf_dir: its sf0.001 sibling, or sf_dir itself
+    when it has none (custom SPARK_GRAFT_SF_DIR roots)."""
+    warm_dir = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.001")
+    return warm_dir if os.path.isdir(warm_dir) else sf_dir
+
+
+def ledger_dir() -> str:
+    """$SPARK_GRAFT_BENCH_LEDGER, default the committed BENCH_LEDGER/."""
+    return os.environ.get(
+        "SPARK_GRAFT_BENCH_LEDGER",
+        os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_LEDGER"),
+    )
 
 
 def _git_sha() -> str | None:
@@ -593,15 +623,7 @@ def _git_sha() -> str | None:
 
 def run_bench(spark, lanes: list[str], sf_dir: str, warm_dir: str, n_iter: int) -> dict:
     """Warm every lane once at warm_dir, time n_iter passes at sf_dir and
-    return the ledger payload; each lane keeps the split of its best pass.
-
-    Marathon-drift retry (round 7): a 300-lane run accumulates JVM pressure
-    (GC, code cache, shuffle files, lingering checkpoint blocks) that can
-    push one lane far past its quiet-machine budget with the plan
-    unchanged. So a lane over budget gets ONE retry after a cache purge and
-    a GC hint, and its best attempt is kept. Both attempts are recorded: a
-    recurring intermittent regression then shows as a repeatedly-high
-    `first` across ledgers even when the retry passes."""
+    return the ledger payload; each lane keeps the split of its best pass."""
     qs = registry()
     # JIT/codegen warmup (untimed) so the timed passes measure steady-state
     # plans, not first-run whole-stage-codegen compilation
@@ -611,24 +633,11 @@ def run_bench(spark, lanes: list[str], sf_dir: str, warm_dir: str, n_iter: int) 
     # best of n_iter passes: OS cache, JIT and machine-load noise dominate
     # single runs at this data size (SCALING.md "Bench methodology")
     best: dict[str, tuple[float, float]] = {}
-
-    def record(name: str, split: tuple[float, float]) -> float:
-        if name not in best or sum(split) < sum(best[name]):
-            best[name] = split
-        return round(sum(split), 3)
-
     for _ in range(n_iter):
         for name in lanes:
-            record(name, time_lane(spark, qs[name].build, sf_dir))
-
-    retried: dict[str, dict[str, float]] = {}
-    for name in lanes:
-        first = round(sum(best[name]), 3)
-        if first > effective_budget(name):
-            spark.catalog.clearCache()
-            spark.sparkContext._jvm.System.gc()
-            retry = record(name, time_lane(spark, qs[name].build, sf_dir))
-            retried[name] = {"first": first, "retry": retry}
+            split = time_lane(spark, qs[name].build, sf_dir)
+            if name not in best or sum(split) < sum(best[name]):
+                best[name] = split
 
     timings = {name: round(sum(best[name]), 3) for name in lanes}
     over_budget = {
@@ -636,7 +645,6 @@ def run_bench(spark, lanes: list[str], sf_dir: str, warm_dir: str, n_iter: int) 
         for name in lanes
         if timings[name] > effective_budget(name)
     }
-    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     return {
         "metric": "headline_queries_total",
         "value": round(sum(timings.values()), 3),
@@ -646,13 +654,8 @@ def run_bench(spark, lanes: list[str], sf_dir: str, warm_dir: str, n_iter: int) 
         "build_s_total": round(sum(b for b, _ in best.values()), 3),
         "exec_s_total": round(sum(e for _, e in best.values()), 3),
         "n_iter": n_iter,
-        "retried_lanes": sorted(retried),
-        "retried": retried,
         "over_budget": over_budget,
-        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-        "cpus": default_parallelism(),
-        "master": spark.sparkContext.master,
-        "git_sha": _git_sha(),
+        **run_meta(spark, sf_dir),
     }
 
 
@@ -660,25 +663,16 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark(app_name="efp-bench")
     spark.sparkContext.setLogLevel("ERROR")
-    # warm up at the smallest sf; fall back to the bench dir itself if no
-    # sf0.001 sibling exists (custom SPARK_GRAFT_SF_DIR roots)
-    warm_dir = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.001")
-    if not os.path.isdir(warm_dir):
-        warm_dir = sf_dir
     n_iter = int(os.environ.get("SPARK_GRAFT_BENCH_ITER", "3"))
-    payload = run_bench(spark, timed_lanes(), sf_dir, warm_dir, n_iter)
+    payload = run_bench(spark, timed_lanes(), sf_dir, warm_dir_for(sf_dir), n_iter)
     # Full per-lane ledger: the driver's BENCH_r*.json keeps only the last
     # 2,000 chars of stdout, which truncates a 300+-lane timings dict to
     # parsed:null (BENCH_r09/r10 both show it) -- so every run writes the
     # complete JSON to BENCH_LEDGER/ (committed per round) for
     # round-over-round comparison.
-    ledger_dir = os.environ.get(
-        "SPARK_GRAFT_BENCH_LEDGER",
-        os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_LEDGER"),
-    )
     try:
-        os.makedirs(ledger_dir, exist_ok=True)
-        with open(os.path.join(ledger_dir, "latest.json"), "w") as fh:
+        os.makedirs(ledger_dir(), exist_ok=True)
+        with open(os.path.join(ledger_dir(), "latest.json"), "w") as fh:
             json.dump(payload, fh, indent=1, sort_keys=True)
     except OSError:
         pass  # read-only checkout: the compact stdout line below still lands

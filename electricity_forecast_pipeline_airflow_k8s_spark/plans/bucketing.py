@@ -20,6 +20,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from electricity_forecast_pipeline_airflow_k8s_spark.plans.inspect import plan_shape
+
 
 def write_bucketed(
     df: DataFrame,
@@ -37,12 +39,10 @@ def write_bucketed(
 
 
 def exchange_count(df: DataFrame) -> int:
-    """Number of shuffle exchanges in the executed plan -- the metric a
-    bucketed join drives to zero."""
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    return plan.count("Exchange hashpartitioning") + plan.count(
-        "Exchange rangepartitioning"
-    )
+    """Number of hash and range shuffle exchanges in the physical plan --
+    the metric a bucketed join drives to zero."""
+    shape = plan_shape(df)
+    return shape["exchange_hash"] + shape["exchange_range"]
 
 
 def bucket_join(

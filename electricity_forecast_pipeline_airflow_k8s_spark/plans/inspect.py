@@ -4,7 +4,9 @@ pruning, broadcast selection, shuffle counts) instead of hoping for it.
 
 The reference hand-codes its pushdowns into the REST request
 (`core/data_extraction.py:62-74`); here they are optimizer outputs, and
-these helpers make them assertable.
+these helpers make them assertable. ``plan_shape`` is the one walker
+over the physical plan tree; the bench sweep gates its counts against
+``BENCH_LEDGER/plan_shape.json`` (regenerate with tools/plan_shape.py).
 """
 
 from __future__ import annotations
@@ -44,7 +46,7 @@ def read_schema_columns(df: DataFrame) -> list[str]:
 
 
 def has_broadcast_join(df: DataFrame) -> bool:
-    return "BroadcastHashJoin" in explain_str(df)
+    return plan_shape(df)["join_bhj"] > 0
 
 
 def forced_broadcast_count(df: DataFrame) -> int:
@@ -55,30 +57,84 @@ def forced_broadcast_count(df: DataFrame) -> int:
     return text.count("ResolvedHint (strategy=broadcast)")
 
 
-def shuffle_count(df: DataFrame) -> int:
-    """Number of Exchange operators in the physical plan (pre-AQE).
+_EXCHANGES = {
+    "HashPartitioning": "exchange_hash",
+    "RangePartitioning": "exchange_range",
+    "RoundRobinPartitioning": "exchange_round_robin",
+    "SinglePartition$": "exchange_single",
+}
+_JOINS = {
+    "SortMergeJoin": "join_smj",
+    "BroadcastHashJoin": "join_bhj",
+    "ShuffledHashJoin": "join_shj",
+    "BroadcastNestedLoopJoin": "join_bnlj",
+    "CartesianProduct": "join_cartesian",
+}
+# One fingerprint field per plan property that decides how a lane scales:
+# shuffles by partitioning, joins by strategy, scans, Python round trips,
+# single-partition windows, and "bare" range exchanges (a sort whose range
+# partitioner has no shuffle below it, so its boundary-sampling job
+# re-runs the whole subtree).
+SHAPE_FIELDS = (
+    *_EXCHANGES.values(),
+    "exchange_broadcast",
+    *_JOINS.values(),
+    "parquet_scans",
+    "python_eval",
+    "window_unpartitioned",
+    "range_bare",
+)
+# ArrowEvalPython, BatchEvalPython, ArrowAggregatePython,
+# ArrowWindowPython, MapInPandas/MapInArrow, FlatMap[Co]GroupsIn{Pandas,
+# Arrow}, and the Spark 3 AggregateInPandas/WindowInPandas
+_PYTHON_MARKERS = ("Python", "InPandas", "InArrow")
 
-    Counted on the SIMPLE explain mode: its one-line nodes read
-    ``Exchange hashpartitioning(...)``. The formatted mode splits the node
-    name (``Exchange (14)``) from its arguments (``Arguments:
-    hashpartitioning(...)``), so substring counts there are silently zero
-    (ADVICE r3)."""
-    text = explain_str(df, "simple")
-    return text.count("Exchange hashpartitioning") + text.count(
-        "Exchange rangepartitioning"
-    )
+
+def _seq(scala_seq) -> list:
+    return [scala_seq.apply(i) for i in range(scala_seq.size())]
 
 
-def plan_counts(df: DataFrame) -> dict[str, int]:
-    """Robust node counts from the simple-mode plan: broadcast joins (hash
-    AND nested-loop -- a broadcast-scalar cross join is the latter), hash
-    exchanges, range exchanges, broadcast exchanges, scans."""
-    text = explain_str(df, "simple")
-    return {
-        "broadcast_joins": text.count("BroadcastHashJoin")
-        + text.count("BroadcastNestedLoopJoin"),
-        "hash_exchanges": text.count("Exchange hashpartitioning"),
-        "range_exchanges": text.count("Exchange rangepartitioning"),
-        "broadcast_exchanges": text.count("BroadcastExchange"),
-        "parquet_scans": text.count("Scan parquet") + text.count("FileScan parquet"),
-    }
+def plan_children(node, name: str) -> list:
+    """The nodes directly below a physical-plan node named ``name`` (its
+    nodeName), looking through the adaptive wrappers: an
+    ``AdaptiveSparkPlan`` (a leaf to Catalyst, so a plain walk stops
+    there) shows its current plan, a query stage its exchange. A node's
+    subquery plans count as its children."""
+    if name == "AdaptiveSparkPlan":
+        return [node.executedPlan()]
+    if name.endswith("QueryStage"):
+        return [node.plan()]
+    return _seq(node.children()) + _seq(node.subqueries())
+
+
+def plan_shape(df: DataFrame) -> dict[str, int]:
+    """Node counts of ``df``'s physical plan, one per ``SHAPE_FIELDS``.
+
+    Walks the plan tree node by node (no explain text); forcing the
+    physical plan runs no job. A reused exchange is not counted again."""
+    shape = dict.fromkeys(SHAPE_FIELDS, 0)
+
+    def visit(node) -> bool:
+        """Count ``node``'s subtree; True when it holds an exchange."""
+        name = node.nodeName()
+        below = any([visit(c) for c in plan_children(node, name)])
+        if name == "Exchange":
+            kind = _EXCHANGES[node.outputPartitioning().getClass().getSimpleName()]
+            shape[kind] += 1
+            shape["range_bare"] += kind == "exchange_range" and not below
+            return True
+        if name == "BroadcastExchange":
+            shape["exchange_broadcast"] += 1
+            return True
+        if name in _JOINS:
+            shape[_JOINS[name]] += 1
+        elif name.startswith("Scan parquet"):
+            shape["parquet_scans"] += 1
+        elif name == "Window":
+            shape["window_unpartitioned"] += node.partitionSpec().isEmpty()
+        elif any(m in name for m in _PYTHON_MARKERS):
+            shape["python_eval"] += 1
+        return below or name == "ReusedExchange"
+
+    visit(df._jdf.queryExecution().executedPlan())  # type: ignore[attr-defined]
+    return shape

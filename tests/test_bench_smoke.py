@@ -5,16 +5,41 @@ must count a builder's jobs in the lane's time. Round 2's bench crashed
 locally before the driver's per-round bench run ever sees it.
 """
 
+import json
 import os
 import time
 
+import pyspark.sql.functions as F
 import pytest
+from pyspark.sql import Window
 
 import bench
+from electricity_forecast_pipeline_airflow_k8s_spark.plans.inspect import SHAPE_FIELDS, plan_shape
 from electricity_forecast_pipeline_airflow_k8s_spark.queries import (
     queries as all_queries,
     registry,
 )
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+# Gated fingerprint fields: all but the round-robin exchanges, which only
+# fanout() adds, and only when its input has fewer partitions than
+# defaultParallelism -- so their count depends on the core count.
+GATED_FIELDS = tuple(f for f in SHAPE_FIELDS if f != "exchange_round_robin")
+PLAN_SHAPE_LEDGER = os.path.join(ROOT, "BENCH_LEDGER", "plan_shape.json")
+
+
+def _plan_shape_ledger() -> dict:
+    with open(PLAN_SHAPE_LEDGER) as fh:
+        return json.load(fh)
+
+
+def shape_drift(df, recorded: dict) -> dict:
+    """Gated fields where df's plan shape differs from the recorded one:
+    {field: (recorded, now)}."""
+    now = plan_shape(df)
+    return {f: (recorded.get(f), now[f]) for f in GATED_FIELDS if recorded.get(f) != now[f]}
 
 
 def test_every_bench_lane_is_registered_and_headline_plans_build(spark, sf_dir):
@@ -23,14 +48,61 @@ def test_every_bench_lane_is_registered_and_headline_plans_build(spark, sf_dir):
     already MATERIALIZES there (compare() collects every lane) in the same
     session. What bench.py can still break on its own is a dangling lane
     name or a query whose PLAN no longer builds; both are caught here by
-    building (analyzing) every timed lane's plan without materializing it.
-    Builders that run jobs (lineage cuts, boundary collects, fixed-point
-    iterations) run them here too, at sf0.001. The full
-    materialize-everything loop remains available opt-in
-    (SPARK_GRAFT_SLOW_TESTS=1) below."""
+    planning every timed lane without materializing it. Builders that run
+    jobs (lineage cuts, boundary collects, fixed-point iterations) run
+    them here too, at sf0.001. The full materialize-everything loop
+    remains available opt-in (SPARK_GRAFT_SLOW_TESTS=1) below.
+
+    Each physical plan's shape must equal its BENCH_LEDGER/plan_shape.json
+    entry exactly, on every gated field: a plan change shows up in review
+    as a regenerated ledger diff (python tools/plan_shape.py)."""
+    ledger = _plan_shape_ledger()
+    assert ledger["run"]["sf"] == bench.sf_of(sf_dir), "ledger built at another sf"
     qs = all_queries()
+    drift = {}
     for name in bench.timed_lanes():
-        qs[name](spark, sf_dir).schema  # forces analysis of the returned plan
+        d = shape_drift(qs[name](spark, sf_dir), ledger["lanes"].get(name, {}))
+        if d:
+            drift[name] = d
+    assert not drift, (
+        f"plan shape {{field: (ledger, now)}} changed for {len(drift)} lanes "
+        f"(regenerate with python tools/plan_shape.py if intended): {drift}"
+    )
+
+
+def test_plan_shape_ledger_is_self_describing():
+    """BENCH_LEDGER/plan_shape.json fingerprints exactly the timed lanes,
+    in order, each with exactly the plan_shape fields, and records the
+    run that wrote it."""
+    ledger = _plan_shape_ledger()
+    assert set(ledger) == {"run", "lanes"}
+    assert set(ledger["run"]) == {"sf", "cpus", "master", "git_sha", "spark_version"}
+    assert ledger["run"]["cpus"] > 0 and ledger["run"]["spark_version"]
+    assert list(ledger["lanes"]) == bench.timed_lanes()
+    for name, shape in ledger["lanes"].items():
+        assert list(shape) == list(SHAPE_FIELDS), name
+        assert all(isinstance(v, int) and v >= 0 for v in shape.values()), name
+
+
+@pytest.mark.parametrize(
+    "inject, field",
+    [
+        (lambda df: df.crossJoin(df), "join_bnlj"),
+        (
+            lambda df: df.withColumn("rn", F.row_number().over(Window.orderBy(df.columns[0]))),
+            "window_unpartitioned",
+        ),
+    ],
+    ids=["cross_join", "unpartitioned_window"],
+)
+def test_plan_shape_gate_catches_injected_shape(spark, sf_dir, inject, field):
+    """A lane whose frame gains a cross join or a single-partition window
+    fails the gate; the untouched frame passes it."""
+    name = "rel_topk_orders"
+    recorded = _plan_shape_ledger()["lanes"][name]
+    df = all_queries()[name](spark, sf_dir)
+    assert shape_drift(df, recorded) == {}
+    assert field in shape_drift(inject(df), recorded)
 
 
 @pytest.mark.skipif(
@@ -106,7 +178,6 @@ def test_compact_stdout_line_fits_driver_tail():
         "n_iter": 3,
         "queries": {f"lane_{i:03d}_with_a_realistic_name": i * 0.01 for i in range(330)},
         "over_budget": {},
-        "retried_lanes": [],
     }
     line = bench.compact_stdout_line(payload)
     assert len(line) <= 1900
@@ -120,7 +191,6 @@ def test_compact_stdout_line_fits_driver_tail():
     payload["over_budget"] = {
         n: {"sec": t, "budget": t / 2} for n, t in payload["queries"].items()
     }
-    payload["retried_lanes"] = sorted(payload["queries"])
     line = bench.compact_stdout_line(payload)
     assert len(line) <= 1900
     d = json.loads(line)
@@ -168,7 +238,7 @@ def test_bench_payload_is_self_describing(spark, sf_dir):
     payload = bench.run_bench(spark, lanes, sf_dir, sf_dir, n_iter=1)
     assert set(payload) == {
         "metric", "value", "unit", "queries", "splits", "build_s_total",
-        "exec_s_total", "n_iter", "retried_lanes", "retried", "over_budget",
+        "exec_s_total", "n_iter", "over_budget",
         "sf", "cpus", "master", "git_sha",
     }
     assert list(payload["queries"]) == lanes

@@ -1,8 +1,8 @@
 """10x scale ledger (VERDICT r9 item 1): measure the flagship lanes at an
 sf1-equivalent data size and commit observed-vs-linear ratios.
 
-The 100 TB story so far rested on plan pins (docs/PLANS.md,
-tests/test_plans.py) and 10x stress *tests* (tests/test_scale_stress.py);
+The 100 TB story so far rested on plan pins (BENCH_LEDGER/plan_shape.json
+from tools/plan_shape.py, tests/test_plans.py) and 10x stress *tests* (tests/test_scale_stress.py);
 this tool converts it into a committed timing artifact: the LANES below
 run at BOTH sf0.1 and a 10x inflation of sf0.1, in one session, timed by
 bench.time_lane (build call through the noop write, as bench.py times
