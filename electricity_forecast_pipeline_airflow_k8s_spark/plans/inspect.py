@@ -53,8 +53,14 @@ def forced_broadcast_count(df: DataFrame) -> int:
     """Explicit ``F.broadcast()`` hints in the analyzed logical plan --
     distinguishes hand-forced broadcasts (which OOM when the hinted side
     grows with SF) from ones Catalyst/AQE chose by measured size."""
-    text = df._jdf.queryExecution().analyzed().toString()  # type: ignore[attr-defined]
-    return text.count("ResolvedHint (strategy=broadcast)")
+
+    def visit(node) -> int:
+        name = node.nodeName()
+        # a ResolvedHint's strategy is an Option[JoinStrategyHint]
+        forced = name == "ResolvedHint" and str(node.hints().strategy()) == "Some(broadcast)"
+        return forced + sum(visit(c) for c in plan_children(node, name))
+
+    return visit(df._jdf.queryExecution().analyzed())  # type: ignore[attr-defined]
 
 
 _EXCHANGES = {
@@ -95,7 +101,7 @@ def _seq(scala_seq) -> list:
 
 
 def plan_children(node, name: str) -> list:
-    """The nodes directly below a physical-plan node named ``name`` (its
+    """The nodes directly below a plan node named ``name`` (its
     nodeName), looking through the adaptive wrappers: an
     ``AdaptiveSparkPlan`` (a leaf to Catalyst, so a plain walk stops
     there) shows its current plan, a query stage its exchange. A node's
