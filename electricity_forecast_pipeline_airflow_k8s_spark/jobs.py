@@ -106,7 +106,7 @@ def train_job(
     # report carries only the path and a count
     forecast_path = f"{lake_root}/forecasts/model={model_name}"
     res.forecasts.write.mode("overwrite").parquet(forecast_path)
-    n_forecast_rows = spark.read.parquet(forecast_path).count()
+    n_forecast_rows = read_parquet(spark, forecast_path).count()
     version = register_model(
         spark, res.params, lake_root, model_name, metrics=res.metrics
     )

@@ -26,6 +26,10 @@ import json
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from electricity_forecast_pipeline_airflow_k8s_spark.session import local_frame
+from electricity_forecast_pipeline_airflow_k8s_spark.sources.snapshots import _fs_and_path
+from electricity_forecast_pipeline_airflow_k8s_spark.sources.tables import read_parquet
+
 CATALOG_SCHEMA = (
     "model_name string, version long, created_ts timestamp, "
     "metrics_json string, path string"
@@ -41,10 +45,11 @@ def _version_path(root: str, name: str, version: int) -> str:
 
 
 def _read_catalog(spark: SparkSession, root: str) -> DataFrame:
-    try:
-        return spark.read.schema(CATALOG_SCHEMA).parquet(_catalog_path(root))
-    except Exception:  # first registration: no catalog yet
-        return spark.createDataFrame([], CATALOG_SCHEMA)
+    path = _catalog_path(root)
+    fs, jpath, _ = _fs_and_path(spark, path)
+    if not fs.exists(jpath):  # before the first registration
+        return local_frame(spark, [], CATALOG_SCHEMA)
+    return spark.read.schema(CATALOG_SCHEMA).parquet(path)
 
 
 def register_model(
@@ -69,7 +74,7 @@ def register_model(
     path = _version_path(root, name, version)
     params.write.mode("errorifexists").parquet(path)
     row = [(name, version, None, json.dumps(metrics or {}, sort_keys=True), path)]
-    entry = spark.createDataFrame(row, CATALOG_SCHEMA).withColumn(
+    entry = local_frame(spark, row, CATALOG_SCHEMA).withColumn(
         "created_ts", F.current_timestamp()
     )
     entry.write.mode("append").parquet(_catalog_path(root))
@@ -96,7 +101,7 @@ def load_model(
         version = latest_version(spark, root, name)
         if version is None:
             raise FileNotFoundError(f"no registered versions of {name!r}")
-    return spark.read.parquet(_version_path(root, name, version))
+    return read_parquet(spark, _version_path(root, name, version))
 
 
 def describe(spark: SparkSession, root: str, name: str | None = None) -> DataFrame:
@@ -125,11 +130,7 @@ def apply_version_retention(
         .collect()
     )
     doomed = versions[:-keep] if keep > 0 else versions
-    jvm = spark.sparkContext._jvm
-    jsc = spark.sparkContext._jsc
-    hconf = jsc.hadoopConfiguration()
     for v in doomed:
-        p = jvm.org.apache.hadoop.fs.Path(_version_path(root, name, v))
-        fs = p.getFileSystem(hconf)
-        fs.delete(p, True)
+        fs, jpath, _ = _fs_and_path(spark, _version_path(root, name, v))
+        fs.delete(jpath, True)
     return [int(v) for v in doomed]

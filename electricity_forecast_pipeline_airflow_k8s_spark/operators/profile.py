@@ -40,6 +40,50 @@ from pyspark.sql import functions as F
 DEFAULT_GAP_TOLERANCE_SECONDS = 5400
 
 
+def windowed_by_group(
+    df: DataFrame,
+    group_col: str,
+    ts_col: str,
+    value_col: str,
+    iqr_k: float = 3.0,
+    exact_quantiles: bool = True,
+) -> DataFrame:
+    """The rows of ``df`` (group, ts and value only), each carrying its
+    group's quantiles ``_q1``/``_median``/``_q3``, IQR x ``iqr_k`` bounds
+    ``_lower``/``_upper`` and ``_gap_us``, the microseconds since the
+    group's previous timestamp.
+
+    One shuffle serves both window computations over the same hash
+    partitioning: the ordered lag (gaps) and the whole-partition
+    quantiles (bounds). Every row then carries its group's IQR bounds, so
+    the outlier comparison (`core/data_validation.py:195-202`, a
+    per-region Python loop there) happens inline, and one grouped agg
+    over this frame finishes a per-group pass without another exchange
+    (:func:`quality_profile`, ``operators.validation.validate``)."""
+    g, t, v = F.col(group_col), F.col(ts_col), F.col(value_col)
+    pct = F.percentile if exact_quantiles else F.percentile_approx
+    quantiles = pct(v, F.array(F.lit(0.25), F.lit(0.5), F.lit(0.75)))
+    wp = Window.partitionBy(g)
+    wo = wp.orderBy(t)
+    gap_us = F.unix_micros(t) - F.unix_micros(F.lag(t).over(wo))
+    q1, q3 = F.element_at("_qs", 1), F.element_at("_qs", 3)
+    return df.select(
+        g.alias(group_col),
+        t.alias(ts_col),
+        v.alias(value_col),
+        quantiles.over(wp).alias("_qs"),
+        gap_us.alias("_gap_us"),
+    ).withColumns(
+        {
+            "_q1": q1,
+            "_median": F.element_at("_qs", 2),
+            "_q3": q3,
+            "_lower": q1 - iqr_k * (q3 - q1),
+            "_upper": q3 + iqr_k * (q3 - q1),
+        }
+    )
+
+
 def quality_profile(
     df: DataFrame,
     group_col: str = "respondent",
@@ -52,37 +96,9 @@ def quality_profile(
 ) -> DataFrame:
     """One row per group with the full quality profile. Deterministic
     (all stats are exact aggregates; doubles rounded to ``round_to``)."""
-    g, t, v = F.col(group_col), F.col(ts_col), F.col(value_col)
-
-    pct = F.percentile if exact_quantiles else F.percentile_approx
-    quantiles = pct(v, F.array(F.lit(0.25), F.lit(0.5), F.lit(0.75)))
-
-    # One shuffle serves three window computations over the same hash
-    # partitioning: the ordered lag (gaps) and the whole-partition
-    # quantiles (bounds). Every row then carries its group's IQR bounds,
-    # so the outlier comparison (`core/data_validation.py:195-202`, a
-    # per-region Python loop there) happens inline, and ONE grouped agg
-    # finishes everything. Dups = n_rows - distinct timestamps
-    # (== per-group duplicated().sum(), `core/data_validation.py:150`).
-    wp = Window.partitionBy(g)
-    wo = wp.orderBy(t)
-    gap_us = F.unix_micros(t) - F.unix_micros(F.lag(t).over(wo))
-    enriched = df.select(
-        g.alias(group_col),
-        t.alias(ts_col),
-        v.alias(value_col),
-        quantiles.over(wp).alias("_qs"),
-        gap_us.alias("_gap_us"),
-    ).withColumns(
-        {
-            "_q1": F.element_at("_qs", 1),
-            "_median": F.element_at("_qs", 2),
-            "_q3": F.element_at("_qs", 3),
-        }
-    )
-    iqr = F.col("_q3") - F.col("_q1")
-    lower = F.col("_q1") - iqr_k * iqr
-    upper = F.col("_q3") + iqr_k * iqr
+    t, v = F.col(ts_col), F.col(value_col)
+    enriched = windowed_by_group(df, group_col, ts_col, value_col, iqr_k, exact_quantiles)
+    lower, upper = F.col("_lower"), F.col("_upper")
 
     from electricity_forecast_pipeline_airflow_k8s_spark.functions.stats import (
         portable_round,
@@ -106,9 +122,10 @@ def quality_profile(
             F.first("_median").alias("_median_v"),
             F.first("_q1").alias("_q1_v"),
             F.first("_q3").alias("_q3_v"),
-            F.first(lower).alias("_lower"),
-            F.first(upper).alias("_upper"),
+            F.first("_lower").alias("_lower"),
+            F.first("_upper").alias("_upper"),
             F.sum(F.when((v < lower) | (v > upper), 1).otherwise(0)).alias("n_outliers"),
+            # == per-group duplicated().sum() (`core/data_validation.py:150`)
             (F.count(F.lit(1)) - F.count_distinct(F.struct(t))).alias("n_dups"),
             F.sum(F.when(F.col("_gap_us") > tol_us, 1).otherwise(0)).alias("n_gaps"),
             (F.max("_gap_us") / 1_000_000.0).alias("_max_gap_s"),

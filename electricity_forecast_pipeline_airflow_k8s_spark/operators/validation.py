@@ -4,9 +4,13 @@ Spark aggregation plans.
 Reference: `ElectricityDataValidator.validate` (`core/data_validation.py:74-235`)
 runs a Pandera schema (coerce, lazy) plus hand-written quality checks, each as
 its own pandas pass with per-region Python loops. Here every check family is
-compiled into native Column aggregations (zero UDFs -- SURVEY §2.10 U1), so
-one Spark job computes all global checks in a single hash-agg pass and the
-per-group checks in one grouped pass each, at any scale.
+compiled into native Column aggregations (zero UDFs -- SURVEY §2.10 U1) and
+the input is read by two actions at any scale: one global hash-agg pass
+(counts, ranges, moments, median and q99, the region set) and one grouped
+pass over the frame hash-partitioned on the group, which carries the lag gap
+and the IQR quantiles (`operators.profile.windowed_by_group`, shared with
+`quality_profile`) and yields per-group stats, gaps, outliers, duplicates
+and the extreme count against the first pass's q99.
 
 Semantics mirrored exactly (thresholds from `core/data_validation.py` and
 `config.yaml`):
@@ -29,14 +33,18 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from electricity_forecast_pipeline_airflow_k8s_spark.operators.profile import (
     DEFAULT_GAP_TOLERANCE_SECONDS,
+    windowed_by_group,
 )
+from electricity_forecast_pipeline_airflow_k8s_spark.session import local_frame
 
 VALID_TYPES = ("D", "NG", "TI", "ID")
+# set notation in declaration order: a set's own repr follows the hash seed
+VALID_TYPES_TEXT = "{" + ", ".join(map(repr, VALID_TYPES)) + "}"
 MISSING_PCT_ERROR = 5.0  # core/data_validation.py:140-143
 OUTLIER_PCT_WARN = 2.0  # core/data_validation.py:199-200,205
 EXTREME_Q99_FACTOR = 3.0  # core/data_validation.py:61-62
@@ -63,13 +71,9 @@ class ValidationReport:
 def _global_checks(
     df: DataFrame, group_col: str, ts_col: str, value_col: str, type_col: str | None
 ) -> dict[str, Any]:
-    """All global checks in ONE aggregation pass (plus the q99 two-pass gate).
-
-    The q99*3 extreme gate needs a threshold computed from the same column
-    (`core/data_validation.py:61-62`); at scale this is a scalar subquery:
-    tiny aggregate -> broadcast -> second pass. We fold the second pass into
-    the same job via a crossJoin of the 1-row threshold.
-    """
+    """Every global check in one aggregate with no distinct aggregate, so
+    it plans as one partial + final hash-agg. Median and q99 come from one
+    ``percentile``; the region count is the size of the region set."""
     v, t, g = F.col(value_col), F.col(ts_col), F.col(group_col)
     aggs = [
         F.count(F.lit(1)).alias("total_records"),
@@ -77,7 +81,6 @@ def _global_checks(
         F.sum(F.when(g.isNull(), 1).otherwise(0)).alias("null_respondent"),
         F.sum(F.when(v.isNull(), 1).otherwise(0)).alias("missing_values"),
         F.sum(F.when(v < 0, 1).otherwise(0)).alias("negative_values"),
-        F.count_distinct(g).alias("unique_regions"),
         F.sort_array(F.collect_set(g)).alias("regions"),
         F.min(t).alias("date_min"),
         F.max(t).alias("date_max"),
@@ -85,13 +88,7 @@ def _global_checks(
         F.stddev_samp(v).alias("value_std"),
         F.min(v).alias("value_min"),
         F.max(v).alias("value_max"),
-        F.percentile(v, F.lit(0.5)).alias("value_median"),
-        F.percentile(v, F.lit(0.99)).alias("value_q99"),
-        # struct-wrapped so rows with a NULL key/ts still count as distinct
-        # tuples (bare count_distinct(g, t) drops them -> phantom dups)
-        (F.count(F.lit(1)) - F.count_distinct(F.struct(g, t))).alias(
-            "duplicate_timestamps"
-        ),
+        F.percentile(v, F.array(F.lit(0.5), F.lit(0.99))).alias("_pcts"),
     ]
     if type_col and type_col in df.columns:
         aggs.append(
@@ -102,85 +99,57 @@ def _global_checks(
             ).alias("bad_type")
         )
     row = df.agg(*aggs).collect()[0].asDict()
-    if "bad_type" not in row:
-        row["bad_type"] = 0
-
-    # second pass: extreme gate against 3*q99 (dynamic threshold)
-    thr = row["value_q99"]
-    if thr is not None:
-        row["extreme_values"] = df.filter(v >= EXTREME_Q99_FACTOR * F.lit(thr)).count()
-    else:
-        row["extreme_values"] = 0
+    row.setdefault("bad_type", 0)
+    row["unique_regions"] = len(row["regions"])
+    row["value_median"], row["value_q99"] = row.pop("_pcts") or (None, None)
     return row
 
 
-def _gap_stats(
-    df: DataFrame, group_col: str, ts_col: str, tolerance_s: int
+def _group_checks(
+    df: DataFrame,
+    group_col: str,
+    ts_col: str,
+    value_col: str,
+    tolerance_s: int,
+    q99: float | None,
 ) -> list[dict[str, Any]]:
-    """Per-group gap detection via one window pass (W1); replaces the
-    reference's per-region loop (`core/data_validation.py:110-133`)."""
-    w = Window.partitionBy(group_col).orderBy(ts_col)
-    gap_us = F.unix_micros(F.col(ts_col)) - F.unix_micros(F.lag(ts_col).over(w))
-    out = (
-        df.select(F.col(group_col), gap_us.alias("gap_us"))
+    """Every per-group check in one grouped pass over
+    :func:`~operators.profile.windowed_by_group` (one hash shuffle on the
+    group): stats (`core/data_validation.py:176-185`), gaps (:110-133),
+    IQR outliers (:187-218), duplicate timestamps (:149-154) and the
+    extreme gate against the literal 3*q99 of the global pass (:61-62).
+    Rows come back sorted by group, nulls first."""
+    v, t = F.col(value_col), F.col(ts_col)
+    n = F.count(F.lit(1))
+    extreme = v >= EXTREME_Q99_FACTOR * F.lit(q99) if q99 is not None else F.lit(False)
+    rows = (
+        windowed_by_group(df, group_col, ts_col, value_col, IQR_K)
         .groupBy(group_col)
         .agg(
-            F.sum(F.when(F.col("gap_us") > tolerance_s * 1_000_000, 1).otherwise(0)).alias(
-                "n_gaps"
-            ),
-            (F.max("gap_us") / 1_000_000.0).alias("max_gap_s"),
-        )
-        .orderBy(group_col)
-    )
-    return [r.asDict() for r in out.collect()]
-
-
-def _outlier_stats(
-    df: DataFrame, group_col: str, value_col: str, iqr_k: float
-) -> list[dict[str, Any]]:
-    """Per-group IQR-bound outliers in ONE scan: exact quantiles as a
-    whole-partition window aggregate, so each row carries its group's
-    bounds and the outlier flag aggregates inline (A10/A11; same plan
-    shape as operators/profile.quality_profile)."""
-    v = F.col(value_col)
-    wp = Window.partitionBy(group_col)
-    qs = F.percentile(v, F.array(F.lit(0.25), F.lit(0.75))).over(wp)
-    enriched = df.select(F.col(group_col), v.alias(value_col), qs.alias("_qs"))
-    q1, q3 = F.element_at("_qs", 1), F.element_at("_qs", 2)
-    lower = q1 - iqr_k * (q3 - q1)
-    upper = q3 + iqr_k * (q3 - q1)
-    out = (
-        enriched.groupBy(group_col)
-        .agg(
-            F.sum(F.when((v < lower) | (v > upper), 1).otherwise(0)).alias(
-                "n_outliers"
-            ),
-            F.count(F.lit(1)).alias("n_rows"),
-            F.first(lower).alias("lower"),
-            F.first(upper).alias("upper"),
-        )
-        .orderBy(group_col)
-    )
-    return [r.asDict() for r in out.collect()]
-
-
-def _per_group_stats(
-    df: DataFrame, group_col: str, value_col: str
-) -> list[dict[str, Any]]:
-    """A9: one hash-agg replaces N filtered pandas passes
-    (`core/data_validation.py:176-185`)."""
-    v = F.col(value_col)
-    out = (
-        df.groupBy(group_col)
-        .agg(
-            F.count(F.lit(1)).alias("records"),
+            n.alias("records"),
             F.avg(v).alias("mean"),
             F.min(v).alias("min"),
             F.max(v).alias("max"),
+            F.sum(F.when(F.col("_gap_us") > tolerance_s * 1_000_000, 1).otherwise(0)).alias(
+                "n_gaps"
+            ),
+            (F.max("_gap_us") / 1_000_000.0).alias("max_gap_s"),
+            F.sum(
+                F.when((v < F.col("_lower")) | (v > F.col("_upper")), 1).otherwise(0)
+            ).alias("n_outliers"),
+            F.first("_lower").alias("lower"),
+            F.first("_upper").alias("upper"),
+            # struct-wrapped so rows with a NULL ts still count as one
+            # distinct value (bare count_distinct(t) drops them -> phantom dups)
+            (n - F.count_distinct(F.struct(t))).alias("n_dups"),
+            F.sum(F.when(extreme, 1).otherwise(0)).alias("n_extreme"),
         )
-        .orderBy(group_col)
+        .collect()
     )
-    return [r.asDict() for r in out.collect()]
+    return sorted(
+        (r.asDict() for r in rows),
+        key=lambda r: (r[group_col] is not None, r[group_col] or ""),
+    )
 
 
 def validate(
@@ -192,14 +161,19 @@ def validate(
     gap_tolerance_seconds: int = DEFAULT_GAP_TOLERANCE_SECONDS,
 ) -> ValidationReport:
     """Run the full suite; returns the reference-shaped report plus the flat
-    checks DataFrame. Heavy input is scanned a bounded number of times
-    (global agg, extreme gate, gaps window, outlier two-pass) regardless of
-    group count -- no per-group driver loops."""
+    checks DataFrame. Two actions, whatever the group count: the global
+    aggregate, then the grouped pass, which needs the global q99 for its
+    extreme gate. No per-group driver loops; the checks frame is a local
+    relation and runs no job."""
     spark = df.sparkSession
     g = _global_checks(df, group_col, ts_col, value_col, type_col)
-    gaps = _gap_stats(df, group_col, ts_col, gap_tolerance_seconds)
-    outliers = _outlier_stats(df, group_col, value_col, IQR_K)
-    per_group = _per_group_stats(df, group_col, value_col)
+    groups = _group_checks(
+        df, group_col, ts_col, value_col, gap_tolerance_seconds, g["value_q99"]
+    )
+    g["extreme_values"] = sum(r["n_extreme"] for r in groups)
+    g["duplicate_timestamps"] = sum(r["n_dups"] for r in groups)
+    for r in groups:
+        r["outlier_pct"] = r["n_outliers"] * 100.0 / r["records"]
 
     errors: list[str] = []
     warnings: list[str] = []
@@ -212,7 +186,7 @@ def validate(
     if g["null_respondent"]:
         errors.append(f"null {group_col}: {g['null_respondent']} rows")
     if g["bad_type"]:
-        errors.append(f"{type_col} outside {set(VALID_TYPES)}: {g['bad_type']} rows")
+        errors.append(f"{type_col} outside {VALID_TYPES_TEXT}: {g['bad_type']} rows")
     if g["negative_values"]:
         errors.append(f"negative {value_col}: {g['negative_values']} rows")
     if g["extreme_values"]:
@@ -231,18 +205,17 @@ def validate(
         errors.append(
             f"duplicate ({group_col},{ts_col}): {g['duplicate_timestamps']} rows"
         )
-    for row in gaps:
+    for row in groups:
         if row["n_gaps"]:
             warnings.append(
                 f"{row[group_col]}: {row['n_gaps']} gaps > {gap_tolerance_seconds}s "
                 f"(max {row['max_gap_s']:.0f}s)"
             )
-    total_outliers = sum(r["n_outliers"] for r in outliers)
-    for row in outliers:
-        pct = row["n_outliers"] * 100.0 / row["n_rows"] if row["n_rows"] else 0.0
-        if pct > OUTLIER_PCT_WARN:
+    total_outliers = sum(r["n_outliers"] for r in groups)
+    for row in groups:
+        if row["outlier_pct"] > OUTLIER_PCT_WARN:
             warnings.append(
-                f"{row[group_col]}: {row['n_outliers']} outliers ({pct:.2f}% > "
+                f"{row[group_col]}: {row['n_outliers']} outliers ({row['outlier_pct']:.2f}% > "
                 f"{OUTLIER_PCT_WARN}%)"
             )
 
@@ -264,7 +237,7 @@ def validate(
         },
         "per_region": {
             r[group_col]: {k: r[k] for k in ("records", "mean", "min", "max")}
-            for r in per_group
+            for r in groups
         },
         "outliers": {
             "total_count": total_outliers,
@@ -272,10 +245,10 @@ def validate(
             "per_region": {
                 r[group_col]: {
                     "count": r["n_outliers"],
-                    "percentage": r["n_outliers"] * 100.0 / r["n_rows"] if r["n_rows"] else 0.0,
+                    "percentage": r["outlier_pct"],
                     "bounds": {"lower": r["lower"], "upper": r["upper"]},
                 }
-                for r in outliers
+                for r in groups
             },
         },
     }
@@ -289,12 +262,13 @@ def validate(
         ("missing_pct", "error", "__all__", missing_pct, MISSING_PCT_ERROR),
         ("duplicate_timestamps", "error", "__all__", float(g["duplicate_timestamps"]), 0.0),
     ]
-    for row in gaps:
-        check_rows.append(("gaps", "warning", row[group_col], float(row["n_gaps"]), 0.0))
-    for row in outliers:
-        pct = row["n_outliers"] * 100.0 / row["n_rows"] if row["n_rows"] else 0.0
-        check_rows.append(("outlier_pct", "warning", row[group_col], pct, OUTLIER_PCT_WARN))
-    checks = spark.createDataFrame(
+    check_rows += [("gaps", "warning", r[group_col], float(r["n_gaps"]), 0.0) for r in groups]
+    check_rows += [
+        ("outlier_pct", "warning", r[group_col], r["outlier_pct"], OUTLIER_PCT_WARN)
+        for r in groups
+    ]
+    checks = local_frame(
+        spark,
         [
             (c, lvl, scope, metric, thr, metric <= thr)
             for c, lvl, scope, metric, thr in check_rows

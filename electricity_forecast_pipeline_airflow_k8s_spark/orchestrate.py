@@ -140,8 +140,6 @@ def electricity_dag(
       notify           run summary dict (ref send_success_notification
                        :635-733) -- pure result assembly, no side channel
     """
-    from pyspark.sql import functions as F
-
     from electricity_forecast_pipeline_airflow_k8s_spark.ml import registry as REG
     from electricity_forecast_pipeline_airflow_k8s_spark.pipeline import (
         run_preparation,
@@ -155,6 +153,7 @@ def electricity_dag(
     )
     from electricity_forecast_pipeline_airflow_k8s_spark.sources.tables import (
         load_table,
+        read_parquet,
     )
 
     def t_extract(ctx, results):
@@ -169,7 +168,7 @@ def electricity_dag(
         return {r["respondent"]: r["n_rows"] for r in prof.collect()}
 
     def t_train(ctx, results):
-        readings = spark.read.parquet(results["prepare"].validated_path)
+        readings = read_parquet(spark, results["prepare"].validated_path)
         return run_training(
             spark, readings, lookback=lookback, horizon=horizon
         )

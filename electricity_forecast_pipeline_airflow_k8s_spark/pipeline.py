@@ -24,6 +24,7 @@ from electricity_forecast_pipeline_airflow_k8s_spark.ml.forecast import (
     predict_per_group,
 )
 from electricity_forecast_pipeline_airflow_k8s_spark.ml.metrics import forecast_metrics
+from electricity_forecast_pipeline_airflow_k8s_spark.operators.partitioning import reuse
 from electricity_forecast_pipeline_airflow_k8s_spark.operators.scaling import (
     apply_minmax,
     fit_minmax,
@@ -38,6 +39,7 @@ from electricity_forecast_pipeline_airflow_k8s_spark.operators.validation import
     ValidationReport,
     validate,
 )
+from electricity_forecast_pipeline_airflow_k8s_spark.session import local_frame
 from electricity_forecast_pipeline_airflow_k8s_spark.sources.normalize import (
     normalize_readings,
 )
@@ -80,9 +82,7 @@ def run_preparation(
     n = report.stats["total_records"]
 
     # report JSON beside the snapshots (reference: `core/airflow_dag.py:186-197`)
-    report_df = spark.createDataFrame(
-        [(json.dumps(report.as_dict()),)], "report string"
-    ).coalesce(1)
+    report_df = local_frame(spark, [(json.dumps(report.as_dict()),)], "report string")
     write_snapshot(report_df, root, "reports", run_ts)
 
     if fail_on_errors and not report.is_valid:
@@ -110,7 +110,13 @@ def run_training(
     region select (A12) -> minmax scale (U3; full-series fit replicates the
     reference's leakage, `core/kubeflow_pipeline.py:108-109`, unless
     fit_on_train_only) -> chronological split (W4) -> windows (W3) ->
-    per-group fit/eval (U4/U5) -> inverse-scaled forecast."""
+    per-group fit/eval (U4/U5) -> inverse-scaled forecast.
+
+    The fitted params frame is cut with ``reuse``, so the fit runs once per
+    training run: the metrics collect, the forecasts and every later
+    consumer of ``TrainingResult.params`` (the registry write, a job's
+    forecast write) read the blocks of its first action instead of
+    re-running read -> region select -> split -> scale -> windows -> fit."""
     if top_region_only:
         top = (
             readings.groupBy("respondent")
@@ -132,7 +138,7 @@ def run_training(
         horizon=horizon,
         extra_partition_cols=("split",),
     )
-    model = fit_per_group(wins, lookback=lookback, horizon=horizon, alpha=alpha)
+    model = reuse(fit_per_group(wins, lookback=lookback, horizon=horizon, alpha=alpha))
 
     test = wins.filter(F.col("split") == "test").select("respondent", "x", "y")
     preds = predict_per_group(test, model)

@@ -10,8 +10,12 @@ every pandas-UDF boundary, and sane shuffle-partition defaults.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 # Defaults chosen for the 100 TB design point but overridable per-job:
 #  - AQE on: runtime partition coalescing + skew-join handling (few group
@@ -71,6 +75,20 @@ def get_spark(
     if ckdir:
         spark.sparkContext.setCheckpointDir(ckdir)
     return spark
+
+
+def local_frame(spark: SparkSession, rows: Iterable[tuple], ddl: str) -> DataFrame:
+    """A small driver-built frame (a report row, a catalog entry, a checks
+    table) as a ``LocalRelation``: the rows reach the JVM as one Arrow
+    table, so the frame is one partition and building or reading it needs
+    no Spark job and no Python worker. ``createDataFrame`` of a Python list
+    instead parallelizes the rows through a Python RDD, a job with a
+    Python worker per task."""
+    schema = StructType.fromDDL(ddl)
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, row)) for row in rows], schema=to_arrow_schema(schema)
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def s3a_conf(

@@ -15,6 +15,8 @@ from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 
+from electricity_forecast_pipeline_airflow_k8s_spark.sources.tables import read_parquet
+
 
 def _fs_and_path(spark: SparkSession, path: str):
     jvm = spark.sparkContext._jvm
@@ -49,11 +51,12 @@ def list_snapshots(spark: SparkSession, root: str, prefix: str) -> list[str]:
 
 
 def latest_snapshot(spark: SparkSession, root: str, prefix: str) -> DataFrame:
-    """Read the newest snapshot (`core/train_katib.py:99-104` semantics)."""
+    """Read the newest snapshot (`core/train_katib.py:99-104` semantics),
+    schema pinned from its footer."""
     snaps = list_snapshots(spark, root, prefix)
     if not snaps:
         raise FileNotFoundError(f"no snapshots under {root}/{prefix}")
-    return spark.read.parquet(f"{root}/{prefix}/run_ts={snaps[-1]}")
+    return read_parquet(spark, f"{root}/{prefix}/run_ts={snaps[-1]}")
 
 
 def apply_retention(

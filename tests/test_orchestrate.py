@@ -143,3 +143,38 @@ def test_electricity_dag_failure_path(spark, sf_dir, tmp_path, monkeypatch):
     assert report.tasks["quality_summary"].state == "success"
     for name in ("train", "register", "cleanup", "notify"):
         assert report.tasks[name].state == "upstream_failed", name
+
+
+# The warm weekly DAG run's Spark jobs on the benchmark's readings. It was
+# 42 before validation became two actions, the fit was cut with reuse() and
+# the driver-built frames became local relations.
+DAG_JOB_BUDGET = 28
+
+
+def test_electricity_dag_job_budget(spark, tmp_path):
+    """Jobs per run is the DAG's cost model (ROADMAP item 2): on the
+    benchmark-sized readings (10 regions x 30 days, hourly) a warm second
+    run into the same lake fires at most DAG_JOB_BUDGET jobs, and its
+    training metrics equal the first run's."""
+    import importlib.util
+    import os
+
+    path = os.path.join(os.path.dirname(__file__), "..", "perfbench", "datagen.py")
+    spec = importlib.util.spec_from_file_location("perfbench_datagen", path)
+    datagen = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(datagen)
+    data = str(tmp_path / "data")
+    assert datagen.write_readings(data, seed=1, days=30) == 7200
+
+    jobs = spark.sparkContext._jsc.sc().dagScheduler()
+    notify, fired = [], []
+    for run_ts in ("20240401_000000", "20240408_000000"):
+        before = jobs.numTotalJobs()
+        tasks = electricity_dag(spark, data, str(tmp_path / "lake"), run_ts, lookback=24, horizon=6)
+        report = run_dag(tasks, ctx={"spark": spark})
+        fired.append(jobs.numTotalJobs() - before)
+        assert report.ok, {n: (t.state, t.error) for n, t in report.tasks.items()}
+        notify.append(report.results["notify"])
+    assert fired[1] <= DAG_JOB_BUDGET, fired
+    assert notify[1]["metrics"] == notify[0]["metrics"]
+    assert [n["model_version"] for n in notify] == [1, 2]

@@ -20,7 +20,11 @@ import pytest
 from pyspark.sql.types import StructType, TimestampType
 
 from electricity_forecast_pipeline_airflow_k8s_spark.pipeline import run_preparation
-from electricity_forecast_pipeline_airflow_k8s_spark.sources.tables import TABLES, load_table
+from electricity_forecast_pipeline_airflow_k8s_spark.sources.tables import (
+    TABLES,
+    load_table,
+    read_parquet,
+)
 
 ROWS = [
     (1, datetime.datetime(2024, 1, 1, 0, 0, 0, 0), 10, "a", 1.0, "{}"),
@@ -270,3 +274,53 @@ def test_no_package_module_mentions_nanos_as_long():
                 src = fh.read()
             bad += [f"{os.path.relpath(path, pkg)}: {word}" for word in removed if word in src]
     assert not bad, bad
+
+
+def test_dag_and_job_reads_fire_no_job(spark, sf_dir, tmp_path, monkeypatch):
+    """The weekly DAG's train read, latest_snapshot, the registry's
+    load_model and train_job's forecast re-read all go through the
+    footer-pinned reader: none fires a Spark job, and each yields the
+    schema Spark's own inference does."""
+    from types import SimpleNamespace
+
+    from electricity_forecast_pipeline_airflow_k8s_spark import jobs, pipeline
+    from electricity_forecast_pipeline_airflow_k8s_spark.ml import registry
+    from electricity_forecast_pipeline_airflow_k8s_spark.orchestrate import electricity_dag
+    from electricity_forecast_pipeline_airflow_k8s_spark.sources.snapshots import (
+        latest_snapshot,
+        write_snapshot,
+    )
+
+    lake = f"file://{tmp_path}/lake"
+    readings = load_table(spark, "events", sf_dir).limit(40)
+    snap = write_snapshot(readings, lake, "processed", "20240101_000000")
+    registry.register_model(spark, readings, lake, "m")
+
+    def no_job(read, path):
+        before = _jobs_started(spark)
+        df = read()
+        assert _jobs_started(spark) == before, path
+        assert df.schema == spark.read.parquet(path).schema, path
+        return df
+
+    no_job(lambda: latest_snapshot(spark, lake, "processed"), snap)
+    no_job(lambda: registry.load_model(spark, lake, "m", 1), f"{lake}/registry/m/v=1")
+
+    # the DAG's train task, with training stubbed out: what is left is its read
+    monkeypatch.setattr(pipeline, "run_training", lambda spark, readings, **kw: readings)
+    train = next(t for t in electricity_dag(spark, sf_dir, lake) if t.name == "train")
+    no_job(lambda: train.fn({}, {"prepare": SimpleNamespace(validated_path=snap)}), snap)
+
+    # train_job's forecast re-read: spy on the reader it calls
+    reads = []
+
+    def spy(spark, path):
+        reads.append(path)
+        return no_job(lambda: read_parquet(spark, path), path)
+
+    stub = SimpleNamespace(params=readings, metrics={}, forecasts=readings)
+    monkeypatch.setattr(jobs, "run_training", lambda spark, readings, **kw: stub)
+    monkeypatch.setattr(jobs, "read_parquet", spy)
+    monkeypatch.setattr(registry, "register_model", lambda *a, **kw: 2)
+    out = jobs.train_job(spark, lake, model_name="m")
+    assert reads == [out["forecast_path"]] and out["n_forecast_rows"] == 40

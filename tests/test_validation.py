@@ -2,6 +2,9 @@
 negative variants; semantics from `core/data_validation.py`)."""
 
 import datetime as dt
+import json
+import math
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -135,6 +138,90 @@ def test_checks_dataframe_surface(clean_readings):
     rows = {(r["check"], r["scope"]): r for r in rep.checks.collect()}
     assert rows[("missing_pct", "__all__")]["passed"]
     assert all(r["passed"] for r in rows.values())
+
+
+DIRTY_GOLDEN = os.path.join(os.path.dirname(__file__), "golden", "validation_dirty_report.json")
+
+
+def dirty_rows() -> list[tuple]:
+    """Hourly readings (3 regions x 10 days) that trip every check: null
+    period, respondent and value (> 5% null values), a bad type, a
+    negative value, one value >= 3*q99, duplicates (one of them on a null
+    respondent, one on a null period), a gap and IQR outliers."""
+    base = dt.datetime(2024, 1, 1)
+    rows = []
+    for region, level in [("CAL", 20000.0), ("TEX", 30000.0), ("NY", 15000.0)]:
+        for h in range(240):
+            if region == "NY" and 100 <= h < 104:
+                continue  # a 5-hour gap
+            value = level + (h % 24) * 100.0
+            if region == "TEX" and h % 24 == 12 and h < 192:
+                value = 1.0  # 8 low IQR outliers: 3.4% of TEX
+            if h < 14:
+                value = None  # 42 nulls: > 5% of the rows
+            rows.append((base + dt.timedelta(hours=h), region, "D", value))
+    rows[20] = (rows[20][0], "CAL", "XX", rows[20][3])
+    rows[30] = (rows[30][0], "CAL", "D", 1_000_000.0)  # >= 3*q99
+    rows[300] = (rows[300][0], "TEX", "NG", -5.0)
+    rows += rows[40:45]  # five (respondent, period) duplicates
+    rows += [
+        (base, None, "D", 10.0),
+        (base, None, "TI", 11.0),  # a duplicate on a null respondent
+        (None, "NY", "ID", 12.0),
+        (None, "NY", "D", 13.0),  # a duplicate on a null period
+    ]
+    return rows
+
+
+@pytest.fixture(scope="module")
+def dirty_readings(spark):
+    return spark.createDataFrame(
+        dirty_rows(), "period timestamp, respondent string, type string, value double"
+    )
+
+
+def _report_record(rep) -> dict:
+    """The report plus the checks frame's rows, as plain JSON values."""
+    checks = sorted(
+        (tuple(r) for r in rep.checks.collect()), key=lambda r: (r[0], r[2] or "")
+    )
+    return json.loads(json.dumps({**rep.as_dict(), "checks": [list(c) for c in checks]}))
+
+
+def _assert_same(got, want, path="report"):
+    """Exact on every bool, int, string and list shape; doubles within
+    1e-12 relative (a changed aggregation order moves the last ulp)."""
+    if isinstance(want, float):
+        assert isinstance(got, float) and math.isclose(got, want, rel_tol=1e-12), (path, got, want)
+    elif isinstance(want, dict):
+        assert sorted(got) == sorted(want), path
+        for k in want:
+            _assert_same(got[k], want[k], f"{path}.{k}")
+    elif isinstance(want, list):
+        assert len(got) == len(want), (path, got, want)
+        for i, (a, b) in enumerate(zip(got, want)):
+            _assert_same(a, b, f"{path}[{i}]")
+    else:
+        assert type(got) is type(want) and got == want, (path, got, want)
+
+
+def test_dirty_report_matches_pinned_report(dirty_readings, spark):
+    """Every check fires on the dirty fixture, and the report (with the
+    checks frame) equals the one pinned in tests/golden; validate runs at
+    most 6 Spark jobs (one global aggregate and one grouped pass)."""
+    jobs = spark.sparkContext._jsc.sc().dagScheduler()
+    before = jobs.numTotalJobs()
+    rep = validate(dirty_readings)
+    assert jobs.numTotalJobs() - before <= 6
+    got = _report_record(rep)
+    with open(DIRTY_GOLDEN) as fh:
+        want = json.load(fh)
+    _assert_same(got, want)
+    fired = {c[0] for c in got["checks"] if not c[5]}
+    assert fired == {
+        "null_period", "null_respondent", "bad_type", "negative_values", "extreme_values",
+        "missing_pct", "duplicate_timestamps", "gaps", "outlier_pct",
+    }
 
 
 def test_quality_profile_scale_matches_exact_on_exact_columns(spark, sf_dir):
