@@ -5,14 +5,17 @@ backed by MinIO (`core/kubeflow_pipeline.py:330-368`: log_model ->
 register_model -> version number -> metric description) and resolves
 "latest" at serving time. Spark-first, a model IS a DataFrame (the
 params-as-data convention of ml/forecast.py), so the registry is two
-parquet surfaces under ``<root>/registry/``:
+parquet surfaces:
 
 * ``<root>/registry/<name>/v=<version>/`` -- the immutable per-version
   params snapshot (one row per group: weights, lookback, horizon);
-* ``<root>/registry/_catalog/`` -- an append-only catalog of
+* ``<root>/registry_catalog/`` -- an append-only catalog of
   (model_name, version, created_ts, metrics_json, path) rows. Appends
   are atomic at the parquet-file level, versions are monotonically
-  increasing per name, and "latest" is an argmax over the catalog.
+  increasing per name, and "latest" is an argmax over the catalog. It
+  sits beside ``registry/``, not in it, so no model name can clash with
+  it, and its name starts with neither ``_`` nor ``.``, which Spark and
+  pyarrow treat as hidden.
 
 No external service, no pickle: everything is columnar, scan-parallel,
 and readable by any engine. Retention composes with
@@ -37,7 +40,7 @@ CATALOG_SCHEMA = (
 
 
 def _catalog_path(root: str) -> str:
-    return f"{root.rstrip('/')}/registry/_catalog"
+    return f"{root.rstrip('/')}/registry_catalog"
 
 
 def _version_path(root: str, name: str, version: int) -> str:

@@ -180,8 +180,12 @@ def test_model_registry_first_registration_and_one_file_per_append(spark, tmp_pa
     """The catalog's existence is a file-system check, not a failed read:
     before the first registration the catalog is an empty local relation
     (one partition, no Python worker), and each registration appends
-    exactly one data file."""
+    exactly one data file. The catalog is a plain parquet dataset that
+    pyarrow reads, on no path that Spark or pyarrow treats as hidden."""
     import glob
+    import os
+
+    import pyarrow.dataset as ds
 
     from electricity_forecast_pipeline_airflow_k8s_spark.ml import registry as REG
     from electricity_forecast_pipeline_airflow_k8s_spark.session import local_frame
@@ -197,8 +201,11 @@ def test_model_registry_first_registration_and_one_file_per_append(spark, tmp_pa
     assert empty.count() == 0
     for want in (1, 2):
         assert REG.register_model(spark, params, root, "m", {"rmse": float(want)}) == want
-        files = glob.glob(f"{root}/registry/_catalog/*.parquet")
+        files = glob.glob(f"{root}/registry_catalog/*.parquet")
         assert len(files) == want, files
+        assert ds.dataset(REG._catalog_path(root)).count_rows() == want
+    rel = os.path.relpath(REG._catalog_path(root), root)
+    assert not any(part.startswith(("_", ".")) for part in rel.split(os.sep)), rel
     assert REG.latest_version(spark, root, "m") == 2
     assert REG.load_model(spark, root, "m").collect() == params.collect()
 

@@ -1,8 +1,14 @@
-"""DAG runner semantics (Airflow-analog: topological order, retries,
-upstream_failed propagation, XCom result passing) and the end-to-end
-electricity chain over sf0.001 (`core/airflow_dag.py:736-778`)."""
+"""DAG runner semantics (Airflow-executor analog: independent tasks run
+concurrently, retries, upstream_failed propagation, XCom result passing)
+and the end-to-end electricity chain over sf0.001
+(`core/airflow_dag.py:736-778`)."""
 
 from __future__ import annotations
+
+import random
+import sys
+import threading
+import time
 
 import pytest
 
@@ -14,20 +20,114 @@ from electricity_forecast_pipeline_airflow_k8s_spark.orchestrate import (
 
 
 def test_topological_order_deterministic():
-    seen = []
+    """The report lists tasks in topological order with ties broken by
+    name, whatever order they finished in: "b" finishes last here."""
 
-    def mk(name):
-        return lambda ctx, results: seen.append(name)
+    def mk(name, delay=0.0):
+        return lambda ctx, results: time.sleep(delay) or name
 
     tasks = [
         Task("c", mk("c"), deps=("a", "b")),
-        Task("b", mk("b"), deps=("a",)),
+        Task("b", mk("b", 0.2), deps=("a",)),
         Task("a", mk("a")),
         Task("d", mk("d"), deps=("a",)),
     ]
     report = run_dag(tasks)
     assert report.ok
-    assert seen == ["a", "b", "c", "d"]  # ready-set ties broken by name
+    assert list(report.tasks) == ["a", "b", "c", "d"]
+    assert list(report.results) == ["a", "b", "c", "d"]
+    assert report.tasks["d"].start_s < report.tasks["b"].start_s + report.tasks["b"].seconds
+    assert report.wall_s >= report.tasks["b"].seconds
+
+
+def test_task_starts_after_all_upstreams_finish():
+    """From a start/finish log kept under a lock: no task starts before
+    every upstream has finished, and each task sees every upstream's
+    result. Sixteen tasks over three layers, more threads than cores,
+    and a short switch interval to shake out interleavings."""
+    log, lock = [], threading.Lock()
+    rng = random.Random(7)
+
+    def mk(name, deps):
+        delay = rng.uniform(0.0, 0.02)
+
+        def fn(ctx, results):
+            with lock:
+                log.append(("start", name))
+            assert all(results[d] == d for d in deps), (name, sorted(results))
+            time.sleep(delay)
+            with lock:
+                log.append(("end", name))
+            return name
+
+        return Task(name, fn, deps=deps)
+
+    mids = [f"b{i}" for i in range(10)]
+    tasks = [mk("a", ())] + [mk(b, ("a",)) for b in mids]
+    tasks += [mk(f"c{i}", (mids[i], mids[(i + 3) % 10])) for i in range(4)]
+    tasks.append(mk("z", tuple(f"c{i}" for i in range(4)) + ("b9",)))
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        report = run_dag(tasks)
+    finally:
+        sys.setswitchinterval(old)
+    assert report.ok, {n: t.error for n, t in report.tasks.items() if t.error}
+    pos = {event: i for i, event in enumerate(log)}
+    assert len(pos) == 2 * len(tasks)
+    for t in tasks:
+        for d in t.deps:
+            assert pos[("end", d)] < pos[("start", t.name)], (d, t.name)
+
+
+def test_sibling_tasks_run_concurrently():
+    """Two siblings meet at a barrier: both succeed only if they run at
+    the same time, as Airflow's executor runs them."""
+    barrier = threading.Barrier(2, timeout=10)
+
+    def meet(ctx, results):
+        return barrier.wait()
+
+    tasks = [
+        Task("a", lambda ctx, r: 1),
+        Task("b", meet, deps=("a",)),
+        Task("c", meet, deps=("a",)),
+    ]
+    report = run_dag(tasks)
+    assert report.ok, {n: t.error for n, t in report.tasks.items()}
+    assert sorted(report.results[n] for n in "bc") == [0, 1]
+
+
+def test_task_threads_inherit_spark_job_group(spark):
+    """Every job a two-branch run fires, from any task thread, lands in
+    the caller's job group, so cancelJobGroup covers the whole run."""
+    sc = spark.sparkContext
+    group = f"dag-{time.time_ns()}"
+
+    def count(n):
+        return lambda ctx, r: spark.range(n).count()
+
+    tasks = [
+        Task("a", count(10)),
+        Task("b", count(20), deps=("a",)),
+        Task("c", count(30), deps=("a",)),
+        Task("d", lambda ctx, r: r["b"] + r["c"], deps=("b", "c")),
+    ]
+    jobs = sc._jsc.sc().dagScheduler()
+    sc.setJobGroup(group, "weekly run")
+    try:
+        before = jobs.numTotalJobs()
+        report = run_dag(tasks, ctx={"spark": spark})
+        after = jobs.numTotalJobs()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc.setLocalProperty("spark.job.interruptOnCancel", None)
+    assert report.ok, {n: t.error for n, t in report.tasks.items()}
+    assert report.results["d"] == 50
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    assert after - before >= 3
+    assert sorted(sc.statusTracker().getJobIdsForGroup(group)) == list(range(before, after))
 
 
 def test_results_pass_downstream_like_xcom():
@@ -154,8 +254,9 @@ DAG_JOB_BUDGET = 28
 def test_electricity_dag_job_budget(spark, tmp_path):
     """Jobs per run is the DAG's cost model (ROADMAP item 2): on the
     benchmark-sized readings (10 regions x 30 days, hourly) a warm second
-    run into the same lake fires at most DAG_JOB_BUDGET jobs, and its
-    training metrics equal the first run's."""
+    run into the same lake fires at most DAG_JOB_BUDGET jobs, its
+    quality_summary starts before prepare finishes, and its training
+    metrics equal the first run's."""
     import importlib.util
     import os
 
@@ -167,7 +268,7 @@ def test_electricity_dag_job_budget(spark, tmp_path):
     assert datagen.write_readings(data, seed=1, days=30) == 7200
 
     jobs = spark.sparkContext._jsc.sc().dagScheduler()
-    notify, fired = [], []
+    notify, fired, reports = [], [], []
     for run_ts in ("20240401_000000", "20240408_000000"):
         before = jobs.numTotalJobs()
         tasks = electricity_dag(spark, data, str(tmp_path / "lake"), run_ts, lookback=24, horizon=6)
@@ -175,6 +276,10 @@ def test_electricity_dag_job_budget(spark, tmp_path):
         fired.append(jobs.numTotalJobs() - before)
         assert report.ok, {n: (t.state, t.error) for n, t in report.tasks.items()}
         notify.append(report.results["notify"])
+        reports.append(report)
     assert fired[1] <= DAG_JOB_BUDGET, fired
+    # the parallel branch overlaps prepare, as Airflow's executor runs it
+    prep, qual = reports[1].tasks["prepare"], reports[1].tasks["quality_summary"]
+    assert qual.start_s < prep.start_s + prep.seconds, reports[1].tasks
     assert notify[1]["metrics"] == notify[0]["metrics"]
     assert [n["model_version"] for n in notify] == [1, 2]

@@ -56,13 +56,21 @@ def main(
         tasks = electricity_dag(spark, sf_dir, lake, run_ts=RUN_TS)
         report = run_dag(tasks, ctx={"spark": spark})
 
-        # -- per-task run report (the Airflow UI view, as data) ------------
+        # -- per-task run report (the Airflow UI view, as data): start_s is
+        # each task's offset from the run's start, so overlapping tasks show
+        # as overlapping [start_s, start_s + seconds) intervals -----------
         run_report = {
             "sf_dir": sf_dir,
             "run_ts": RUN_TS,
             "ok": report.ok,
+            "wall_s": report.wall_s,
             "tasks": {
-                n: {"state": t.state, "attempts": t.attempts, "seconds": t.seconds}
+                n: {
+                    "state": t.state,
+                    "attempts": t.attempts,
+                    "start_s": t.start_s,
+                    "seconds": t.seconds,
+                }
                 for n, t in report.tasks.items()
             },
             "notify_summary": report.results.get("notify"),
