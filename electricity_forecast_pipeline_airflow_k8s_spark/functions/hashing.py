@@ -1,7 +1,6 @@
-"""Hashing helpers. md5-based constructions are engine-portable (identical
-in DuckDB/Trino/Spark -- used wherever oracle parity matters: minhash,
-simhash, fingerprints); xxhash64 is the faster Spark-only alternative for
-production paths that don't need cross-engine determinism."""
+"""Hashing helpers. Every construction is md5-based, so it is
+engine-portable (identical in DuckDB/Trino/Spark): minhash, simhash,
+fingerprints and hash sampling all have oracles that replay it."""
 
 from __future__ import annotations
 
@@ -9,15 +8,13 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def stable_hash(*cols, portable: bool = True) -> Column:
-    """Deterministic row hash. portable=True -> md5 over concatenated
-    values (cross-engine); False -> xxhash64 (faster, Spark-native)."""
+def stable_hash(*cols) -> Column:
+    """Deterministic row hash: md5 over the values joined by a unit
+    separator, the same in every engine."""
     parts = [
         (F.col(c) if isinstance(c, str) else c).cast("string") for c in cols
     ]
-    if portable:
-        return F.md5(F.concat_ws("\x1f", *parts))
-    return F.xxhash64(*parts)
+    return F.md5(F.concat_ws("\x1f", *parts))
 
 
 def hex_nibble(hash_col, pos: int) -> Column:

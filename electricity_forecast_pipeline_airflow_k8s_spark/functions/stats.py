@@ -15,21 +15,16 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def exact_mean(col, precision: int = 18, scale: int = 2) -> Column:
-    """Aggregate mean via exact decimal sum / count (null-skipping like
-    avg). Use over a groupBy or as a window function via .over()."""
+def exact_mean(col) -> Column:
+    """Aggregate mean via exact decimal(18,2) sum / count (null-skipping
+    like avg). Use over a groupBy or as a window function via .over()."""
     c = F.col(col) if isinstance(col, str) else col
-    return F.try_divide(
-        F.sum(c.cast(f"decimal({precision},{scale})")).cast("double"), F.count(c)
-    )
+    return F.try_divide(F.sum(c.cast("decimal(18,2)")).cast("double"), F.count(c))
 
 
-def exact_mean_sql(expr: str, precision: int = 18, scale: int = 2) -> str:
+def exact_mean_sql(expr: str) -> str:
     """DuckDB fragment computing the identical exact mean."""
-    return (
-        f"CAST(sum(CAST({expr} AS DECIMAL({precision},{scale}))) AS DOUBLE)"
-        f" / count({expr})"
-    )
+    return f"CAST(sum(CAST({expr} AS DECIMAL(18,2))) AS DOUBLE) / count({expr})"
 
 
 def portable_round(col, decimals: int = 4) -> Column:

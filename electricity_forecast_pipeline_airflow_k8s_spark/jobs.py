@@ -42,25 +42,27 @@ def prepare_job(
     input_path: str,
     lake_root: str,
     run_ts: str | None = None,
-    drift_split_days: int = 7,
 ) -> dict[str, Any]:
     """Weekly preparation: read raw -> normalize -> validate -> snapshot ->
     retention, plus the drift check the reference only configured
     (`config.yaml:44-47`): PSI + KS between the trailing week and the rest
-    of the new batch."""
+    of the new batch. Retention runs only after a successful validation,
+    as the reference's cleanup task runs only after its upstream tasks
+    succeed: a failed run adds its snapshots and deletes none."""
     # the loader's footer-pinned read: any `ts` precision lands as TIMESTAMP
     raw = read_parquet(spark, input_path)
     if "ts" in raw.columns and "period" not in raw.columns:
         raw = events_as_readings(raw)
     res = run_preparation(spark, raw, lake_root, run_ts=run_ts, fail_on_errors=False)
-    for prefix in ("raw", "processed", "reports"):
-        apply_retention(spark, lake_root, prefix)
+    if res.validated_path is not None:
+        for prefix in ("raw", "processed", "reports"):
+            apply_retention(spark, lake_root, prefix)
 
     normalized = normalize_readings(raw)
     # timestamp arithmetic, not date_sub: date_sub truncates to midnight,
     # shifting the trailing-week boundary by up to 24h from max(period)
     split_ts = normalized.agg(
-        (F.max("period") - F.expr(f"INTERVAL {int(drift_split_days)} DAYS"))
+        (F.max("period") - F.expr("INTERVAL 7 DAYS"))
     ).collect()[0][0]
     drift = {}
     if split_ts is not None:

@@ -47,17 +47,17 @@ def fit_per_group(
     lookback: int = 168,
     horizon: int = 24,
     alpha: float = 1.0,
-    split: str | None = "train",
     split_col: str = "split",
 ) -> DataFrame:
-    """Train one model per group on its (x, y) windows; returns a params
-    DataFrame (group, weights flat array, shape metadata, n_train).
+    """Train one model per group on its (x, y) windows -- only the
+    ``train`` rows when ``windows`` has a ``split_col`` column; returns a
+    params DataFrame (group, weights flat array, shape metadata, n_train).
 
     Scale: one shuffle on the group key; each group trains independently on
     one executor (the reference's one-pod-per-region Katib layout collapses
     into task parallelism)."""
-    if split is not None and split_col in windows.columns:
-        windows = windows.filter(F.col(split_col) == split)
+    if split_col in windows.columns:
+        windows = windows.filter(F.col(split_col) == "train")
 
     schema = T.StructType(
         [

@@ -45,10 +45,10 @@ def _grads(p, x, y):
     return g, loss
 
 
-def _clip(g, max_norm=CLIP_NORM):
+def _clip(g):
     total = np.sqrt(sum(float((v**2).sum()) for v in g.values()))
-    if total > max_norm:
-        scale = max_norm / (total + 1e-12)
+    if total > CLIP_NORM:
+        scale = CLIP_NORM / (total + 1e-12)
         g = {k: v * scale for k, v in g.items()}
     return g
 

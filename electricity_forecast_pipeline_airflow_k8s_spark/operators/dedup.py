@@ -9,7 +9,7 @@ Scale design: every variant is shuffle-bounded --
   * SimHash: per-token hash bits summed per doc (one agg), hamming-bucket
     join on the short code.
 All hashing is md5-based (deterministic, identical in any engine) so oracle
-parity holds; swap in xxhash64 for raw speed where parity isn't needed.
+parity holds.
 """
 
 from __future__ import annotations
@@ -31,6 +31,9 @@ from electricity_forecast_pipeline_airflow_k8s_spark.operators.text import token
 # more than the 32-way shuffle even on a 584 KB corpus. The r11 "pin
 # regression" was machine drift, not the pin. The unconditional pin
 # stays: it is the scale-safe choice AND the fast one.
+
+# SimHash code width: simhash_codes writes it, simhash_neardup_pairs bands it
+SIMHASH_BITS = 16
 
 
 def shingles(text_col: str, n: int = 3) -> Column:
@@ -97,7 +100,6 @@ def minhash_signature(
     text_col: str = "text",
     id_col: str = "doc_id",
     k: int = 12,
-    shingle_n: int = 3,
 ) -> DataFrame:
     """k-min-hash signature per doc: sig_i = min over shingles of
     md5(i | shingle). One explode + one agg with k mins (single pass,
@@ -110,7 +112,7 @@ def minhash_signature(
     par = df.sparkSession.sparkContext.defaultParallelism
     sh = (
         df.repartition(par, id_col)
-        .select(F.col(id_col), F.explode(shingles(text_col, shingle_n)).alias("s"))
+        .select(F.col(id_col), F.explode(shingles(text_col)).alias("s"))
     )
     aggs = [
         F.min(F.md5(F.concat(F.lit(f"{i}|"), F.col("s")))).alias(f"sig_{i}")
@@ -165,7 +167,6 @@ def jaccard_verify(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    shingle_n: int = 3,
     threshold: float = 0.5,
 ) -> DataFrame:
     """Exact shingle-Jaccard on candidate pairs only (the cheap second
@@ -185,7 +186,7 @@ def jaccard_verify(
     module-level note.)"""
     par = df.sparkSession.sparkContext.defaultParallelism
     sh = df.repartition(par, id_col).select(
-        F.col(id_col), shingles(text_col, shingle_n).alias("sh")
+        F.col(id_col), shingles(text_col).alias("sh")
     )
     j = (
         pairs.hint("shuffle_hash")
@@ -215,7 +216,6 @@ def minhash_lsh_dedup_pairs(
     id_col: str = "doc_id",
     k: int = 12,
     bands: int = 4,
-    shingle_n: int = 3,
     threshold: float = 0.5,
 ) -> DataFrame:
     """Full near-dup pipeline: signature -> banded candidates -> exact
@@ -229,7 +229,7 @@ def minhash_lsh_dedup_pairs(
     par = df.sparkSession.sparkContext.defaultParallelism
     sh = reuse(
         df.repartition(par, id_col).select(
-            F.col(id_col), shingles(text_col, shingle_n).alias("sh")
+            F.col(id_col), shingles(text_col).alias("sh")
         )
     )
     exploded = sh.select(F.col(id_col), F.explode("sh").alias("s"))
@@ -276,16 +276,15 @@ def connected_components(
     pairs: DataFrame,
     a_col: str = "doc_a",
     b_col: str = "doc_b",
-    max_iter: int = 20,
 ) -> DataFrame:
     """Cluster near-dup pairs into components: (node, component) where
     component = min node id reachable through the pair graph.
 
     Min-label propagation over an edges DataFrame: each iteration joins
-    labels across edges and keeps the min; stops at fixpoint. Iterations
-    are O(diameter) -- near-dup graphs are shallow (dup clusters are
-    near-cliques), so a handful of joins suffice at any corpus size; each
-    iteration is one shuffle join, no driver-side graph.
+    labels across edges and keeps the min; stops at fixpoint, or after 20
+    iterations. Iterations are O(diameter) -- near-dup graphs are shallow
+    (dup clusters are near-cliques), so a handful of joins suffice at any
+    corpus size; each iteration is one shuffle join, no driver-side graph.
     """
     # materialize the (possibly expensive) pair source once, and cut the
     # growing iteration lineage with ``reuse`` -- otherwise every
@@ -306,7 +305,7 @@ def connected_components(
         .distinct()
         .withColumn("component", F.col("node"))
     )
-    for _ in range(max_iter):
+    for _ in range(20):
         # neighbor labels: for each node, the min component among neighbors
         neighbor = (
             edges.join(labels, edges.dst == labels.node)
@@ -353,9 +352,7 @@ def dedup_keep_canonical(
     return df.join(doomed, id_col, "left_anti")
 
 
-def simhash_codes(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n_bits: int = 16
-) -> DataFrame:
+def simhash_codes(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """SimHash over distinct tokens: bit j of md5(token) votes +/-1 on code
     position j; sign of each positional sum forms the code.
 
@@ -371,13 +368,13 @@ def simhash_codes(
 
     h = F.md5(F.col("tok"))
     votes = []
-    for j in range(n_bits):
+    for j in range(SIMHASH_BITS):
         nibble = hex_nibble(h, j // 4 + 1)
         bit = F.floor(nibble / (2 ** (j % 4))).cast("int") % 2
         votes.append(F.sum(bit * 2 - 1).alias(f"v{j}"))
     summed = tok.groupBy(id_col).agg(*votes)
     code = F.lit(0)
-    for j in range(n_bits):
+    for j in range(SIMHASH_BITS):
         code = code + F.when(F.col(f"v{j}") > 0, F.lit(2**j)).otherwise(F.lit(0))
     return summed.select(F.col(id_col), code.cast("int").alias("simhash"))
 
@@ -452,7 +449,6 @@ def ngram_contamination(
 def simhash_neardup_pairs(
     codes: DataFrame,
     max_hamming: int = 3,
-    n_bits: int = 16,
     n_bands: int = 4,
     id_col: str = "doc_id",
     code_col: str = "simhash",
@@ -473,7 +469,7 @@ def simhash_neardup_pairs(
             f"need n_bands > max_hamming for exact recall "
             f"(got n_bands={n_bands}, max_hamming={max_hamming})"
         )
-    width = n_bits // n_bands
+    width = SIMHASH_BITS // n_bands
     mask = (1 << width) - 1
     bands = codes.select(
         F.col(id_col),

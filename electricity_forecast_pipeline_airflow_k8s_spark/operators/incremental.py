@@ -54,17 +54,16 @@ def merge_partial_stats(*states: DataFrame) -> DataFrame:
     )
 
 
-def finalize_stats(state: DataFrame, round_to: int = 4) -> DataFrame:
+def finalize_stats(state: DataFrame) -> DataFrame:
     """Derive reportable stats from state. Mean = exact decimal sum /
-    count (the repo-wide cross-engine-exact convention)."""
+    count (the repo-wide cross-engine-exact convention), at 4 decimals."""
     group_col = state.columns[0]
-    scale = 10**round_to
     mean = F.try_divide(F.col("sum_dec").cast("double"), F.col("n_vals"))
     return state.select(
         F.col(group_col),
         "n_rows",
         "n_vals",
-        (F.floor(mean * scale + 0.5) / scale).alias("mean_v"),
+        (F.floor(mean * 10000 + 0.5) / 10000).alias("mean_v"),
         "min_v",
         "max_v",
     )

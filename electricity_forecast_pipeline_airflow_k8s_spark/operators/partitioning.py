@@ -51,13 +51,12 @@ def reuse(df: DataFrame) -> DataFrame:
     return out
 
 
-def fanout(df: DataFrame, num_partitions: int | None = None) -> DataFrame:
-    """Round-robin repartition to ``num_partitions`` (default: the
-    cluster's ``defaultParallelism``) when — and only when — the plan
-    currently has fewer partitions. Row order is not preserved; callers
-    must not rely on scan order (none of the registered queries do —
-    every output contract orders explicitly)."""
-    n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
+def fanout(df: DataFrame) -> DataFrame:
+    """Round-robin repartition to the cluster's ``defaultParallelism`` when
+    — and only when — the plan currently has fewer partitions. Row order
+    is not preserved; callers must not rely on scan order (none of the
+    registered queries do — every output contract orders explicitly)."""
+    n = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= n:
         return df
     return df.repartition(n)

@@ -25,9 +25,12 @@ inline -- no second scan, no bounds join-back. The final groupBy reuses
 the window's partitioning (no extra exchange -- pinned by
 tests/test_plans.py). Measured 4-8x faster than the two-scan
 broadcast-join layout at sf0.1. With few group keys AQE skew handling
-applies (session default). ``exact_quantiles=False`` switches to
-percentile_approx for the scale path where a DuckDB-matched oracle is not
-required.
+applies (session default). Quantiles are exact ``percentile``, matched by
+the DuckDB oracle; :func:`quality_profile_scale` is the mergeable layout
+for inputs too large for one task per group.
+
+The thresholds are the reference's fixed values, shared by the Spark
+builders, their DuckDB oracles and ``operators.validation``.
 """
 
 from __future__ import annotations
@@ -37,7 +40,13 @@ from pyspark.sql import functions as F
 
 # 1.5x the expected hourly cadence, as in the reference
 # (`core/data_validation.py:124-126`: Timedelta(hours=1) * 1.5).
-DEFAULT_GAP_TOLERANCE_SECONDS = 5400
+GAP_TOLERANCE_SECONDS = 5400
+# outlier bounds Q1 - k*IQR, Q3 + k*IQR (`core/data_validation.py:195-197`)
+IQR_K = 3.0
+# decimals of every double the profile reports, in both engines
+ROUND_TO = 4
+# the scale path's quantile grid: values binned to 10^-GRID_DECIMALS
+GRID_DECIMALS = 2
 
 
 def windowed_by_group(
@@ -45,11 +54,9 @@ def windowed_by_group(
     group_col: str,
     ts_col: str,
     value_col: str,
-    iqr_k: float = 3.0,
-    exact_quantiles: bool = True,
 ) -> DataFrame:
     """The rows of ``df`` (group, ts and value only), each carrying its
-    group's quantiles ``_q1``/``_median``/``_q3``, IQR x ``iqr_k`` bounds
+    group's exact quantiles ``_q1``/``_median``/``_q3``, IQR x ``IQR_K`` bounds
     ``_lower``/``_upper`` and ``_gap_us``, the microseconds since the
     group's previous timestamp.
 
@@ -61,8 +68,7 @@ def windowed_by_group(
     over this frame finishes a per-group pass without another exchange
     (:func:`quality_profile`, ``operators.validation.validate``)."""
     g, t, v = F.col(group_col), F.col(ts_col), F.col(value_col)
-    pct = F.percentile if exact_quantiles else F.percentile_approx
-    quantiles = pct(v, F.array(F.lit(0.25), F.lit(0.5), F.lit(0.75)))
+    quantiles = F.percentile(v, F.array(F.lit(0.25), F.lit(0.5), F.lit(0.75)))
     wp = Window.partitionBy(g)
     wo = wp.orderBy(t)
     gap_us = F.unix_micros(t) - F.unix_micros(F.lag(t).over(wo))
@@ -78,8 +84,8 @@ def windowed_by_group(
             "_q1": q1,
             "_median": F.element_at("_qs", 2),
             "_q3": q3,
-            "_lower": q1 - iqr_k * (q3 - q1),
-            "_upper": q3 + iqr_k * (q3 - q1),
+            "_lower": q1 - IQR_K * (q3 - q1),
+            "_upper": q3 + IQR_K * (q3 - q1),
         }
     )
 
@@ -89,23 +95,19 @@ def quality_profile(
     group_col: str = "respondent",
     ts_col: str = "period",
     value_col: str = "value",
-    gap_tolerance_seconds: int = DEFAULT_GAP_TOLERANCE_SECONDS,
-    iqr_k: float = 3.0,
-    exact_quantiles: bool = True,
-    round_to: int = 4,
 ) -> DataFrame:
     """One row per group with the full quality profile. Deterministic
-    (all stats are exact aggregates; doubles rounded to ``round_to``)."""
+    (all stats are exact aggregates; doubles rounded to ``ROUND_TO``)."""
     t, v = F.col(ts_col), F.col(value_col)
-    enriched = windowed_by_group(df, group_col, ts_col, value_col, iqr_k, exact_quantiles)
+    enriched = windowed_by_group(df, group_col, ts_col, value_col)
     lower, upper = F.col("_lower"), F.col("_upper")
 
     from electricity_forecast_pipeline_airflow_k8s_spark.functions.stats import (
         portable_round,
     )
 
-    r = lambda c: portable_round(c, round_to)  # noqa: E731
-    tol_us = gap_tolerance_seconds * 1_000_000
+    r = lambda c: portable_round(c, ROUND_TO)  # noqa: E731
+    tol_us = GAP_TOLERANCE_SECONDS * 1_000_000
     return (
         enriched.groupBy(group_col)
         .agg(
@@ -159,12 +161,7 @@ def quality_profile_scale(
     group_col: str = "respondent",
     ts_col: str = "period",
     value_col: str = "value",
-    gap_tolerance_seconds: int = DEFAULT_GAP_TOLERANCE_SECONDS,
-    iqr_k: float = 3.0,
-    round_to: int = 4,
-    bucket: str = "day",
     quantile_mode: str = "sketch",
-    grid_decimals: int = 2,
 ) -> DataFrame:
     """The 100 TB layout of :func:`quality_profile` (same output schema;
     quantile-derived columns are percentile_approx sketches, or -- with
@@ -172,10 +169,10 @@ def quality_profile_scale(
     (group, rounded-value-bin) histogram).
 
     Grid mode (round 6, the oracle-able scale path): bin values to a
-    10^-grid_decimals grid with the portable floor-round, count per
+    10^-GRID_DECIMALS grid with the portable floor-round, count per
     (group, bin) in one mergeable agg, then take the discrete quantile as
     the smallest bin whose cumulative count reaches ceil(p * n). State per
-    group is the distinct-bin count (value range x 10^grid_decimals),
+    group is the distinct-bin count (value range x 10^GRID_DECIMALS),
     bounded regardless of row count, and the result is DETERMINISTIC and
     bit-replayable by any engine -- unlike percentile_approx sketches.
     Accuracy: within half a grid step of the exact DISCRETE quantile
@@ -194,7 +191,7 @@ def quality_profile_scale(
       partial aggregation everywhere, the shuffle moves sketches, not
       rows. The derived per-group IQR bounds frame is tiny (n_groups
       rows) and is broadcast into pass 2.
-    * pass 2 (outliers + gaps, one shuffle on (group, time-bucket)): the
+    * pass 2 (outliers + gaps, one shuffle on (group, day bucket)): the
       lag window partitions by (group, bucket), so parallelism is
       groups x buckets, not groups; the broadcast bounds ride along so
       the outlier flag aggregates in the same pass. The per-(group,
@@ -212,8 +209,8 @@ def quality_profile_scale(
     )
 
     g, t, v = F.col(group_col), F.col(ts_col), F.col(value_col)
-    r = lambda c: portable_round(c, round_to)  # noqa: E731
-    tol_us = gap_tolerance_seconds * 1_000_000
+    r = lambda c: portable_round(c, ROUND_TO)  # noqa: E731
+    tol_us = GAP_TOLERANCE_SECONDS * 1_000_000
 
     if quantile_mode not in ("sketch", "grid"):
         raise ValueError(f"quantile_mode must be sketch|grid, got {quantile_mode!r}")
@@ -249,7 +246,7 @@ def quality_profile_scale(
         # the histogram counts -- partial aggregation map-side for both,
         # the shuffle moves (groups x bins) + (groups) partials, never
         # rows. grouping(bin) splits the levels back apart.
-        binc = portable_round(v, grid_decimals).alias("_bin")
+        binc = portable_round(v, GRID_DECIMALS).alias("_bin")
         roll = (
             df.select(g.alias(group_col), t.alias(ts_col), v.alias(value_col), binc)
             .rollup(group_col, "_bin")
@@ -289,8 +286,8 @@ def quality_profile_scale(
         ).drop("_qg")
     bounds = bounds.withColumns(
         {
-            "_lower": F.col("_q1") - iqr_k * (F.col("_q3") - F.col("_q1")),
-            "_upper": F.col("_q3") + iqr_k * (F.col("_q3") - F.col("_q1")),
+            "_lower": F.col("_q1") - IQR_K * (F.col("_q3") - F.col("_q1")),
+            "_upper": F.col("_q3") + IQR_K * (F.col("_q3") - F.col("_q1")),
         }
     )
     # n_groups rows; feeds the final output AND the broadcast below
@@ -301,7 +298,7 @@ def quality_profile_scale(
     b = F.broadcast(
         bounds.select(F.col(group_col).alias("_bg"), "_lower", "_upper")
     )
-    bkt = F.date_trunc(bucket, t).alias("_bkt")
+    bkt = F.date_trunc("day", t).alias("_bkt")
     win_in = Window.partitionBy(g, F.col("_bkt")).orderBy(t)
     per_bucket = (
         df.select(g.alias(group_col), t.alias(ts_col), v.alias(value_col), bkt)
@@ -391,15 +388,12 @@ def profile_oracle_sql(
     group_col: str = "event_type",
     ts_col: str = "ts",
     value_col: str = "value",
-    gap_tolerance_seconds: int = DEFAULT_GAP_TOLERANCE_SECONDS,
-    iqr_k: float = 3.0,
-    round_to: int = 4,
 ) -> str:
     """DuckDB ANSI-SQL equivalent of :func:`quality_profile` (same column
     names; rounding via the portable floor formula so tie-adjacent doubles
     round identically in both engines -- see functions/stats.py)."""
-    tol_us = gap_tolerance_seconds * 1_000_000
-    p = 10**round_to  # noqa: F841 -- interpolated below
+    tol_us = GAP_TOLERANCE_SECONDS * 1_000_000
+    p = 10**ROUND_TO
     return f"""
 WITH stats AS (
   SELECT {group_col},
@@ -418,8 +412,8 @@ WITH stats AS (
   FROM {table} GROUP BY {group_col}
 ), bounds AS (
   SELECT *,
-         _q1 - {iqr_k} * (_q3 - _q1) AS _lower,
-         _q3 + {iqr_k} * (_q3 - _q1) AS _upper
+         _q1 - {IQR_K} * (_q3 - _q1) AS _lower,
+         _q3 + {IQR_K} * (_q3 - _q1) AS _upper
   FROM stats
 ), outliers AS (
   SELECT t.{group_col},
@@ -471,19 +465,15 @@ def profile_grid_oracle_sql(
     group_col: str = "event_type",
     ts_col: str = "ts",
     value_col: str = "value",
-    gap_tolerance_seconds: int = DEFAULT_GAP_TOLERANCE_SECONDS,
-    iqr_k: float = 3.0,
-    round_to: int = 4,
-    grid_decimals: int = 2,
 ) -> str:
     """DuckDB equivalent of ``quality_profile_scale(quantile_mode="grid")``
     -- identical math to the Spark side: portable-floor-round values to the
     grid, per-(group, bin) counts, discrete quantile = smallest bin whose
     cumulative count reaches ceil(p * n), IQR bounds and outliers from
     those grid quantiles. Same column names/rounding as the flagship."""
-    tol_us = gap_tolerance_seconds * 1_000_000
-    p = 10**round_to
-    gp = 10**grid_decimals
+    tol_us = GAP_TOLERANCE_SECONDS * 1_000_000
+    p = 10**ROUND_TO
+    gp = 10**GRID_DECIMALS
     return f"""
 WITH stats AS (
   SELECT {group_col},
@@ -515,8 +505,8 @@ WITH stats AS (
   FROM cum GROUP BY 1
 ), bounds AS (
   SELECT s.*, q._q1, q._median, q._q3,
-         q._q1 - {iqr_k} * (q._q3 - q._q1) AS _lower,
-         q._q3 + {iqr_k} * (q._q3 - q._q1) AS _upper
+         q._q1 - {IQR_K} * (q._q3 - q._q1) AS _lower,
+         q._q3 + {IQR_K} * (q._q3 - q._q1) AS _upper
   FROM stats s LEFT JOIN quants q
     ON s.{group_col} IS NOT DISTINCT FROM q.{group_col}
 ), outliers AS (

@@ -369,15 +369,12 @@ def ntile_global(
     *,
     k: int,
     tile_col: str,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """``NTILE(k) OVER (ORDER BY order_cols)`` without a single-partition
     window: global_rank + closed-form bucket math. The row total comes
     from the offsets job already inside global_rank -- no extra pass."""
     rank_col = f"_{tile_col}_rank"
-    ranked, n = _ranked_with_total(
-        df, order_cols, rank_col, num_partitions, persist=True
-    )
+    ranked, n = _ranked_with_total(df, order_cols, rank_col, None, persist=True)
     return ranked.withColumn(
         tile_col, ntile_exact(F.col(rank_col), n, k)
     ).drop(rank_col)
@@ -457,8 +454,6 @@ def tuples_at_ranks(
     df: DataFrame,
     order_cols: Iterable[str],
     ranks,
-    *,
-    num_partitions: int | None = None,
 ) -> tuple[list[tuple], int]:
     """The rows (projected to ``order_cols``) sitting at the given 1-based
     global ranks of ``ORDER BY order_cols`` -- the multi-column analogue of
@@ -470,9 +465,7 @@ def tuples_at_ranks(
     (saves a separate count job). Returns (sorted tuples, total n)."""
     cols = list(order_cols)
     proj = df.select(*cols)
-    sorted_df, offsets, counts, n = _range_sorted_with_offsets(
-        proj, cols, num_partitions, persist=True
-    )
+    sorted_df, offsets, counts, n = _range_sorted_with_offsets(proj, cols, None, persist=True)
     if callable(ranks):
         ranks = ranks(n)
     want = sorted({int(r) for r in ranks})
@@ -528,7 +521,6 @@ def ntile_by_edges(
     *,
     k: int,
     tile_col: str,
-    num_partitions: int | None = None,
     assert_total_order: bool = False,
 ) -> DataFrame:
     """``NTILE(k) OVER (ORDER BY order_cols)`` via broadcast boundary
@@ -569,7 +561,7 @@ def ntile_by_edges(
                 f"{chk['n'] - chk['d']} duplicated key tuple(s) -- add a "
                 f"tie-break key"
             )
-    edges, n = ntile_edges(df, cols, k=k, num_partitions=num_partitions)
+    edges, n = ntile_edges(df, cols, k=k)
     return apply_ntile_edges(df, cols, edges, n, tile_col=tile_col)
 
 
@@ -578,7 +570,6 @@ def ntile_edges(
     order_cols: Iterable[str],
     *,
     k: int,
-    num_partitions: int | None = None,
 ) -> tuple[list[tuple], int]:
     """The boundary-derivation half of :func:`ntile_by_edges`: the k-1
     bucket-end tuples of ``NTILE(k) OVER (ORDER BY order_cols)`` plus the
@@ -603,7 +594,7 @@ def ntile_edges(
             out.append(acc)
         return out
 
-    edges, n = tuples_at_ranks(df, cols, _bounds, num_partitions=num_partitions)
+    edges, n = tuples_at_ranks(df, cols, _bounds)
     if len(set(edges)) != len(edges):
         raise ValueError(
             f"order_cols {cols} is not a total order: duplicated boundary "

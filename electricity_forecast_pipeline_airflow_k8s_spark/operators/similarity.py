@@ -6,7 +6,9 @@ Embeddings are ``array<float>`` columns; all math is JVM-side array
 expressions (zip_with / aggregate) in double precision -- no Python in the
 scoring loop. At 100 TB the brute-force path is a broadcast of the (small)
 query set against a partitioned corpus scan: O(corpus x queries) with no
-shuffle of the corpus; the LSH/IVF paths cut the scanned fraction.
+shuffle of the corpus; the LSH/IVF paths cut the scanned fraction. The
+blocked near-duplicate pairs broadcast the corpus itself, so they are the
+path for a corpus (or a per-shard slice) that fits in a broadcast.
 """
 
 from __future__ import annotations
@@ -31,7 +33,6 @@ def brute_force_topk(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    round_to: int = 6,
 ) -> DataFrame:
     """Exact cosine top-k: broadcast the query set, score every corpus row,
     rank per query. Returns (query_id, neighbor_id, cosine, rank)."""
@@ -50,7 +51,7 @@ def brute_force_topk(
         .select(
             "query_id",
             "neighbor_id",
-            portable_round(cosine(F.col("qv"), F.col("cv")), round_to).alias("cosine"),
+            portable_round(cosine(F.col("qv"), F.col("cv")), 6).alias("cosine"),
         )
     )
     from pyspark.sql import Window
@@ -198,16 +199,13 @@ def embedding_neardup_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     block_col: str = "label",
-    broadcast_right: bool = True,
 ) -> DataFrame:
     """Near-duplicate pairs by embedding cosine, blocked by a coarse key
     (cluster/label) so the pair space is |block|^2, not |corpus|^2.
 
-    ``broadcast_right=True`` (corpus fits in a broadcast, e.g. a per-shard
-    slice): left side repartitioned for full task parallelism, right side
-    broadcast -- a plain blk equi-join would cap parallelism at the block
-    count. At corpus sizes past broadcast limits, set False to fall back to
-    a shuffle join on blk (then choose finer blocks to keep skew down)."""
+    The left side is repartitioned for full task parallelism and the right
+    side is broadcast: a plain blk equi-join would cap parallelism at the
+    block count. The corpus must therefore fit in a broadcast."""
     a = corpus.repartition(corpus.sparkSession.sparkContext.defaultParallelism).select(
         F.col(block_col).alias("blk"),
         F.col(id_col).alias("id_a"),
@@ -218,9 +216,8 @@ def embedding_neardup_pairs(
         F.col(id_col).alias("id_b"),
         as_double(F.col(vec_col)).alias("vb"),
     )
-    right = F.broadcast(b) if broadcast_right else b
     return (
-        a.join(right, "blk")
+        a.join(F.broadcast(b), "blk")
         .filter(F.col("id_a") < F.col("id_b"))
         .select(
             "id_a", "id_b", portable_round(cosine(F.col("va"), F.col("vb")), 6).alias("cosine")
@@ -235,7 +232,6 @@ def centroid_assign(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     label_col: str = "label",
-    round_to: int = 6,
 ) -> DataFrame:
     """One k-means assignment step over an embedding column: centroids =
     per-label mean vectors, every vector re-assigned to its nearest
@@ -284,6 +280,6 @@ def centroid_assign(
         id_col,
         "true_label",
         F.col("_best.cl").alias("assigned_label"),
-        portable_round(F.col("_best.d2"), round_to).alias("dist2"),
+        portable_round(F.col("_best.d2"), 6).alias("dist2"),
         (F.col("_best.cl") == F.col("true_label")).alias("is_own_centroid"),
     )

@@ -105,20 +105,15 @@ def lang_id(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> Da
     return scored.select(id_col, *[f"hits_{lang}" for lang in langs], pred.alias("lang_pred"))
 
 
-def vocabulary(
-    df: DataFrame, text_col: str = "text", min_count: int = 1
-) -> DataFrame:
+def vocabulary(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Corpus vocabulary with frequencies: explode tokens -> hash agg
     (the word-count shape; map-side combined, scales with distinct terms).
     """
     tok = df.select(F.explode(tokens(text_col)).alias("token"))
-    out = tok.groupBy("token").agg(F.count(F.lit(1)).alias("freq"))
-    return out.filter(F.col("freq") >= min_count)
+    return tok.groupBy("token").agg(F.count(F.lit(1)).alias("freq"))
 
 
-def tf_idf(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", round_to: int = 6
-) -> DataFrame:
+def tf_idf(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Per-(doc, term) TF-IDF: tf = count(term in doc) / len(doc);
     idf = ln(N / df_t). Three hash aggregations and a shuffle join on the
     token key -- no UDFs, and no forced broadcast: the document-frequency
@@ -138,7 +133,7 @@ def tf_idf(
             "token",
             portable_round(
                 (F.col("tc") / F.col("dl")) * F.log(F.lit(float(n_docs)) / F.col("df")),
-                round_to,
+                6,
             ).alias("tfidf"),
         )
     )
@@ -160,16 +155,15 @@ def bpe_token_estimate(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    chars_per_token: int = 4,
 ) -> DataFrame:
     """LLM token-budget estimation: BPE-ish regex pieces + a
     chars-per-token subword heuristic, all JVM-side.
 
     Text splits into word/number runs and single punctuation marks (the
     piece structure BPE vocabularies build on); each piece contributes
-    ceil(len / chars_per_token) estimated subword tokens (~4 chars/token,
-    the usual budgeting rule). Integer arithmetic only, so the estimate
-    is bit-identical across engines."""
+    ceil(len / 4) estimated subword tokens (~4 chars/token, the usual
+    budgeting rule). Integer arithmetic only, so the estimate is
+    bit-identical across engines."""
     pieces = F.regexp_extract_all(
         F.col(text_col), F.lit(r"[A-Za-z0-9]+|[^A-Za-z0-9\s]"), F.lit(0)
     )
@@ -177,9 +171,7 @@ def bpe_token_estimate(
         pieces,
         F.lit(0).cast("long"),
         lambda acc, p: acc
-        + F.floor((F.length(p) + (chars_per_token - 1)) / chars_per_token).cast(
-            "long"
-        ),
+        + F.floor((F.length(p) + 3) / 4).cast("long"),
     )
     return df.select(
         id_col,
@@ -511,14 +503,13 @@ def fuzzy_prefix_pairs(
     block_cols: tuple[str, ...] = ("lang", "source"),
     text_col: str = "text",
     id_col: str = "doc_id",
-    prefix_len: int = 30,
-    max_distance: int = 18,
 ) -> DataFrame:
-    """Blocked fuzzy matching (entity-resolution shape): normalized text
-    prefixes compared by Levenshtein edit distance WITHIN blocking keys
-    only. The pair space is sum(|block|^2), never corpus^2 -- the same
-    blocking discipline as the embedding near-dup operator; levenshtein
-    is a native JVM expression, so the whole comparison stays in codegen.
+    """Blocked fuzzy matching (entity-resolution shape): normalized
+    30-character text prefixes compared by Levenshtein edit distance
+    WITHIN blocking keys only; pairs within distance 18 survive. The pair
+    space is sum(|block|^2), never corpus^2 -- the same blocking
+    discipline as the embedding near-dup operator; levenshtein is a
+    native JVM expression, so the whole comparison stays in codegen.
 
     At 100 TB: choose block keys so the largest block's pair count fits a
     task (lang x source here; add a length band or first-k-chars key to
@@ -528,7 +519,7 @@ def fuzzy_prefix_pairs(
     norm = F.substring(
         F.lower(F.regexp_replace(F.trim(F.col(text_col)), r"\s+", " ")),
         1,
-        prefix_len,
+        30,
     )
     d = df.select(
         F.col(id_col), *[F.col(c) for c in block_cols], norm.alias("_p")
@@ -555,11 +546,11 @@ def fuzzy_prefix_pairs(
             *[F.col(f"a.{c}").alias(c) for c in block_cols],
             lev.alias("edit_distance"),
         )
-        .filter(F.col("edit_distance") <= max_distance)
+        .filter(F.col("edit_distance") <= 18)
     )
     # round-11 (guide §1.2): a lineage cut on the survivor set.
     # Catalyst pushes the edit-distance filter into the join condition, so
-    # the whole O(prefix_len^2)-per-pair DP sits below the caller's final
+    # the whole O(prefix^2)-per-pair DP sits below the caller's final
     # orderBy -- and the range partitioner's boundary-sampling job then
     # re-executes the join + DP a second time (measured: the sort tripled
     # the lane, 3.0 s -> 6.1 s at sf0.1). Survivors are the DEDUP-PAIR

@@ -11,7 +11,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from electricity_forecast_pipeline_airflow_k8s_spark.operators.partitioning import reuse
@@ -21,7 +21,6 @@ def chronological_split(
     df: DataFrame,
     group_col: str = "respondent",
     ts_col: str = "period",
-    ratios: tuple[float, float] = (0.7, 0.15),
     tiebreak_cols: Sequence[str] = (),
     split_col: str = "split",
 ) -> DataFrame:
@@ -35,8 +34,8 @@ def chronological_split(
     wall = Window.partitionBy(group_col)
     rn = F.row_number().over(w)
     n = F.count(F.lit(1)).over(wall)
-    train_n = F.floor(n * ratios[0])
-    val_n = F.floor(n * ratios[1])
+    train_n = F.floor(n * 0.7)
+    val_n = F.floor(n * 0.15)
     return df.withColumn(
         split_col,
         F.when(rn <= train_n, "train")
@@ -121,23 +120,21 @@ def resample(
     group_col: str = "respondent",
     ts_col: str = "period",
     interval: str = "hour",
-    aggs: dict[str, Column] | None = None,
 ) -> DataFrame:
     """Tumbling-window batch resample via date_trunc (§2.9 batch analog of
-    the streaming `window()` agg)."""
-    if aggs is None:
-        from electricity_forecast_pipeline_airflow_k8s_spark.functions.stats import exact_mean
+    the streaming `window()` agg): row count ``n`` and the 4-decimal mean
+    ``avg_value`` of the ``value`` column per (group, bucket)."""
+    from electricity_forecast_pipeline_airflow_k8s_spark.functions.stats import exact_mean
 
-        aggs = {
-            "n": F.count(F.lit(1)),
-            # exact-decimal mean: plain avg() of 2-decimal data rounds
-            # differently across engines at half boundaries
-            "avg_value": F.floor(exact_mean("value") * 10000 + 0.5) / 10000,
-        }
     bucket = F.date_trunc(interval, F.col(ts_col)).alias("bucket")
     return (
         df.groupBy(F.col(group_col), bucket)
-        .agg(*[c.alias(name) for name, c in aggs.items()])
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            # exact-decimal mean: plain avg() of 2-decimal data rounds
+            # differently across engines at half boundaries
+            (F.floor(exact_mean("value") * 10000 + 0.5) / 10000).alias("avg_value"),
+        )
         .orderBy(group_col, "bucket")
     )
 
@@ -173,7 +170,6 @@ def ks_drift(
     group_col: str = "respondent",
     ts_col: str = "period",
     value_col: str = "value",
-    round_to: int = 4,
 ) -> DataFrame:
     """Kolmogorov-Smirnov drift statistic per group: max |ECDF_ref(v) -
     ECDF_cur(v)| between the window before ``split_ts`` (reference) and
@@ -217,11 +213,7 @@ def ks_drift(
     return (
         ecdf.filter((F.col("n_ref") > 0) & (F.col("n_cur") > 0))
         .groupBy(group_col)
-        .agg(
-            (F.floor(F.max(diff) * (10**round_to) + 0.5) / (10**round_to)).alias(
-                "ks_stat"
-            )
-        )
+        .agg((F.floor(F.max(diff) * 10000 + 0.5) / 10000).alias("ks_stat"))
         .orderBy(group_col)
     )
 
@@ -232,20 +224,18 @@ def psi_drift(
     group_col: str = "respondent",
     ts_col: str = "period",
     value_col: str = "value",
-    n_buckets: int = 10,
-    bucket_width: float = 20.0,
-    eps: float = 1e-6,
 ) -> DataFrame:
     """Population-stability-index drift between a reference window
     (< split_ts) and a current window (>= split_ts).
 
     The reference only *configures* drift windows (`config.yaml:44-47`,
     threshold 0.1 per `README.md:737`) and never implements them; this is
-    the aggregation-only implementation: fixed-width value buckets ->
-    per-window distributions -> PSI = sum((p-q) * ln(p/q)). Two grouped
-    aggs over one scan; no UDFs."""
+    the aggregation-only implementation: ten value buckets of width 20 (the
+    last one open) -> per-window distributions -> PSI = sum((p-q) *
+    ln(p/q)), with 1e-6 added to every share. Two grouped aggs over one
+    scan; no UDFs."""
     v = F.col(value_col)
-    bucket = F.least(F.floor(v / bucket_width), F.lit(n_buckets - 1)).alias("bucket")
+    bucket = F.least(F.floor(v / 20.0), F.lit(9)).alias("bucket")
     win = F.when(F.col(ts_col) < split_ts, "ref").otherwise("cur").alias("win")
     counts = (
         df.filter(v.isNotNull())
@@ -264,8 +254,8 @@ def psi_drift(
     joined = ref.join(cur, [group_col, "bucket"], "full").fillna(
         0.0, subset=["p_ref", "p_cur"]
     )
-    pr = F.col("p_ref") + eps
-    pc = F.col("p_cur") + eps
+    pr = F.col("p_ref") + 1e-6
+    pc = F.col("p_cur") + 1e-6
     return (
         joined.groupBy(group_col)
         .agg(
@@ -475,7 +465,6 @@ def cusum_changepoint(
     ts_col: str = "period",
     value_col: str = "value",
     id_col: str | None = None,
-    round_to: int = 4,
 ) -> DataFrame:
     """Per-group CUSUM changepoint: the row where the running cumulative
     sum of deviations from the group mean peaks in magnitude -- the
@@ -503,7 +492,6 @@ def cusum_changepoint(
         "decimal(28,0)"
     )
     cusum = F.sum(qdev).over(w)
-    scale = 10**round_to
     scored = base.join(F.broadcast(means), group_col).select(
         F.col(group_col),
         F.col(ts_col),
@@ -523,6 +511,6 @@ def cusum_changepoint(
         F.col(group_col),
         F.col("_b.ts").alias("cp_ts"),
         (
-            F.floor(F.col("_b.a").cast("double") / 1_000_000 * scale + 0.5) / scale
+            F.floor(F.col("_b.a").cast("double") / 1_000_000 * 10000 + 0.5) / 10000
         ).alias("max_abs_cusum"),
     )

@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from electricity_forecast_pipeline_airflow_k8s_spark.operators.profile import (
-    DEFAULT_GAP_TOLERANCE_SECONDS,
+    GAP_TOLERANCE_SECONDS,
     windowed_by_group,
 )
 from electricity_forecast_pipeline_airflow_k8s_spark.session import local_frame
@@ -48,7 +48,6 @@ VALID_TYPES_TEXT = "{" + ", ".join(map(repr, VALID_TYPES)) + "}"
 MISSING_PCT_ERROR = 5.0  # core/data_validation.py:140-143
 OUTLIER_PCT_WARN = 2.0  # core/data_validation.py:199-200,205
 EXTREME_Q99_FACTOR = 3.0  # core/data_validation.py:61-62
-IQR_K = 3.0  # core/data_validation.py:195-197
 
 
 @dataclass
@@ -110,7 +109,6 @@ def _group_checks(
     group_col: str,
     ts_col: str,
     value_col: str,
-    tolerance_s: int,
     q99: float | None,
 ) -> list[dict[str, Any]]:
     """Every per-group check in one grouped pass over
@@ -122,17 +120,16 @@ def _group_checks(
     v, t = F.col(value_col), F.col(ts_col)
     n = F.count(F.lit(1))
     extreme = v >= EXTREME_Q99_FACTOR * F.lit(q99) if q99 is not None else F.lit(False)
+    tol_us = GAP_TOLERANCE_SECONDS * 1_000_000
     rows = (
-        windowed_by_group(df, group_col, ts_col, value_col, IQR_K)
+        windowed_by_group(df, group_col, ts_col, value_col)
         .groupBy(group_col)
         .agg(
             n.alias("records"),
             F.avg(v).alias("mean"),
             F.min(v).alias("min"),
             F.max(v).alias("max"),
-            F.sum(F.when(F.col("_gap_us") > tolerance_s * 1_000_000, 1).otherwise(0)).alias(
-                "n_gaps"
-            ),
+            F.sum(F.when(F.col("_gap_us") > tol_us, 1).otherwise(0)).alias("n_gaps"),
             (F.max("_gap_us") / 1_000_000.0).alias("max_gap_s"),
             F.sum(
                 F.when((v < F.col("_lower")) | (v > F.col("_upper")), 1).otherwise(0)
@@ -158,7 +155,6 @@ def validate(
     ts_col: str = "period",
     value_col: str = "value",
     type_col: str | None = "type",
-    gap_tolerance_seconds: int = DEFAULT_GAP_TOLERANCE_SECONDS,
 ) -> ValidationReport:
     """Run the full suite; returns the reference-shaped report plus the flat
     checks DataFrame. Two actions, whatever the group count: the global
@@ -167,9 +163,7 @@ def validate(
     relation and runs no job."""
     spark = df.sparkSession
     g = _global_checks(df, group_col, ts_col, value_col, type_col)
-    groups = _group_checks(
-        df, group_col, ts_col, value_col, gap_tolerance_seconds, g["value_q99"]
-    )
+    groups = _group_checks(df, group_col, ts_col, value_col, g["value_q99"])
     g["extreme_values"] = sum(r["n_extreme"] for r in groups)
     g["duplicate_timestamps"] = sum(r["n_dups"] for r in groups)
     for r in groups:
@@ -208,7 +202,7 @@ def validate(
     for row in groups:
         if row["n_gaps"]:
             warnings.append(
-                f"{row[group_col]}: {row['n_gaps']} gaps > {gap_tolerance_seconds}s "
+                f"{row[group_col]}: {row['n_gaps']} gaps > {GAP_TOLERANCE_SECONDS}s "
                 f"(max {row['max_gap_s']:.0f}s)"
             )
     total_outliers = sum(r["n_outliers"] for r in groups)

@@ -172,7 +172,9 @@ def electricity_dag(
       prepare          snapshot + validate + report (ref validate_data
                        :129-227; run_preparation owns the raising-on-error
                        semantics of the DAG's task failure)
-      quality_summary  per-group quality profile (ref :420-478)
+      quality_summary  per-group record counts from prepare's validation
+                       report (ref :420-478 re-reads and restructures the
+                       validation report)
       train            per-group ridge fit + metrics (the Katib/KFP stage,
                        ref generate_pipeline_parameters :481-:568)
       register         versioned params in the model registry
@@ -189,9 +191,6 @@ def electricity_dag(
     from electricity_forecast_pipeline_airflow_k8s_spark.sources.normalize import (
         events_as_readings,
     )
-    from electricity_forecast_pipeline_airflow_k8s_spark.operators.profile import (
-        quality_profile,
-    )
     from electricity_forecast_pipeline_airflow_k8s_spark.sources.tables import (
         load_table,
         read_parquet,
@@ -205,8 +204,8 @@ def electricity_dag(
         return run_preparation(spark, results["extract"], root, run_ts)
 
     def t_quality(ctx, results):
-        prof = quality_profile(results["extract"])
-        return {r["respondent"]: r["n_rows"] for r in prof.collect()}
+        per_region = results["prepare"].report.stats["per_region"]
+        return {r: v["records"] for r, v in per_region.items()}
 
     def t_train(ctx, results):
         readings = read_parquet(spark, results["prepare"].validated_path)
@@ -247,7 +246,7 @@ def electricity_dag(
     return [
         Task("extract", t_extract, retries=2),
         Task("prepare", t_prepare, deps=("extract",), retries=2),
-        Task("quality_summary", t_quality, deps=("extract",), retries=2),
+        Task("quality_summary", t_quality, deps=("prepare",), retries=2),
         Task("train", t_train, deps=("prepare",), retries=2),
         Task("register", t_register, deps=("train",), retries=2),
         Task("cleanup", t_cleanup, deps=("register", "quality_summary"), retries=2),

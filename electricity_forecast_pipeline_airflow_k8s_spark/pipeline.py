@@ -102,33 +102,29 @@ def run_training(
     readings: DataFrame,
     lookback: int = 168,
     horizon: int = 24,
-    top_region_only: bool = True,
-    fit_on_train_only: bool = False,
-    alpha: float = 1.0,
 ) -> TrainingResult:
     """The Kubeflow training pipeline (SURVEY §3.2) as DataFrame stages:
-    region select (A12) -> minmax scale (U3; full-series fit replicates the
-    reference's leakage, `core/kubeflow_pipeline.py:108-109`, unless
-    fit_on_train_only) -> chronological split (W4) -> windows (W3) ->
-    per-group fit/eval (U4/U5) -> inverse-scaled forecast.
+    region select (A12: the region with the most readings, ties to the
+    smallest name) -> minmax scale (U3; the full-series fit replicates the
+    reference's leakage, `core/kubeflow_pipeline.py:108-109`) ->
+    chronological split (W4) -> windows (W3) -> per-group ridge fit/eval
+    (U4/U5) -> inverse-scaled forecast.
 
     The fitted params frame is cut with ``reuse``, so the fit runs once per
     training run: the metrics collect, the forecasts and every later
     consumer of ``TrainingResult.params`` (the registry write, a job's
     forecast write) read the blocks of its first action instead of
     re-running read -> region select -> split -> scale -> windows -> fit."""
-    if top_region_only:
-        top = (
-            readings.groupBy("respondent")
-            .count()
-            .orderBy(F.desc("count"), "respondent")
-            .limit(1)
-        )
-        readings = readings.join(F.broadcast(top.select("respondent")), "respondent")
+    top = (
+        readings.groupBy("respondent")
+        .count()
+        .orderBy(F.desc("count"), "respondent")
+        .limit(1)
+    )
+    readings = readings.join(F.broadcast(top.select("respondent")), "respondent")
 
     split = chronological_split(readings)
-    fit_src = split.filter(F.col("split") == "train") if fit_on_train_only else split
-    params_mm = fit_minmax(fit_src)
+    params_mm = fit_minmax(split)
     scaled = apply_minmax(split, params_mm)
 
     wins = sequence_windows(
@@ -138,7 +134,7 @@ def run_training(
         horizon=horizon,
         extra_partition_cols=("split",),
     )
-    model = reuse(fit_per_group(wins, lookback=lookback, horizon=horizon, alpha=alpha))
+    model = reuse(fit_per_group(wins, lookback=lookback, horizon=horizon))
 
     test = wins.filter(F.col("split") == "test").select("respondent", "x", "y")
     preds = predict_per_group(test, model)

@@ -29,10 +29,10 @@ def write_bucketed(
     bucket_cols: list[str],
     n_buckets: int,
     sort_cols: list[str] | None = None,
-    mode: str = "overwrite",
 ) -> None:
-    """Write a managed bucketed (and optionally sort-bucketed) table."""
-    w = df.write.mode(mode).bucketBy(n_buckets, *bucket_cols)
+    """Write (or overwrite) a managed bucketed, optionally sort-bucketed,
+    table."""
+    w = df.write.mode("overwrite").bucketBy(n_buckets, *bucket_cols)
     if sort_cols:
         w = w.sortBy(*sort_cols)
     w.saveAsTable(table_name)

@@ -24,15 +24,13 @@ PageFetcher = Callable[[int, int], list[dict]]
 """(offset, length) -> list of record dicts for that page."""
 
 
-def page_specs(
-    spark: SparkSession, total: int, page_size: int = 5000, n_partitions: int | None = None
-) -> DataFrame:
+def page_specs(spark: SparkSession, total: int, page_size: int = 5000) -> DataFrame:
     """One row per page: (offset, length). page_size=5000 mirrors the EIA
     API max (`core/data_extraction.py:69`)."""
     specs = [(off, page_size) for off in range(0, total, page_size)]
     df = spark.createDataFrame(specs, "offset long, length long")
     # total=0 -> no pages; repartition(0) is illegal, so clamp to 1
-    return df.repartition(n_partitions or max(1, min(len(specs), 64)))
+    return df.repartition(max(1, min(len(specs), 64)))
 
 
 def fetch_paginated(

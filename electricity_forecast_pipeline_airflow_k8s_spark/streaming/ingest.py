@@ -6,7 +6,7 @@ The reference's batch semantics carry over:
     (`core/data_validation.py:149-154`)      -> watermark + dropDuplicates
   * quality checks per batch                  -> same Column expressions as
     operators/validation (they are plan-agnostic: batch or streaming)
-  * tumbling/sliding extraction windows       -> window() aggregations
+  * tumbling extraction windows               -> window() aggregations
 
 Each function takes a *streaming* DataFrame (spark.readStream...) and
 returns a transformed streaming DataFrame; callers pick the sink/trigger
@@ -40,16 +40,11 @@ def windowed_stats(
     ts_col: str = "period",
     value_col: str = "value",
     window_duration: str = "1 hour",
-    slide: str | None = None,
     watermark: str = "3 hours",
 ) -> DataFrame:
-    """Tumbling (or sliding) per-group window aggregates: the streaming
-    analog of the batch resample (operators/timeseries.resample)."""
-    win = (
-        F.window(ts_col, window_duration, slide)
-        if slide
-        else F.window(ts_col, window_duration)
-    )
+    """Tumbling per-group window aggregates: the streaming analog of the
+    batch resample (operators/timeseries.resample)."""
+    win = F.window(ts_col, window_duration)
     from electricity_forecast_pipeline_airflow_k8s_spark.functions.stats import (
         exact_mean,
         portable_round,
@@ -81,7 +76,6 @@ def incremental_ingest(
     root: str,
     group_col: str = "respondent",
     ts_col: str = "period",
-    watermark: str = "3 hours",
     checkpoint: str | None = None,
 ):
     """Streaming ingestion into the snapshot lake: watermark-deduped rows
@@ -96,7 +90,7 @@ def incremental_ingest(
         validate,
     )
 
-    deduped = dedup_late_data(stream, group_col, ts_col, watermark)
+    deduped = dedup_late_data(stream, group_col, ts_col)
 
     def land(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -116,13 +110,13 @@ def session_windows(
     group_col: str = "respondent",
     ts_col: str = "period",
     gap: str = "30 minutes",
-    watermark: str = "3 hours",
 ) -> DataFrame:
     """Native session windows: a session closes after ``gap`` inactivity --
     the streaming counterpart of the batch boundary-flag-cumsum
-    sessionization (querydefs/sessions.py)."""
+    sessionization (querydefs/sessions.py). Rows more than 3 hours late
+    are dropped."""
     return (
-        stream.withWatermark(ts_col, watermark)
+        stream.withWatermark(ts_col, "3 hours")
         .groupBy(F.col(group_col), F.session_window(ts_col, gap).alias("sw"))
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
@@ -139,14 +133,14 @@ def stream_quality_counts(
     group_col: str = "respondent",
     ts_col: str = "period",
     value_col: str = "value",
-    watermark: str = "3 hours",
     window_duration: str = "1 hour",
 ) -> DataFrame:
     """Per-window violation counters (nulls, negatives) -- the incremental
-    form of the batch validation suite's global checks."""
+    form of the batch validation suite's global checks. Rows more than 3
+    hours late are dropped."""
     v = F.col(value_col)
     return (
-        stream.withWatermark(ts_col, watermark)
+        stream.withWatermark(ts_col, "3 hours")
         .groupBy(F.col(group_col), F.window(ts_col, window_duration).alias("win"))
         .agg(
             F.count(F.lit(1)).alias("n_rows"),

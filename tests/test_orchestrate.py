@@ -225,9 +225,10 @@ def test_electricity_dag_retention_runs_once_in_cleanup(spark, sf_dir, tmp_path)
 
 
 def test_electricity_dag_failure_path(spark, sf_dir, tmp_path, monkeypatch):
-    """A failing prepare must mark train/register/cleanup/notify
-    upstream_failed while the quality summary (parallel branch) still
-    runs -- the Airflow failure semantics, not a crash."""
+    """A failing prepare must mark quality_summary/train/register/cleanup/
+    notify upstream_failed -- the quality summary reads prepare's
+    validation report, as the reference's summary task follows validate --
+    the Airflow failure semantics, not a crash."""
     root = str(tmp_path / "lake")
     tasks = electricity_dag(spark, sf_dir, root, run_ts="20240101_000000")
 
@@ -240,22 +241,22 @@ def test_electricity_dag_failure_path(spark, sf_dir, tmp_path, monkeypatch):
     ]
     report = run_dag(tasks)
     assert report.tasks["prepare"].state == "failed"
-    assert report.tasks["quality_summary"].state == "success"
-    for name in ("train", "register", "cleanup", "notify"):
+    for name in ("quality_summary", "train", "register", "cleanup", "notify"):
         assert report.tasks[name].state == "upstream_failed", name
 
 
 # The warm weekly DAG run's Spark jobs on the benchmark's readings. It was
 # 42 before validation became two actions, the fit was cut with reuse() and
-# the driver-built frames became local relations.
-DAG_JOB_BUDGET = 28
+# the driver-built frames became local relations, and 28 before the quality
+# summary reused the validation report instead of profiling the extract.
+DAG_JOB_BUDGET = 24
 
 
 def test_electricity_dag_job_budget(spark, tmp_path):
     """Jobs per run is the DAG's cost model (ROADMAP item 2): on the
     benchmark-sized readings (10 regions x 30 days, hourly) a warm second
     run into the same lake fires at most DAG_JOB_BUDGET jobs, its
-    quality_summary starts before prepare finishes, and its training
+    quality_summary starts before train finishes, and its training
     metrics equal the first run's."""
     import importlib.util
     import os
@@ -278,8 +279,8 @@ def test_electricity_dag_job_budget(spark, tmp_path):
         notify.append(report.results["notify"])
         reports.append(report)
     assert fired[1] <= DAG_JOB_BUDGET, fired
-    # the parallel branch overlaps prepare, as Airflow's executor runs it
-    prep, qual = reports[1].tasks["prepare"], reports[1].tasks["quality_summary"]
-    assert qual.start_s < prep.start_s + prep.seconds, reports[1].tasks
+    # the parallel branch overlaps train, as Airflow's executor runs it
+    train, qual = reports[1].tasks["train"], reports[1].tasks["quality_summary"]
+    assert qual.start_s < train.start_s + train.seconds, reports[1].tasks
     assert notify[1]["metrics"] == notify[0]["metrics"]
     assert [n["model_version"] for n in notify] == [1, 2]

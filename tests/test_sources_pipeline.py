@@ -212,8 +212,33 @@ def test_run_preparation_fails_on_bad_data(spark, readings, tmp_path):
         run_preparation(spark, bad, root, run_ts="20240101_000000")
 
 
+def test_prepare_job_keeps_snapshots_after_failed_validation(spark, readings, tmp_path):
+    """A run whose validation fails adds its raw and report snapshots and
+    prunes nothing: retention follows a successful preparation only."""
+    import os
+
+    from electricity_forecast_pipeline_airflow_k8s_spark.jobs import prepare_job
+
+    lake = tmp_path / "lake"
+    seeded = [f"2023010{d}_000000" for d in range(10)]
+    for prefix in ("raw", "processed", "reports"):
+        for ts in seeded:
+            os.makedirs(lake / prefix / f"run_ts={ts}")
+    src = str(tmp_path / "bad")
+    readings.withColumn(
+        "value", F.when(F.col("respondent") == "CAL", -5.0).otherwise(F.col("value"))
+    ).write.parquet(src)
+
+    out = prepare_job(spark, src, f"file://{lake}", run_ts="20240101_000000")
+    assert not out["is_valid"]
+    assert out["validated_path"] is None
+    for prefix, new in (("raw", 1), ("processed", 0), ("reports", 1)):
+        runs = sorted(d.split("=", 1)[1] for d in os.listdir(lake / prefix))
+        assert runs == seeded + ["20240101_000000"] * new, prefix
+
+
 def test_run_training_end_to_end(spark, readings):
-    res = run_training(spark, readings, lookback=24, horizon=6, top_region_only=True)
+    res = run_training(spark, readings, lookback=24, horizon=6)
     # top region by count: tie (400/400) -> lexicographic CAL
     fc = res.forecasts.collect()
     assert len(fc) == 6

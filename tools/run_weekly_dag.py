@@ -33,25 +33,17 @@ def main(
     sf_dir: str = "/root/testdata/sf0.1",
     out_dir: str | None = None,
 ) -> int:
-    from pyspark.sql import SparkSession
-
     from electricity_forecast_pipeline_airflow_k8s_spark.orchestrate import (
         electricity_dag,
         run_dag,
     )
+    from electricity_forecast_pipeline_airflow_k8s_spark.session import get_spark
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     out_dir = out_dir or os.path.join(repo, "docs", "weekly_run")
     os.makedirs(out_dir, exist_ok=True)
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .appName("weekly-dag")
-        .getOrCreate()
-    )
+    spark = get_spark(app_name="weekly-dag", master="local[8]", shuffle_partitions=8)
     with tempfile.TemporaryDirectory() as lake:
         tasks = electricity_dag(spark, sf_dir, lake, run_ts=RUN_TS)
         report = run_dag(tasks, ctx={"spark": spark})
