@@ -22,6 +22,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from electricity_forecast_pipeline_airflow_k8s_spark.queries import registry
 from electricity_forecast_pipeline_airflow_k8s_spark.session import (
+    _BASE_CONF,
     default_parallelism,
     get_spark,
 )
@@ -49,6 +50,15 @@ def time_lane(spark, build, sf_dir: str) -> tuple[float, float]:
     df.write.format("noop").mode("overwrite").save()
     t2 = time.perf_counter()
     return round(t1 - t0, 3), round(t2 - t1, 3)
+
+
+def codegen_counters(spark) -> tuple[int, float]:
+    """(classes compiled, seconds spent compiling them) by Spark's code
+    generator since the JVM started; a cache hit compiles nothing."""
+    jvm = spark.sparkContext._jvm
+    compiled = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+    compile_ns = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime()
+    return compiled, compile_ns / 1e9
 
 
 # Per-query budget at sf0.1 / local[32]: 1.5x the best recorded driver run
@@ -590,6 +600,9 @@ def run_meta(spark, sf_dir: str) -> dict:
         "cpus": default_parallelism(),
         "master": spark.sparkContext.master,
         "git_sha": _git_sha(),
+        "conf": {
+            k: spark.conf.get(k, None) for k in (*_BASE_CONF, "spark.sql.shuffle.partitions")
+        },
     }
 
 
@@ -625,14 +638,19 @@ def run_bench(spark, lanes: list[str], sf_dir: str, warm_dir: str, n_iter: int) 
     """Warm every lane once at warm_dir, time n_iter passes at sf_dir and
     return the ledger payload; each lane keeps the split of its best pass."""
     qs = registry()
-    # JIT/codegen warmup (untimed) so the timed passes measure steady-state
-    # plans, not first-run whole-stage-codegen compilation
+    # JIT/codegen warmup (untimed): every lane's generated classes are
+    # compiled here and stay cached (the session's codegen cache holds the
+    # whole registry's working set). The timed passes compile only the
+    # classes of plans chosen anew at sf_dir's size and of lanes whose
+    # generated code changes from run to run; the payload counts them as
+    # codegen_compiles.
     for name in lanes:
         time_lane(spark, qs[name].build, warm_dir)
 
     # best of n_iter passes: OS cache, JIT and machine-load noise dominate
     # single runs at this data size (SCALING.md "Bench methodology")
     best: dict[str, tuple[float, float]] = {}
+    compiled_before = codegen_counters(spark)[0]
     for _ in range(n_iter):
         for name in lanes:
             split = time_lane(spark, qs[name].build, sf_dir)
@@ -654,6 +672,7 @@ def run_bench(spark, lanes: list[str], sf_dir: str, warm_dir: str, n_iter: int) 
         "build_s_total": round(sum(b for b, _ in best.values()), 3),
         "exec_s_total": round(sum(e for _, e in best.values()), 3),
         "n_iter": n_iter,
+        "codegen_compiles": codegen_counters(spark)[0] - compiled_before,
         "over_budget": over_budget,
         **run_meta(spark, sf_dir),
     }

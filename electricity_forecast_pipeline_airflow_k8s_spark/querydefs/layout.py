@@ -119,6 +119,12 @@ def q_layout_zorder_locality(spark: SparkSession, sf_dir: str):
     )
 
     xcols, ycols = ["o_custkey", "o_orderkey"], ["o_orderdate", "o_orderkey"]
+    # Store the checkpoint before the threads start. Two concurrent jobs
+    # that both compute a lazy checkpoint can deadlock in Spark: a finished
+    # job's RDD.doCheckpoint holds RDDCheckpointData's global lock and waits
+    # for the RDD's lock, while the DAG scheduler, submitting the other
+    # job, holds the RDD's lock and waits for the global one.
+    base.count()
     with ThreadPoolExecutor(max_workers=2) as pool:
         fx = pool.submit(ntile_edges, base, xcols, k=64)
         fy = pool.submit(ntile_edges, base, ycols, k=64)
@@ -303,6 +309,7 @@ def q_layout_zonemap_pruning(spark: SparkSession, sf_dir: str):
         ntile_edges,
     )
 
+    orders.count()  # store the checkpoint first, as layout_zorder_locality does
     with ThreadPoolExecutor(max_workers=2) as pool:
         futs = {
             name: pool.submit(ntile_edges, orders, cols, k=_ZM_FILES)

@@ -22,6 +22,16 @@ from pyspark.sql.types import StructType
 #    keys x many rows per key is exactly the reference's data shape).
 #  - 128 MiB target partition bytes keeps scan partitions memory-friendly.
 #  - Arrow on: every pandas-UDF boundary is vectorized.
+#  - Generated-code cache sized to the engine's working set. Spark compiles
+#    each whole-stage pipeline and many expressions to a Java class (Janino)
+#    and caches it by source text, 100 classes by default. In a fresh JVM,
+#    one pass over the timed lanes at sf0.001 generates 5,337 distinct
+#    classes, the same pass at sf0.1 599 more, a weekly DAG run 60: with
+#    the default, every repeated query recompiles its classes and the JIT
+#    warms them again. The cache is an LRU kept in 4 segments of 1/4 of
+#    the maximum each, so 8192 leaves every segment ~1/3 above its share of
+#    the ~6,000. It cannot go stale: the key is the full generated source,
+#    so a hit returns the class compiled from exactly that code.
 _BASE_CONF: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
@@ -34,6 +44,7 @@ _BASE_CONF: dict[str, str] = {
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
     "spark.serializer": "org.apache.spark.serializer.KryoSerializer",
     "spark.ui.enabled": "false",
+    "spark.sql.codegen.cache.maxEntries": "8192",
 }
 
 

@@ -19,6 +19,7 @@ from electricity_forecast_pipeline_airflow_k8s_spark.queries import (
     queries as all_queries,
     registry,
 )
+from electricity_forecast_pipeline_airflow_k8s_spark.session import _BASE_CONF
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -232,14 +233,21 @@ def test_time_lane_counts_build_jobs_in_build_s(spark, sf_dir):
 
 def test_bench_payload_is_self_describing(spark, sf_dir):
     """The ledger payload pins its keys: per-lane build/exec splits of the
-    best pass beside the per-lane totals, both split sums, and the run's
-    provenance (cpus, master, sf, git sha)."""
+    best pass beside the per-lane totals, both split sums, the classes the
+    timed passes compiled (none: the warmup compiled them), and the run's
+    provenance (cpus, master, sf, git sha, the engine's session conf as
+    the session reads it back)."""
     lanes = ["val_summary", "rel_topk_orders"]
     payload = bench.run_bench(spark, lanes, sf_dir, sf_dir, n_iter=1)
     assert set(payload) == {
         "metric", "value", "unit", "queries", "splits", "build_s_total",
-        "exec_s_total", "n_iter", "over_budget",
-        "sf", "cpus", "master", "git_sha",
+        "exec_s_total", "n_iter", "codegen_compiles", "over_budget",
+        "sf", "cpus", "master", "git_sha", "conf",
+    }
+    assert payload["codegen_compiles"] == 0
+    assert payload["conf"] == {
+        **_BASE_CONF,
+        "spark.sql.shuffle.partitions": spark.conf.get("spark.sql.shuffle.partitions"),
     }
     assert list(payload["queries"]) == lanes
     for name in lanes:

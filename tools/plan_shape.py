@@ -57,7 +57,9 @@ def main() -> None:
         return
     os.makedirs(bench.ledger_dir(), exist_ok=True)
     path = os.path.join(bench.ledger_dir(), "plan_shape.json")
+    # the conf that shapes the plans is the session's at git_sha
     run = {**bench.run_meta(spark, args.sf), "spark_version": spark.version}
+    del run["conf"]
     # one line per lane, so a plan change reads as a one-line ledger diff
     rows = ",\n  ".join(f"{json.dumps(n)}: {json.dumps(s)}" for n, s in shapes.items())
     with open(path, "w") as fh:

@@ -6,8 +6,10 @@ Usage:
     python tools/profile_lane.py [--sf DIR] [--iters N] name...
 
 Prints one line per lane: ``name  best  build/exec split of the best run
-[all totals]``, so before/after claims in OPTIMIZATION_r*.md can be checked
-against real output. Plan shape and formatted plans: tools/plan_shape.py.
+[all totals]  [classes compiled]  [compile seconds]`` (the last two per
+timed run, from Spark's code generator), so before/after claims in
+OPTIMIZATION_r*.md can be checked against real output. Plan shape and
+formatted plans: tools/plan_shape.py.
 """
 
 from __future__ import annotations
@@ -18,7 +20,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import time_lane, warm_dir_for  # noqa: E402
+from bench import codegen_counters, time_lane, warm_dir_for  # noqa: E402
 from electricity_forecast_pipeline_airflow_k8s_spark.queries import queries as all_queries  # noqa: E402
 from electricity_forecast_pipeline_airflow_k8s_spark.session import get_spark  # noqa: E402
 
@@ -43,12 +45,19 @@ def main() -> None:
         spark.sparkContext.setJobDescription(f"profile:{name}")
         if not args.no_warm:
             time_lane(spark, qs[name], warm_dir)
-        runs = [time_lane(spark, qs[name], args.sf) for _ in range(args.iters)]
+        runs, compiles, compile_s = [], [], []
+        for _ in range(args.iters):
+            n0, s0 = codegen_counters(spark)
+            runs.append(time_lane(spark, qs[name], args.sf))
+            n1, s1 = codegen_counters(spark)
+            compiles.append(n1 - n0)
+            compile_s.append(round(s1 - s0, 3))
         build_s, exec_s = min(runs, key=sum)
         totals = [round(b + e, 3) for b, e in runs]
         print(
             f"{name}: best={build_s + exec_s:.3f} build={build_s:.3f} "
-            f"exec={exec_s:.3f} all={totals}",
+            f"exec={exec_s:.3f} all={totals} compiles={compiles} "
+            f"compile_s={compile_s}",
             flush=True,
         )
 
