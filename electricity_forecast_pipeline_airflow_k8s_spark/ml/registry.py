@@ -47,12 +47,16 @@ def _version_path(root: str, name: str, version: int) -> str:
     return f"{root.rstrip('/')}/registry/{name}/v={version}"
 
 
+def _catalog_exists(spark: SparkSession, root: str) -> bool:
+    """False before the first registration."""
+    fs, jpath, _ = _fs_and_path(spark, _catalog_path(root))
+    return fs.exists(jpath)
+
+
 def _read_catalog(spark: SparkSession, root: str) -> DataFrame:
-    path = _catalog_path(root)
-    fs, jpath, _ = _fs_and_path(spark, path)
-    if not fs.exists(jpath):  # before the first registration
+    if not _catalog_exists(spark, root):
         return local_frame(spark, [], CATALOG_SCHEMA)
-    return spark.read.schema(CATALOG_SCHEMA).parquet(path)
+    return spark.read.schema(CATALOG_SCHEMA).parquet(_catalog_path(root))
 
 
 def register_model(
@@ -67,13 +71,7 @@ def register_model(
 
     Mirrors `core/kubeflow_pipeline.py:341-356` (register + versioned
     description carrying the eval metrics)."""
-    cat = _read_catalog(spark, root)
-    prev = (
-        cat.filter(F.col("model_name") == name)
-        .agg(F.max("version").alias("v"))
-        .collect()[0]["v"]
-    )
-    version = int(prev or 0) + 1
+    version = (latest_version(spark, root, name) or 0) + 1
     path = _version_path(root, name, version)
     params.write.mode("errorifexists").parquet(path)
     row = [(name, version, None, json.dumps(metrics or {}, sort_keys=True), path)]
@@ -85,6 +83,11 @@ def register_model(
 
 
 def latest_version(spark: SparkSession, root: str, name: str) -> int | None:
+    """Newest registered version of ``name``, or None. Before the first
+    registration that takes no Spark job: an aggregate over the empty
+    catalog would still run one."""
+    if not _catalog_exists(spark, root):
+        return None
     v = (
         _read_catalog(spark, root)
         .filter(F.col("model_name") == name)

@@ -12,7 +12,8 @@ Reference flow: `core/airflow_dag.py:778`
 from __future__ import annotations
 
 import json
-from dataclasses import dataclass
+from dataclasses import dataclass, field
+from functools import cached_property
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -94,7 +95,41 @@ def run_preparation(
 class TrainingResult:
     params: DataFrame
     metrics: dict[str, Any]
-    forecasts: DataFrame
+    scaled: DataFrame = field(repr=False)
+    scale_params: DataFrame = field(repr=False)
+    lookback: int = field(repr=False)
+
+    @cached_property
+    def forecasts(self) -> DataFrame:
+        """(respondent, hour, predicted_load): the next ``horizon`` hours
+        after each group's last ``lookback`` scaled readings, in load
+        units. Built on first access, since building the frame costs
+        driver-side analysis and py4j calls that a caller which only
+        registers the model (the weekly DAG) does not need."""
+        lookback = self.lookback
+        # collect_list has no ordering guarantee after a shuffle; sort (ts, v)
+        # structs then project to keep the window chronological
+        latest = (
+            tail_window(self.scaled, n=lookback)
+            .groupBy("respondent")
+            .agg(
+                F.array_sort(
+                    F.collect_list(F.struct("period", "value_scaled"))
+                ).alias("pairs")
+            )
+            .select(
+                "respondent",
+                F.transform("pairs", lambda p: p.getField("value_scaled")).alias("x"),
+            )
+            .filter(F.size("x") >= lookback)
+            .select("respondent", F.slice("x", -lookback, lookback).alias("x"))
+        )
+        fc = forecast_rows(predict_per_group(latest, self.params))
+        return inverse_minmax(
+            fc.withColumnRenamed("predicted_load", "value_scaled"),
+            self.scale_params,
+            out_col="predicted_load",
+        ).select("respondent", "hour", "predicted_load")
 
 
 def run_training(
@@ -108,7 +143,8 @@ def run_training(
     smallest name) -> minmax scale (U3; the full-series fit replicates the
     reference's leakage, `core/kubeflow_pipeline.py:108-109`) ->
     chronological split (W4) -> windows (W3) -> per-group ridge fit/eval
-    (U4/U5) -> inverse-scaled forecast.
+    (U4/U5) -> inverse-scaled forecast, built when
+    ``TrainingResult.forecasts`` is first read.
 
     The fitted params frame is cut with ``reuse``, so the fit runs once per
     training run: the metrics collect, the forecasts and every later
@@ -152,27 +188,4 @@ def run_training(
         else {"n": 0, "rmse": None, "mape": None, "mae": None}
     )
 
-    # collect_list has no ordering guarantee after a shuffle; sort (ts, v)
-    # structs then project to keep the window chronological
-    latest = (
-        tail_window(scaled, n=lookback)
-        .groupBy("respondent")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("period", "value_scaled"))
-            ).alias("pairs")
-        )
-        .select(
-            "respondent",
-            F.transform("pairs", lambda p: p.getField("value_scaled")).alias("x"),
-        )
-        .filter(F.size("x") >= lookback)
-        .select("respondent", F.slice("x", -lookback, lookback).alias("x"))
-    )
-    fc = forecast_rows(predict_per_group(latest, model))
-    fc = inverse_minmax(
-        fc.withColumnRenamed("predicted_load", "value_scaled"),
-        params_mm,
-        out_col="predicted_load",
-    ).select("respondent", "hour", "predicted_load")
-    return TrainingResult(model, metrics, fc)
+    return TrainingResult(model, metrics, scaled, params_mm, lookback)
